@@ -10,9 +10,9 @@ Engine-native note: Parquet already applies columnar compression, so the
 zip codec is *semantic parity* (byte-compatible payloads a reference
 client could unzip), not a storage optimization — SURVEY.md §7 records
 that plain text + Parquet codec is the preferred storage path. These are
-the engine's only Python kernels besides the multimodal decode stub; both
-are Arrow-batched pandas_udfs (one Python call per ~10k rows, not per
-row) and sit outside every hot query path.
+Arrow-batched pandas_udfs (one Python call per ~10k rows, not per row)
+over :func:`zip_bytes`, the one zip kernel, which ``tile.tile_bytecap``
+also calls inside its per-record pass.
 """
 
 from __future__ import annotations
@@ -26,22 +26,25 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType, StringType
 
 
+def zip_bytes(text: str | None, name: str | None) -> bytes | None:
+    """Single-entry zip archive of ``text`` (UTF-8) under entry ``name``.
+
+    Deterministic: a fixed 1980 timestamp, so identical payloads produce
+    identical bytes (the reference uses wall-clock metadata). The one zip
+    kernel behind :func:`zip_payload` and ``tile.tile_bytecap``."""
+    if text is None:
+        return None
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        info = zipfile.ZipInfo(name or "payload.xml", date_time=(1980, 1, 1, 0, 0, 0))
+        info.compress_type = zipfile.ZIP_DEFLATED
+        zf.writestr(info, text.encode("utf-8"))
+    return buf.getvalue()
+
+
 @pandas_udf(BinaryType())
 def _zip_udf(payload: pd.Series, entry_name: pd.Series) -> pd.Series:
-    def _one(args):
-        text, name = args
-        if text is None:
-            return None
-        buf = io.BytesIO()
-        # deterministic archive: fixed timestamp so identical payloads
-        # produce identical bytes (the reference uses wall-clock metadata)
-        with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-            info = zipfile.ZipInfo(name or "payload.xml", date_time=(1980, 1, 1, 0, 0, 0))
-            info.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(info, text.encode("utf-8"))
-        return buf.getvalue()
-
-    return pd.Series(map(_one, zip(payload, entry_name)))
+    return pd.Series(map(zip_bytes, payload, entry_name))
 
 
 @pandas_udf(StringType())

@@ -126,16 +126,23 @@ class LogStore:
         self.user_col = user_col
 
     # --- writes ---------------------------------------------------------
+    def _write(self, df: DataFrame, mode: str) -> None:
+        # cluster by user first: one file per user directory per write,
+        # however the input's rows are spread over its partitions
+        df.repartition(self.user_col).write.mode(mode).partitionBy(
+            self.user_col
+        ).parquet(self.path)
+
     def create(self, df: DataFrame) -> None:
         """DDL + initial load (reference: createAzureDocumentDatabase,
         BigDataLogControl.cs:38-66). Partitioned overwrite."""
-        df.write.mode("overwrite").partitionBy(self.user_col).parquet(self.path)
+        self._write(df, "overwrite")
 
     def append(self, df: DataFrame) -> None:
         """Batch insert (reference: AddLogDocuments' sequential per-doc loop,
         BigDataLogControl.cs:83-112 — here one parallel partitioned job; no
         2 MB size policing needed, Parquet has no per-record limit)."""
-        df.write.mode("append").partitionBy(self.user_col).parquet(self.path)
+        self._write(df, "append")
 
     # --- reads ----------------------------------------------------------
     def df(self) -> DataFrame:

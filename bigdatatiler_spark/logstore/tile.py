@@ -5,6 +5,9 @@ Reference parity (SURVEY.md §2.9, §2.4):
   (/root/reference/LogChange.cs:99-175): payloads over a size threshold are
   split into fixed-size chunks emitted as linked rows (parent keeps the
   record id; children carry ``split_index``/``total_splits``/``parent_id``).
+- ``tile_bytecap`` → the same fan-out under the reference's compressed-size
+  cap (LogChange.cs:99-175 + 214-257): zip, estimate a chunk size, cut,
+  validate each chunk's archive and re-split the ones over the cap.
 - ``reassemble`` → CombineSplitLogs' ordered concatenation merge
   (/root/reference/LogChange.cs:312-342 + BigDataLogControl.cs:120-190):
   gather chunks by parent, sort by split_index, concatenate.
@@ -13,21 +16,33 @@ Spark-first design: chunking is ``sequence + transform + substring`` +
 ``posexplode`` (pure built-ins, whole-stage codegen — no UDF); reassembly
 is the order-sensitive-agg-inside-unordered-groupBy pattern:
 ``array_join(transform(array_sort(collect_list(struct(idx, chunk)))))``.
-One shuffle each way. The reference's compression-ratio chunk-size
-estimation (LogChange.cs:122-130) is environment-dependent; here chunk
-size is an explicit parameter for reproducibility (SURVEY.md §7 hard
-parts). Round-trip invariant: ``reassemble(tile(df)) == df`` — tested in
+The reference's compression-ratio chunk-size
+estimation (LogChange.cs:122-130) is environment-dependent; in ``tile``
+chunk size is an explicit parameter for reproducibility (SURVEY.md §7 hard
+parts). ``tile_bytecap`` keeps the estimate: its recursion needs nothing
+from any other record, so it runs per record inside one narrow
+Arrow-batched Python pass, with no shuffle and no round loop.
+Round-trip invariant: ``reassemble(tile(df)) == df`` — tested in
 tests/test_tiling.py across the unsplit/split boundary.
 
-At 100 TB: both operators are shuffle-once, key-partitioned on the record
-id — no driver-side loops, no collect; Parquet has no 2 MB record limit so
-tiling is a *semantic* operator (downstream batch sizing), not a storage
-workaround.
+At 100 TB: ``tile`` and ``tile_bytecap`` are narrow and ``reassemble`` is
+shuffle-once, key-partitioned on the record id — no per-round jobs, no
+collect; Parquet has no 2 MB record limit so tiling is a *semantic*
+operator (downstream batch sizing), not a storage workaround.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+import math
+
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 #: Reference default: 1.5 MB compressed-chunk cap (LogChange.cs:23-24).
 #: For text tiling the analog is a character budget per chunk.
@@ -39,7 +54,7 @@ EST_SAFETY = 0.7           # compression-ratio estimate safety (LogChange.cs:123
 FIRST_FLOOR = 50_000       # first-pass min chunk chars (LogChange.cs:127-130)
 RESPLIT_FLOOR = 10_000     # re-split min chunk chars (LogChange.cs:232-235)
 RESPLIT_MARGIN = 1.3       # shrink margin on observed overage (LogChange.cs:229)
-MAX_RESPLIT_ROUNDS = 8     # loop bound (the floor guarantees termination anyway)
+MAX_RESPLIT_ROUNDS = 8     # recursion depth bound (the floor guarantees termination anyway)
 
 
 def tile(
@@ -81,15 +96,39 @@ def tile(
     )
 
 
-def _chunked(payload: Column, cc: Column) -> Column:
-    """Array of ``cc``-char substrings covering ``payload`` (≥1 element)."""
-    n = F.greatest(F.ceil(F.length(payload) / cc).cast("int"), F.lit(1))
-    return F.when(n <= 1, F.array(payload)).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), n - 1),
-            lambda i: payload.substr(i * cc + F.lit(1), cc),
-        )
-    )
+def _cut(text: str, cc: int) -> list[str]:
+    """``cc``-char substrings covering ``text`` (≥1 element)."""
+    return [text[i : i + cc] for i in range(0, len(text), cc)] or [text]
+
+
+def _bytecap_leaves(
+    text: str | None,
+    name: str | None,
+    cap: int,
+    first_floor: int,
+    resplit_floor: int,
+    max_rounds: int,
+) -> list[tuple[str | None, bytes | None]]:
+    """(chunk, archive) leaves of one record, in text order: the
+    reference's zip → estimate → validate → re-split recursion
+    (LogChange.cs:99-175 + 214-257)."""
+    from .codec import zip_bytes
+
+    whole = zip_bytes(text, name)
+    if text is None or len(whole) <= cap:
+        return [(text, whole)]
+
+    def validate(chunk: str, cc: int, depth: int):
+        z = zip_bytes(chunk, name)
+        new_cc = max(math.floor(cc * cap / (len(z) * RESPLIT_MARGIN)), resplit_floor)
+        if len(z) > cap and new_cc < cc and depth < max_rounds:
+            for sub in _cut(chunk, new_cc):
+                yield from validate(sub, new_cc, depth + 1)
+        else:
+            yield chunk, z
+
+    cc = max(math.floor(cap * EST_SAFETY * len(text) / len(whole)), first_floor)
+    return [leaf for sub in _cut(text, cc) for leaf in validate(sub, cc, 1)]
 
 
 def tile_bytecap(
@@ -103,175 +142,96 @@ def tile_bytecap(
     max_rounds: int = MAX_RESPLIT_ROUNDS,
 ) -> DataFrame:
     """O26/O29: compressed-size-validated tiling — the reference's one
-    engine-specific physical policy (LogChange.cs:99-175 + 214-257),
-    re-expressed as a bounded distributed fixpoint:
+    engine-specific physical policy (LogChange.cs:99-175 + 214-257), run
+    per record in one narrow, Arrow-batched ``mapInArrow`` pass:
 
-    1. Zip the whole payload once; records whose archive fits the cap
-       emit unsplit (the short-circuit at LogChange.cs:110-118).
-    2. Oversized records estimate a chunk size from the *observed*
-       compression ratio × 0.7 safety, floor 50 000 chars
-       (LogChange.cs:122-130), and split by substring arithmetic.
-    3. Each chunk is zipped and VALIDATED: chunks over the cap shrink
-       their chunk size by the observed overage × 1.3 margin, floor
-       10 000 chars (LogChange.cs:214-257), and re-split — only the
-       offending chunks re-enter the loop, everything else is done.
-       A chunk already at the floor emits as-is (the reference's
-       recursion bottoms out the same way).
-    4. Surviving leaves renumber densely per record in text order.
+    1. Zip the whole payload; a record whose archive fits the cap emits
+       unsplit (the short-circuit at LogChange.cs:110-118).
+    2. An oversized record estimates a chunk size from the *observed*
+       compression ratio × 0.7 safety, floor ``first_floor`` chars
+       (LogChange.cs:122-130), and cuts the text into chunks of that size.
+    3. Each chunk is zipped and VALIDATED: a chunk over the cap shrinks
+       its chunk size by the observed overage × 1.3 margin, floor
+       ``resplit_floor`` chars (LogChange.cs:214-257), and is re-cut in
+       place. A chunk emits as-is, archive over the cap or not, once the
+       shrunk size would not be smaller (it is at the floor, as where the
+       reference's recursion bottoms out) or once it is ``max_rounds``
+       validations deep (the recursion depth bound).
 
-    Text order under re-splitting is tracked as a path vector ``idx``
-    (array<int>): a re-split chunk's children append their sub-position,
-    and lexicographic array order = DFS order = original text order, so
-    the final ``row_number() over (partition by id order by idx)`` is
-    the reference's SplitIndex. Round-trip invariant
-    ``reassemble(tile_bytecap(x)) == x`` holds by construction and is
-    property-tested.
+    Leaves come out in text order, so ``split_index``, ``total_splits``
+    and ``parent_id`` are set by the pass itself, and the round-trip
+    invariant ``reassemble(tile_bytecap(x)) == x`` holds by construction
+    (property-tested). Precondition: ``id_col`` is unique. Records that
+    share an id each get their own ``split_index`` run, so a reassembly
+    keyed on the id would mix them in no defined order. The registry
+    query guarantees uniqueness with the
+    ``operators.tiling._dedupe_conflicting_ids`` arbiter.
 
-    Scale: per round the work is one Arrow-batched zip pass over the
-    *still-oversized residue only* (shrinking geometrically), no shuffle
-    until the final per-record renumber (one exchange); the loop is
-    driver-controlled but bounded and each round's decision is a
-    1-row isEmpty, never a data collect. Output: ``id_col``,
-    ``keep_cols``, ``split_index``, ``total_splits``, ``parent_id``,
-    ``chunk``, ``zipped`` (the validated archive), ``zip_bytes``.
+    Scale: no shuffle, no round loop and no job at call time; the only
+    work is the per-record zip recursion, which needs nothing from any
+    other record. Output: ``id_col``, ``keep_cols``, ``split_index``,
+    ``total_splits``, ``parent_id``, ``chunk``, ``zipped`` (the validated
+    archive), ``zip_bytes``.
     """
-    from .codec import zip_payload
-
-    cap = F.lit(max_zip_bytes)
-    entry = F.concat(F.col(id_col).cast("string"), F.lit(".xml"))
-    keep = [F.col(c) for c in keep_cols]
-
-    # Split-normalized + lineage-cut since r9. Two measured pathologies
-    # at bench SF: (1) the upstream conflict-arbiter groupBy's tiny
-    # shuffle output gets AQE-coalesced to ONE partition, serializing
-    # every zip round onto one core (5.1 s for a single whole-zip pass,
-    # 0.2 s split-normalized — the round-3 aHash lesson again); (2) a
-    # persist()-only frame re-enters the STATIC plan of every downstream
-    # branch (fits + each round's done part), so any upstream exchange
-    # multiplies ~30× in the audited node count. localCheckpoint (the
-    # graph-ops lineage-cut pattern) materializes the zipped frame once
-    # and truncates the plan, fixing both: each branch reads the RDD
-    # directly. On a real multi-file corpus the repartition is a no-op
-    # decision; the checkpoint is executor-local, same as graph.py.
     from ..operators._util import ensure_parallelism
 
-    whole = (
-        ensure_parallelism(
-            df.select(F.col(id_col), *keep, F.col(payload_col).alias("chunk"))
-        )
-        .withColumn("zipped", zip_payload(F.col("chunk"), entry))
-        .withColumn("zip_bytes", F.length("zipped"))
-        # eager=False: the plan cut applies immediately; the archive blocks
-        # materialize inside round 1's residue count instead of a separate
-        # up-front job (r12: one fewer job per fixpoint pass)
-        .localCheckpoint(eager=False)
-    )
-    # null payloads ride the unsplit path (single row, null chunk/zip)
-    fits = whole.where(
-        (F.col("zip_bytes") <= cap) | F.col("chunk").isNull()
-    ).withColumn("idx", F.array(F.lit(0)))
-
-    big = whole.where(F.col("zip_bytes") > cap)
-    # chars/byte ratio from the whole-record archive, ×0.7 safety
-    est_cc = F.greatest(
-        F.floor(
-            F.lit(max_zip_bytes * EST_SAFETY)
-            * F.length("chunk")
-            / F.col("zip_bytes")
-        ),
-        F.lit(first_floor),
-    )
-    state = (
-        big.withColumn("cc", est_cc)
-        .select(
+    n_keys = 1 + len(keep_cols)
+    src = ensure_parallelism(
+        df.select(
             F.col(id_col),
-            *keep,
-            "cc",
-            F.posexplode(_chunked(F.col("chunk"), F.col("cc"))).alias(
-                "pos", "chunk"
-            ),
-        )
-        .select(
-            F.col(id_col), *keep, F.array("pos").alias("idx"), "chunk", "cc"
+            *keep_cols,
+            F.col(payload_col).alias("chunk"),
+            # entry name as Spark casts the id, whatever its type
+            F.concat(F.col(id_col).cast("string"), F.lit(".xml")).alias("entry"),
         )
     )
+    schema = StructType(
+        src.schema.fields[:n_keys]
+        + [
+            StructField("split_index", IntegerType(), False),
+            StructField("total_splits", IntegerType(), False),
+            StructField("parent_id", src.schema.fields[0].dataType),
+            StructField("chunk", StringType()),
+            StructField("zipped", BinaryType()),
+            StructField("zip_bytes", IntegerType()),
+        ]
+    )
 
-    done = [fits.select(F.col(id_col), *keep, "idx", "chunk", "zipped", "zip_bytes")]
-    for _ in range(max_rounds):
-        # localCheckpoint, not persist: same lineage-cut rationale as
-        # `whole` — each round's archives are zipped exactly once and no
-        # downstream branch replays the round's plan
-        z = (
-            state.withColumn("zipped", zip_payload(F.col("chunk"), entry))
-            .withColumn("zip_bytes", F.length("zipped"))
-            .localCheckpoint(eager=False)
-        )
-        new_cc = F.greatest(
-            F.floor(
-                F.col("cc") * cap / (F.col("zip_bytes") * F.lit(RESPLIT_MARGIN))
-            ),
-            F.lit(resplit_floor),
-        )
-        needs_resplit = (F.col("zip_bytes") > cap) & (new_cc < F.col("cc"))
-        done.append(
-            z.where(~needs_resplit).select(
-                F.col(id_col), *keep, "idx", "chunk", "zipped", "zip_bytes"
+    def tile_batches(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            rows, split_index, total, chunks, zips = [], [], [], [], []
+            texts = batch.column(n_keys).to_pylist()
+            names = batch.column(n_keys + 1).to_pylist()
+            for row, (text, name) in enumerate(zip(texts, names)):
+                leaves = _bytecap_leaves(
+                    text, name, max_zip_bytes, first_floor, resplit_floor, max_rounds
+                )
+                for k, (chunk, z) in enumerate(leaves):
+                    rows.append(row)
+                    split_index.append(k)
+                    total.append(len(leaves))
+                    chunks.append(chunk)
+                    zips.append(z)
+            take = pa.array(rows, pa.int64())
+            parent_rows = pa.array(
+                [r if t > 1 else None for r, t in zip(rows, total)], pa.int64()
             )
-        )
-        bad = z.where(needs_resplit)
-        # count() over the checkpointed z doubles as its materializing job
-        # (the lazy checkpoint's blocks persist during this scan).
-        # Still a 1-long driver result, never a data collect.
-        if bad.count() == 0:
-            break
-        # stage the shrunk size under a fresh name: aliasing it back to
-        # "cc" in the same select that reads old "cc" inside the explode
-        # lambda trips Spark's lateral-column-alias resolution
-        resplit = bad.select(
-            F.col(id_col), *keep, "idx", new_cc.alias("cc_next"), "chunk"
-        )
-        state = resplit.select(
-            F.col(id_col),
-            *keep,
-            "idx",
-            F.col("cc_next").alias("cc"),
-            F.posexplode(_chunked(F.col("chunk"), F.col("cc_next"))).alias(
-                "pos", "sub"
-            ),
-        ).select(
-            F.col(id_col),
-            *keep,
-            F.concat("idx", F.array("pos")).alias("idx"),
-            F.col("sub").alias("chunk"),
-            "cc",
-        )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(j).take(take) for j in range(n_keys)]
+                + [
+                    pa.array(split_index, pa.int32()),
+                    pa.array(total, pa.int32()),
+                    batch.column(0).take(parent_rows),
+                    pa.array(chunks, pa.string()),
+                    pa.array(zips, pa.binary()),
+                    pa.array([None if z is None else len(z) for z in zips], pa.int32()),
+                ],
+                names=schema.fieldNames(),
+            )
 
-    leaves = done[0]
-    for part in done[1:]:
-        leaves = leaves.unionByName(part)
-    wp = Window.partitionBy(id_col)
-    return (
-        leaves.withColumn(
-            "split_index", F.row_number().over(wp.orderBy("idx")) - 1
-        )
-        .withColumn("total_splits", F.count("*").over(wp).cast("int"))
-        .withColumn(
-            "parent_id",
-            F.when(F.col("total_splits") > 1, F.col(id_col)).otherwise(
-                F.lit(None)
-            ),
-        )
-        .select(
-            F.col(id_col),
-            *keep,
-            "split_index",
-            "total_splits",
-            "parent_id",
-            "chunk",
-            "zipped",
-            "zip_bytes",
-        )
-    )
+    return src.mapInArrow(tile_batches, schema)
 
 
 def reassemble(
@@ -291,8 +251,8 @@ def reassemble(
     carries the record id in ``id_col`` (``tile``/``tile_bytecap`` output,
     where ``parent_id`` is id-or-null by construction), group on ``id_col``
     directly — value-identical to the coalesce key, but Catalyst can then
-    PROVE the grouping matches the upstream window partitioning and skip
-    the second exchange. ``extra_aggs`` folds additional per-record
+    PROVE the grouping matches an upstream hash partitioning on the id and
+    skip the exchange. ``extra_aggs`` folds additional per-record
     aggregates (e.g. ``max(zip_bytes)`` for cap validation) into the same
     groupBy instead of a second aggregation pass + join over the chunk
     frame."""

@@ -32,13 +32,14 @@ _DEDUP_IDS_SQL = """
 
 
 def _dedupe_conflicting_ids(docs: DataFrame) -> DataFrame:
-    # One payload-bearing groupBy. The payload-free alternative (id-only
-    # count → broadcast dup-id list → anti-join uniques through, arbiter
-    # only conflicts) measures IDENTICAL wall time at sf0.1 (11.7 s vs
-    # 12.0 s cold) while tripling the audited plan-node count via lineage
-    # replay of its join DAG across the bytecap fixpoint's branches — at
-    # true 100 TB ingest the conflict arbiter belongs in the write path
-    # once, not ahead of every query, so the compact form is kept here.
+    # One payload-bearing groupBy. It is also what makes the record id
+    # unique, the precondition of tile_bytecap and of every reassembly
+    # keyed on the id. The payload-free alternative (id-only count →
+    # broadcast dup-id list → anti-join uniques through, arbiter only
+    # conflicts) measured IDENTICAL wall time at sf0.1 (11.7 s vs 12.0 s
+    # cold) with a larger plan — at true 100 TB ingest the conflict
+    # arbiter belongs in the write path once, not ahead of every query, so
+    # the compact form is kept here.
     return (
         docs.where(F.col("text").isNotNull())
         .groupBy("doc_id")
@@ -134,14 +135,14 @@ def doc_tile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def doc_tile_bytecap_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O26: the compressed-size-validated re-chunk fixpoint
+    """O26: the compressed-size-validated re-split recursion
     (LogChange.cs:214-257) end-to-end — tile under a hard zip-byte cap,
     reassemble, and emit md5 of the reconstruction plus the cap
     invariant. The oracle's md5 is computed from the ORIGINAL text, so a
     single lost/duplicated/reordered chunk anywhere in the estimate →
-    validate → re-split loop breaks the hash compare; within_cap is the
-    engine-side guarantee (every emitted archive ≤ cap — the floors are
-    scaled so forcing can't occur on this corpus) checked against the
+    validate → re-split recursion breaks the hash compare; within_cap is
+    the engine-side guarantee (every emitted archive ≤ cap — the floors
+    are scaled so forcing can't occur on this corpus) checked against the
     oracle's constant truth."""
     # NULL body -> no tiles (fuzz 6); conflicting ids arbitered (fuzz 9)
     docs = _dedupe_conflicting_ids(table(spark, sf_dir, "documents"))
@@ -154,12 +155,9 @@ def doc_tile_bytecap_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         resplit_floor=BYTECAP_RESPLIT_FLOOR,
     )
     # One aggregation pass (r12): reassembly keyed on doc_id directly
-    # (every tile_bytecap leaf carries it; parent_id is id-or-null), so
-    # the groupBy reuses the renumber window's hash partitioning — no
-    # second exchange — and max(zip_bytes) rides the same aggregate
-    # instead of a separate caps pass + join that replayed the whole
-    # union+window subtree a second time. Plan: 2× (union+window) +
-    # 2 aggregates + 1 join → 1× union+window + 1 aggregate.
+    # (every tile_bytecap leaf carries it; parent_id is id-or-null), and
+    # max(zip_bytes) rides the same aggregate instead of a separate caps
+    # pass + join over the chunk frame.
     merged = reassemble(
         tiled,
         id_col="doc_id",

@@ -83,3 +83,35 @@ def test_tile_zip_reassemble_roundtrip(spark, docs):
     merged = {r["record_id"]: r["payload"] for r in reassemble(unzipped, id_col="rec_id").collect()}
     want = {r["rec_id"]: r["xml"] for r in src.collect()}
     assert merged == want
+
+
+def test_tile_bytecap_archives_are_zip_payload(spark):
+    """tile_bytecap and zip_payload share one zip kernel: every emitted
+    archive is byte-for-byte ``zip_payload(chunk, id || '.xml')`` and
+    unzips back to its chunk, on the unsplit, split, re-split and null
+    paths alike."""
+    import hashlib
+
+    from bigdatatiler_spark.logstore.tile import tile_bytecap
+
+    noise = "".join(hashlib.sha256(str(i).encode()).hexdigest() for i in range(60))
+    df = spark.createDataFrame(
+        [(1, "<log>alpha</log>"), (2, noise), (3, "ab" * 2000 + noise[:1500]), (4, None)],
+        "rec_id bigint, xml string",
+    )
+    tiled = tile_bytecap(
+        df, "xml", "rec_id", max_zip_bytes=200, first_floor=40, resplit_floor=8
+    )
+    entry = F.concat(F.col("rec_id").cast("string"), F.lit(".xml"))
+    rows = tiled.select(
+        "rec_id",
+        "chunk",
+        "zipped",
+        zip_payload(F.col("chunk"), entry).alias("want"),
+        unzip_payload(F.col("zipped")).alias("back"),
+    ).collect()
+    assert {r["rec_id"] for r in rows} == {1, 2, 3, 4}
+    assert len(rows) > 4  # the split paths ran
+    for r in rows:
+        assert r["zipped"] == r["want"]
+        assert r["back"] == r["chunk"]

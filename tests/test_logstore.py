@@ -69,6 +69,51 @@ def test_logstore_write_read(spark, events_df, tmp_path):
     assert store.df().count() == 6
 
 
+def _files_per_user(root) -> dict[str, int]:
+    return {
+        d.name: len(list(d.glob("*.parquet"))) for d in root.glob("user_id=*")
+    }
+
+
+def test_logstore_one_file_per_user_per_write(spark, tmp_path):
+    """create/append cluster rows by user before the partitioned write, so
+    each write adds ONE file per user directory it touches, even when a
+    user's rows arrive spread over many input partitions."""
+    rows = [(i, _ts("2024-01-01 10:00:00"), f"u{i % 3}", "click") for i in range(60)]
+    df = spark.createDataFrame(rows, ["event_id", "ts", "user_id", "event_type"])
+    store = LogStore(spark, str(tmp_path / "layout"))
+    store.create(df.repartition(6))
+    assert _files_per_user(tmp_path / "layout") == {
+        "user_id=u0": 1, "user_id=u1": 1, "user_id=u2": 1,
+    }
+    store.append(df.where(F.col("user_id") != "u2").repartition(6))
+    assert _files_per_user(tmp_path / "layout") == {
+        "user_id=u0": 2, "user_id=u1": 2, "user_id=u2": 1,
+    }
+    assert store.df().count() == 100
+
+
+def test_tile_bytecap_is_lazy(spark, tmp_path):
+    """tile_bytecap over a parquet scan builds a plan only: no Spark job
+    starts until an action runs it."""
+    from bigdatatiler_spark.logstore.tile import tile_bytecap
+
+    path = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i, "x" * (i * 500)) for i in range(20)], "id bigint, payload string"
+    ).write.parquet(path)
+    src = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("tile-bytecap-lazy", "tile_bytecap call")
+    try:
+        tiled = tile_bytecap(src, "payload", "id", max_zip_bytes=200)
+        assert sc.statusTracker().getJobIdsForGroup("tile-bytecap-lazy") == []
+        assert tiled.count() >= 20
+        assert sc.statusTracker().getJobIdsForGroup("tile-bytecap-lazy")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_cursor_drain_is_disjoint_ordered_exhaustive(spark, events_df, tmp_path):
     """O6: the keyset cursor must drain the store in (ts DESC, id DESC)
     order with disjoint pages covering every row — the reference's

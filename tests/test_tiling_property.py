@@ -9,7 +9,7 @@ One Spark job per hypothesis example is too slow, so each example is a
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from bigdatatiler_spark.logstore.tile import reassemble, tile
@@ -42,11 +42,12 @@ def test_roundtrip_property(spark, payloads, chunk):
     assert got == dict(enumerate(payloads))
 
 
-# O26 byte-cap fixpoint: payloads engineered to straddle the compressed
+# O26 byte-cap tiling: payloads engineered to straddle the compressed
 # cap — highly compressible runs (whole-record zip fits far under cap),
 # borderline text, and incompressible pseudo-random text whose first-pass
-# ratio estimate overshoots so the validate → shrink → re-split loop must
-# actually engage (LogChange.cs:214-257's recursion paths).
+# ratio estimate overshoots so the validate → shrink → re-split recursion
+# must actually engage (LogChange.cs:214-257), under a depth bound of 1, 2
+# or the default 8 validations.
 
 
 def _pseudo_random_text(seed: int, n: int) -> str:
@@ -60,6 +61,17 @@ def _pseudo_random_text(seed: int, n: int) -> str:
     return "".join(out)[:n]
 
 
+def _spans(tiled):
+    """{(rec_id, char offset, chunk): zip_bytes} of a tile_bytecap frame."""
+    out, rec, start = {}, None, 0
+    for r in sorted(tiled.select("rec_id", "split_index", "chunk", "zip_bytes").collect()):
+        if r["rec_id"] != rec:
+            rec, start = r["rec_id"], 0
+        out[(rec, start, r["chunk"])] = r["zip_bytes"]
+        start += len(r["chunk"])
+    return out
+
+
 @settings(
     max_examples=8,
     deadline=None,
@@ -69,9 +81,12 @@ def _pseudo_random_text(seed: int, n: int) -> str:
     sizes=st.lists(st.integers(min_value=0, max_value=4000), min_size=1, max_size=6),
     cap=st.integers(min_value=180, max_value=500),
     compressible=st.booleans(),
+    max_rounds=st.sampled_from([1, 2, 8]),
 )
-def test_bytecap_roundtrip_and_cap_property(spark, sizes, cap, compressible):
-    from bigdatatiler_spark.logstore.tile import tile_bytecap
+# a depth bound that stops re-splitting must still emit every chunk
+@example(sizes=[3000, 4000], cap=180, compressible=False, max_rounds=1)
+def test_bytecap_roundtrip_and_cap_property(spark, sizes, cap, compressible, max_rounds):
+    from bigdatatiler_spark.logstore.tile import MAX_RESPLIT_ROUNDS, tile_bytecap
     from pyspark.sql import functions as F
 
     payloads = {
@@ -79,9 +94,14 @@ def test_bytecap_roundtrip_and_cap_property(spark, sizes, cap, compressible):
         for i, n in enumerate(sizes)
     }
     df = spark.createDataFrame(list(payloads.items()), ["rec_id", "payload"])
-    tiled = tile_bytecap(
-        df, "payload", "rec_id", max_zip_bytes=cap, first_floor=40, resplit_floor=8
-    ).persist()
+
+    def tiles(rounds):
+        return tile_bytecap(
+            df, "payload", "rec_id", max_zip_bytes=cap, first_floor=40,
+            resplit_floor=8, max_rounds=rounds,
+        )
+
+    tiled = tiles(max_rounds).persist()
 
     # 1. round-trip invariant (the reference's LogChange.cs:95-98 contract)
     got = {
@@ -90,13 +110,15 @@ def test_bytecap_roundtrip_and_cap_property(spark, sizes, cap, compressible):
     }
     assert got == payloads
 
-    # 2. byte-cap guarantee: every multi-chunk archive obeys the cap
-    #    (single-chunk rows at the floor may legitimately exceed it —
-    #    the reference bottoms out its recursion the same way)
-    over = tiled.where(
-        (F.col("zip_bytes") > cap) & (F.length("chunk") > 8)
-    ).count()
-    assert over == 0, f"{over} shrinkable chunks exceed the cap"
+    # 2. byte-cap guarantee: every shrinkable archive obeys the cap.
+    #    Chunks at the floor may exceed it (the reference bottoms out its
+    #    recursion the same way), and so may chunks the depth bound
+    #    stopped: those are exactly the ones the default bound splits
+    #    further, so they are not leaves of its output.
+    over = {k for k, z in _spans(tiled).items() if z > cap and len(k[2]) > 8}
+    if max_rounds < MAX_RESPLIT_ROUNDS:
+        over &= _spans(tiles(MAX_RESPLIT_ROUNDS)).keys()
+    assert not over, f"{len(over)} shrinkable chunks exceed the cap"
 
     # 3. dense 0..n-1 split indices per record
     for r in (
