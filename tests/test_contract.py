@@ -37,18 +37,13 @@ def test_registry_consistency(spark):
 
 
 def test_driver_window_covers_every_family():
-    """The driver cross-checks only the first ~50 entries of queries()
-    (round-1 evidence). Assert the curated order puts at least one query
-    from every operator module inside that window, and that every
-    _WINDOW_PRIORITY name actually exists (catches typos/renames)."""
-    from bigdatatiler_spark import registry
+    """The driver cross-checks only the first 50 entries of queries()
+    (round-1 evidence). Assert the derived order puts at least one query
+    from every operator module inside that window."""
+    from bigdatatiler_spark.registry import load_all
 
-    specs = registry.load_all()
-    names = list(specs)
-    missing = [n for n in registry._WINDOW_PRIORITY if n not in specs]
-    assert not missing, f"_WINDOW_PRIORITY names not registered: {missing}"
-    assert len(registry._WINDOW_PRIORITY) <= 50, "priority list overflows window"
-    window = set(names[:50])
+    specs = load_all()
+    window = set(list(specs)[:50])
     families = {spec.fn.__module__ for spec in specs.values()}
     uncovered = [
         fam
@@ -61,94 +56,71 @@ def test_driver_window_covers_every_family():
 def test_window_rotates_fresh_names():
     """Certification-breadth gate (r6 verdict item 2): while any registered
     query has NEVER held a driver-window slot in any round's
-    CORRECTNESS_r*.json, the curated window must contain at least one such
-    never-certified name — the window may not stop rotating. Recomputed
-    straight from the driver's files (no stale-artifact risk); the committed
-    plans/window_ledger.json is the human-readable artifact of the same
-    derivation (tools/window_ledger.py --write)."""
-    import sys
+    CORRECTNESS_r*.json, the window must contain at least one such
+    never-certified name — the window may not stop rotating."""
+    from bigdatatiler_spark.driver_window import build_ledger, correctness_files
+    from bigdatatiler_spark.registry import load_all
 
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from window_ledger import build_ledger
-
-    ledger = build_ledger(REPO)
-    if not ledger["generated_from"]:
+    files = correctness_files()
+    if not files:
         return  # round 1: no driver files yet, nothing to rotate against
-    if ledger["never_certified"]:
-        assert ledger["current_window_fresh"], (
-            f"{len(ledger['never_certified'])} registered queries have never "
-            "held a driver-window slot, but the current window rotates none "
-            "of them in — update registry._WINDOW_PRIORITY"
+    specs = load_all()
+    never = build_ledger(specs, files)["never_certified"]
+    if never:
+        assert set(never) & set(list(specs)[:50]), (
+            f"{len(never)} registered queries have never held a "
+            "driver-window slot, but the window rotates none of them in"
         )
 
 
-def test_window_matches_staleness_policy():
-    """Re-certification cadence gate (r8 verdict item 6): the curated
-    window must be EXACTLY tools/window_ledger.py::next_window()'s output —
-    never-certified names first-class, then one stalest-certified sentinel
-    per uncovered module, then oldest-certified fill. Like
-    test_window_rotates_fresh_names, this is red at each round start (the
-    driver's committed CORRECTNESS_r{N}.json changes the derivation) until
-    the builder's first rotation commit, which is the intended cadence."""
-    import sys
-
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from window_ledger import build_ledger, next_window
+def test_load_all_raises_on_missing_module(monkeypatch):
+    """A query module that fails to import must fail loudly, not silently
+    drop its whole family from queries()."""
+    import pytest
 
     from bigdatatiler_spark import registry
 
-    if not build_ledger(REPO)["generated_from"]:
-        return  # round 1: no driver files yet, no staleness to rotate by
-    assert list(registry._WINDOW_PRIORITY) == next_window(REPO), (
-        "window diverges from the staleness policy — regenerate "
-        "registry._WINDOW_PRIORITY from `python tools/window_ledger.py "
-        "--next-window`"
+    monkeypatch.setattr(
+        registry,
+        "_QUERY_MODULES",
+        registry._QUERY_MODULES + ("bigdatatiler_spark.operators.no_such_module",),
     )
+    with pytest.raises(ModuleNotFoundError):
+        registry.load_all()
 
 
-def test_window_defer_only_new_names():
-    """_WINDOW_DEFER exists so an operator registered MID-round (after
-    the window froze and was verified) queues for the NEXT rotation
-    instead of evicting a name this round must certify. Abuse guard:
-    only names that have NEVER held a driver slot may be deferred —
-    deferring a rotation-due name would stall its re-certification."""
-    import sys
-
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from window_ledger import build_ledger
-
-    from bigdatatiler_spark import registry
-
-    deferred = set(getattr(registry, "_WINDOW_DEFER", ()))
-    if not deferred:
-        return
-    specs = registry.load_all()
-    unknown = deferred - set(specs)
-    assert not unknown, f"_WINDOW_DEFER names not registered: {unknown}"
-    held = set(build_ledger(REPO)["ever_held_slot"])
-    stale = deferred & held
-    assert not stale, (
-        f"_WINDOW_DEFER holds already-certified names {stale} — defer is "
-        "only for mid-round NEW registrations; remove them at rotation"
-    )
-
-
-def test_window_ledger_artifact_current():
-    """The committed ledger must match a fresh derivation (regenerate with
-    `python tools/window_ledger.py --write` after each driver round)."""
+def test_window_stays_valid_after_new_round(tmp_path):
+    """A committed driver round rotates the window with no code edit: with
+    a new round that marks the current window all green, the derived
+    window moves on and keeps its invariants."""
     import json
-    import sys
+    import re
+    import shutil
 
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from window_ledger import build_ledger
+    from bigdatatiler_spark.driver_window import correctness_files, next_window
+    from bigdatatiler_spark.registry import load_all
 
-    ledger_path = os.path.join(
-        REPO, "bigdatatiler_spark", "plans", "window_ledger.json"
+    specs = load_all()
+    window = list(specs)[:50]
+    files = [shutil.copy(p, tmp_path) for p in correctness_files()]
+    assert next_window(specs, files) == window
+
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "err": None}
+    last_round = max(
+        (int(re.search(r"r(\d+)", os.path.basename(p)).group(1)) for p in files),
+        default=0,
     )
-    committed = json.load(open(ledger_path))
-    assert committed == build_ledger(REPO), (
-        "stale plans/window_ledger.json — run tools/window_ledger.py --write"
-    )
+    new_round = tmp_path / f"CORRECTNESS_r{last_round + 1:02d}.json"
+    new_round.write_text(json.dumps({n: green for n in window}))
+    rotated = next_window(specs, files + [str(new_round)])
+
+    assert rotated != window
+    assert len(rotated) == len(set(rotated)) == 50
+    assert {specs[n].fn.__module__ for n in rotated} == {
+        s.fn.__module__ for s in specs.values()
+    }
+    assert not {n for n in rotated if specs[n].oracle is None}
 
 
 def test_no_bare_epoch_ms_in_oracles():
@@ -219,21 +191,17 @@ def test_no_oracle_names_stay_out_of_window():
     (sketch_hll_native r9: ``err: no_oracle``). Such names stay
     registered and locally rows-only-checked, but may never occupy a
     window slot, never count as rotation backlog, and never re-enter via
-    sentinel/fill (policy lives in tools/window_ledger.py)."""
-    import sys
+    sentinel/fill (policy lives in bigdatatiler_spark/driver_window.py)."""
+    from bigdatatiler_spark.driver_window import build_ledger, correctness_files
+    from bigdatatiler_spark.registry import load_all
 
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from window_ledger import build_ledger
-
-    from bigdatatiler_spark import registry
-
-    specs = registry.load_all()
+    specs = load_all()
     no_oracle = {n for n, s in specs.items() if s.oracle is None}
     # the set may be EMPTY (sketch_hll_native gained an exact-bound
     # oracle in r11); the policy still gates any future oracle-less name
-    leaked = no_oracle & set(registry._WINDOW_PRIORITY)
+    leaked = no_oracle & set(list(specs)[:50])
     assert not leaked, f"oracle-less names hold window slots: {leaked}"
-    ledger = build_ledger(REPO)
+    ledger = build_ledger(specs, correctness_files())
     assert sorted(no_oracle) == ledger["no_oracle_excluded"]
     assert not no_oracle & set(ledger["never_certified"])
 
