@@ -17,7 +17,10 @@ Reference parity map (see SURVEY.md §2 for the full inventory):
 
 Scale design: every method returns a lazy DataFrame; filters land in the
 parquet scan (PushedFilters), the partition column prunes directories, and
-ORDER BY+LIMIT compiles to TakeOrderedAndProject (no global sort).
+ORDER BY+LIMIT compiles to TakeOrderedAndProject (no global sort). A
+``LogStore`` lists the store and infers its schema once per write: every
+read between two writes starts from the same relation, so a point read,
+scan or page is one Spark job, like the reference's one round trip each.
 """
 
 from __future__ import annotations
@@ -118,18 +121,31 @@ def keyset_page(
 class LogStore:
     """Partitioned append-only log table (Parquet), keyed like the reference
     container: hash partition on user — here a directory-partition column,
-    giving partition pruning on every user-scoped query."""
+    giving partition pruning on every user-scoped query.
+
+    Reads share one relation per write: :meth:`df` keeps the frame
+    ``spark.read.parquet`` returns, and every write through this store drops
+    it, so the next read lists the directory and infers the schema again.
+    A write made through this store is visible to the next read. Files
+    written by another writer become visible after this store's next write,
+    or in a new ``LogStore`` — as for any Spark DataFrame over a path
+    before ``REFRESH``."""
 
     def __init__(self, spark, path: str, user_col: str = "user_id"):
         self.spark = spark
         self.path = path
         self.user_col = user_col
+        self._df: DataFrame | None = None
 
     # --- writes ---------------------------------------------------------
     def _write(self, df: DataFrame, mode: str) -> None:
-        # cluster by user first: one file per user directory per write,
-        # however the input's rows are spread over its partitions
-        df.repartition(self.user_col).write.mode(mode).partitionBy(
+        self._df = None
+        # Cluster by user first: one file per user directory per write,
+        # however the input's rows are spread over its partitions. The
+        # explicit count keeps AQE from coalescing the exchange, which would
+        # write every user directory from one task.
+        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        df.repartition(n, self.user_col).write.mode(mode).partitionBy(
             self.user_col
         ).parquet(self.path)
 
@@ -146,7 +162,10 @@ class LogStore:
 
     # --- reads ----------------------------------------------------------
     def df(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        """The whole store, listed and schema-inferred once per write."""
+        if self._df is None:
+            self._df = self.spark.read.parquet(self.path)
+        return self._df
 
     def point_read(self, user_id, doc_id, id_col: str = "id") -> DataFrame:
         """ReadItemAsync(id, PartitionKey(userId)) → partition-pruned scan +
@@ -155,15 +174,19 @@ class LogStore:
             (F.col(self.user_col) == F.lit(user_id)) & (F.col(id_col) == F.lit(doc_id))
         )
 
-    def gather(self, user_id, parent_id, id_col="id", parent_col="parent_log_id") -> DataFrame:
-        """Self-or-children fetch: ``id = @P OR parent_log_id = @P`` ordered
-        by split_index (BigDataLogControl.cs:135), partition-scoped."""
+    def _chain(self, user_id, parent_id, id_col, parent_col) -> DataFrame:
+        """The chunk rows of one record, unordered: ``id = @P OR
+        parent_log_id = @P``, partition-scoped."""
         return (
             self.df()
             .where(F.col(self.user_col) == F.lit(user_id))
             .where((F.col(id_col) == F.lit(parent_id)) | (F.col(parent_col) == F.lit(parent_id)))
-            .orderBy("split_index")
         )
+
+    def gather(self, user_id, parent_id, id_col="id", parent_col="parent_log_id") -> DataFrame:
+        """Self-or-children fetch: ``id = @P OR parent_log_id = @P`` ordered
+        by split_index (BigDataLogControl.cs:135), partition-scoped."""
+        return self._chain(user_id, parent_id, id_col, parent_col).orderBy("split_index")
 
     def scan(self, **kwargs) -> DataFrame:
         return filtered_scan(self.df(), user_col=self.user_col, **kwargs)
@@ -227,11 +250,12 @@ class LogStore:
         (point read, then gather query) and its client-side unsplit
         short-circuit (O18) collapse into the same group-and-merge: an
         unsplit parent is simply a 1-chunk group. Single shuffle on the
-        record id, partition-pruned to one user."""
+        record id, partition-pruned to one user. The chunks go in unsorted:
+        :func:`reassemble` orders them by split_index inside its aggregate."""
         from .tile import reassemble
 
         return reassemble(
-            self.gather(user_id, parent_id, id_col=id_col, parent_col=parent_col),
+            self._chain(user_id, parent_id, id_col, parent_col),
             id_col=id_col,
             parent_col=parent_col,
         )

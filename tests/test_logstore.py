@@ -75,14 +75,33 @@ def _files_per_user(root) -> dict[str, int]:
     }
 
 
+def _jobs_in_group(spark, group: str, fn) -> list[int]:
+    """Run ``fn`` (plan build and action) under job group ``group``;
+    returns the ids of the Spark jobs it started, in order."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_logstore_one_file_per_user_per_write(spark, tmp_path):
     """create/append cluster rows by user before the partitioned write, so
     each write adds ONE file per user directory it touches, even when a
-    user's rows arrive spread over many input partitions."""
+    user's rows arrive spread over many input partitions. The write stage
+    runs spark.sql.shuffle.partitions tasks: AQE must not coalesce the
+    user exchange into one task that writes every directory in turn."""
     rows = [(i, _ts("2024-01-01 10:00:00"), f"u{i % 3}", "click") for i in range(60)]
     df = spark.createDataFrame(rows, ["event_id", "ts", "user_id", "event_type"])
     store = LogStore(spark, str(tmp_path / "layout"))
-    store.create(df.repartition(6))
+    jobs = _jobs_in_group(spark, "logstore-create-write", lambda: store.create(df.repartition(6)))
+    tracker = spark.sparkContext.statusTracker()
+    write_stage = max(s for j in jobs for s in tracker.getJobInfo(j).stageIds)
+    assert tracker.getStageInfo(write_stage).numTasks == int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
     assert _files_per_user(tmp_path / "layout") == {
         "user_id=u0": 1, "user_id=u1": 1, "user_id=u2": 1,
     }
@@ -167,3 +186,55 @@ def test_logstore_combined_reassembly(spark, tmp_path):
     assert split["p1"]["n_chunks"] == 3
     solo = store.combined("u1", "q9").first()
     assert (solo["payload"], solo["n_chunks"]) == ("solo", 1)
+
+
+def test_logstore_reads_reuse_listing(spark, events_df, tmp_path):
+    """Reads between two writes share one listed, schema-inferred relation:
+    a read is one Spark job, not an inference job plus the read. A write
+    through the store drops the relation, so the next read sees its rows."""
+    store = LogStore(spark, str(tmp_path / "listing"))
+    store.create(events_df)
+    assert store.point_read("u1", 2, id_col="event_id").count() == 1
+    jobs = _jobs_in_group(
+        spark, "logstore-read-reuse",
+        lambda: store.point_read("u1", 2, id_col="event_id").collect(),
+    )
+    assert len(jobs) == 1
+    store.append(spark.createDataFrame(
+        [(6, _ts("2024-01-01 14:00:00"), "u1", "view")], events_df.schema
+    ))
+    assert [r["event_type"] for r in store.point_read("u1", 6, id_col="event_id").collect()] == ["view"]
+    assert store.df().count() == 6
+    pages = []
+    jobs = _jobs_in_group(
+        spark, "logstore-cursor-reuse",
+        lambda: pages.extend(store.cursor(page_size=2, id_col="event_id", max_pages=3)),
+    )
+    assert [len(p) for p in pages] == [2, 2, 2]
+    assert len(jobs) == 3
+
+
+def _plan_node_names(plan) -> list[str]:
+    children = plan.children()
+    names = [plan.nodeName()]
+    for i in range(children.size()):
+        names += _plan_node_names(children.apply(i))
+    return names
+
+
+def test_logstore_combined_has_no_sort(spark, tmp_path):
+    """combined hands gather's rows to reassemble unsorted: reassemble
+    orders chunks inside its aggregate, so a global sort is dead work."""
+    rows = [
+        ("u1", "p1", 0, 2, None, "AA"),
+        ("u1", "p1_split1", 1, 2, "p1", "BB"),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        ["user_id", "id", "split_index", "total_splits", "parent_log_id", "chunk"],
+    )
+    store = LogStore(spark, str(tmp_path / "nosort"))
+    store.create(df)
+    out = store.combined("u1", "p1")
+    assert "Sort" not in _plan_node_names(out._jdf.queryExecution().optimizedPlan())
+    assert [(r["record_id"], r["payload"]) for r in out.collect()] == [("p1", "AABB")]
