@@ -289,6 +289,17 @@ def _run(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _clear(spark) -> None:
+    """Drop what one query leaves cached before the next is timed.
+    clearCache only drops DataFrame persist() entries; staged frames
+    (``_util.stage``) and the iterative operators also pin checkpoint RDD
+    blocks — unpersist those too, so every timing stays a cold,
+    independent measurement."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+
+
 def _warm_python_workers(spark) -> None:
     """Spin up the Python worker pool before the timed loop.
 
@@ -371,30 +382,19 @@ def main() -> None:
     t0 = time.time()
     old_labels_path(spark, SF_DIR)
     timings["dedup_cc_label_store_build"] = round(time.time() - t0, 3)
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
-
-    def _clear() -> None:
-        spark.catalog.clearCache()
-        # clearCache only drops DataFrame persist() entries; iterative
-        # operators (connected components) also pin localCheckpoint RDD
-        # blocks — unpersist those too so every timing stays a cold,
-        # independent measurement.
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+    _clear(spark)
 
     for name in HEADLINE:
         fn = specs[name].fn
         t0 = time.time()
         _run(fn(spark, SF_DIR))
         timings[name] = round(time.time() - t0, 3)
-        _clear()
+        _clear(spark)
         if name in VARIANCE_PRONE:
             t0 = time.time()
             _run(fn(spark, SF_DIR))
             timings[name] = min(timings[name], round(time.time() - t0, 3))
-            _clear()
+            _clear(spark)
 
     total = round(sum(timings.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
 from ..tables import table
+from ._util import stage
 from .text import _NORM_SQL, _norm_col
 
 # --- PII scrubbing --------------------------------------------------------
@@ -180,22 +181,21 @@ def doc_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select("doc_id", F.split(_norm_col(), " ").alias("toks")).where(
         F.size("toks") >= SPAN_K
     )
-    # eager localCheckpoint (r13, guide §2.4): spans feeds BOTH the
-    # shared-span aggregate and the join-back — without the cut the
-    # tokenize + per-span md5 explode (the expensive pass: one hash per
-    # corpus token) runs twice. Eager, not lazy: the join-back side
-    # builds while the aggregate runs, and concurrent materialization of
-    # a shared lazy checkpoint duplicates the compute (the race class
-    # fixed across dedup.py this round).
-    spans = t.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - SPAN_K),
-                lambda i: F.md5(F.concat_ws(" ", F.slice("toks", i + 1, SPAN_K))),
-            )
-        ).alias("h"),
-    ).localCheckpoint(eager=True)
+    # staged (r13, guide §2.4): spans feeds BOTH the shared-span
+    # aggregate and the join-back — without the cut the tokenize +
+    # per-span md5 explode (the expensive pass: one hash per corpus
+    # token) runs twice
+    spans = stage(
+        t.select(
+            "doc_id",
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(0), F.size("toks") - SPAN_K),
+                    lambda i: F.md5(F.concat_ws(" ", F.slice("toks", i + 1, SPAN_K))),
+                )
+            ).alias("h"),
+        )
+    )
     shared = (
         spans.groupBy("h")
         .agg(F.count_distinct("doc_id").alias("nd"))

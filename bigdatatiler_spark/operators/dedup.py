@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
 from ..tables import table
-from ._util import int_ratio
+from ._util import int_ratio, stage
 
 # MinHash parameters: K hashes, B bands of R=2 rows → catches pairs with
 # Jaccard ≳ (1/B)^(1/R) ≈ 0.35; verification threshold keeps true near-dups.
@@ -343,8 +343,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     not 3×/2× (and the lineage cut keeps every consumer's plan flat); at
     100 TB these become staged intermediate tables (write once, read per
     branch)."""
-    sh = _shingled(spark, sf_dir).localCheckpoint(eager=True)
-    bands = minhash_bands(sh).localCheckpoint(eager=True)
+    sh = stage(_shingled(spark, sf_dir))
+    bands = stage(minhash_bands(sh))
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -423,22 +423,9 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     never engages and the output equals ``dedup_minhash_lsh`` exactly;
     the oracle replays the identical deterministic within-bucket sample,
     so the driver hash stays exact EVEN when the cap engages."""
-    # localCheckpoint, not persist (r10 ADVICE): both frames are read
-    # twice (bands self-join, sh re-joined per side); a bare persist
-    # accumulates cached blocks across queries in a long-lived session
-    # with no unpersist hook, while checkpoint blocks are released once
-    # the RDD is unreferenced. eager=True (r13): a MULTI-consumer shared
-    # frame must materialize before its consumers — lazy materialization
-    # races when two consumer jobs start concurrently (the broadcast-
-    # build futures): both recompute the uncached subtree, and the first
-    # finisher's doCheckpoint() truncates the shared lineage mid-flight,
-    # killing the other job's metric accumulators (the measured
-    # dead-accumulator log storm that stalled the scheduler event loop —
-    # ~1.6k ERROR stack traces per bench run, all attributed to this
-    # family). Lazy stays correct only for SINGLE-consumer cuts (the
-    # iterative loops), where it saves one job dispatch per round.
-    sh = _shingled(spark, sf_dir).localCheckpoint(eager=True)
-    bands = capped_bands(minhash_bands(sh)).localCheckpoint(eager=True)
+    # both frames are read twice (bands self-join, sh re-joined per side)
+    sh = stage(_shingled(spark, sf_dir))
+    bands = stage(capped_bands(minhash_bands(sh)))
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -521,8 +508,8 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join broadcasts when the batch is small. Here both roles are
     carved from the documents table (doc_id mod {INCREMENTAL_BATCH_MOD})
     so the oracle can replay the split."""
-    sh = _shingled(spark, sf_dir).localCheckpoint(eager=True)
-    bands = minhash_bands(sh).localCheckpoint(eager=True)
+    sh = stage(_shingled(spark, sf_dir))
+    bands = stage(minhash_bands(sh))
     is_batch = F.col("doc_id") % INCREMENTAL_BATCH_MOD == 0
     cand = (
         bands.where(is_batch)
@@ -603,7 +590,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial count — no corpus shuffle except the doc_id aggregate, which
     map-side combines. Here the benchmark role is doc_id mod
     {DECONTAM_BENCH_MOD} so the oracle replays the split."""
-    sh = _shingled(spark, sf_dir).localCheckpoint(eager=True)
+    sh = stage(_shingled(spark, sf_dir))
     is_bench = F.col("doc_id") % DECONTAM_BENCH_MOD == 0
     bgrams = (
         sh.where(is_bench).select(F.explode("sh").alias("gram")).distinct()
@@ -742,14 +729,18 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan's partitioning — without this every candidate pair's set
     # intersection ran on ONE core (r12, measured; the round-3 aHash
     # lesson). No-op decision on a real multi-file corpus.
-    # lazy localCheckpoint: d feeds both join sides — one tokenize pass
-    # (and one repartition) instead of two
-    d = ensure_parallelism(docs).select(
-        "doc_id",
-        "lang",
-        "source",
-        F.array_distinct(F.split(_norm_col(), " ")).alias("toks"),
-    ).withColumn("lb", F.floor(F.log2(F.size("toks")))).localCheckpoint(eager=True)
+    # staged: d feeds both join sides — one tokenize pass (and one
+    # repartition) instead of two
+    d = stage(
+        ensure_parallelism(docs)
+        .select(
+            "doc_id",
+            "lang",
+            "source",
+            F.array_distinct(F.split(_norm_col(), " ")).alias("toks"),
+        )
+        .withColumn("lb", F.floor(F.log2(F.size("toks"))))
+    )
     a = d.alias("a")
     b = d.select(
         F.col("doc_id").alias("doc_id_2"),
@@ -926,19 +917,20 @@ def dedup_embedding_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .similarity import dot as _dot  # shared fold kernel
 
-    # both sides of the self-join read this frame — cache it (lazy
-    # local checkpoint) so the 8 hyperplane projections per vector run
-    # once. The universe is the
+    # both sides of the self-join read this frame — stage it so the 8
+    # hyperplane projections per vector run once. The universe is the
     # SHARED nz_base (zero-norm, non-finite, huge-component vectors
     # excluded) — an inline copy of the filter here silently drifted
     # from the oracle's _EMB_NZ when fuzz round 4 added the
     # huge-component bound (948 vs 233 rows on hostile content).
-    bucketed = nz_base(e).select(
-        "vec_id",
-        "embedding",
-        "nrm",
-        lsh_bucket("embedding").alias("bucket"),
-    ).localCheckpoint(eager=True)
+    bucketed = stage(
+        nz_base(e).select(
+            "vec_id",
+            "embedding",
+            "nrm",
+            lsh_bucket("embedding").alias("bucket"),
+        )
+    )
     a = bucketed.select(
         F.col("vec_id").alias("vec_id_1"),
         F.col("embedding").alias("emb_1"),
@@ -1109,7 +1101,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning at the join; verification touches candidates only. Every
     shuffle keys on token or doc_id. All-integer thresholds end to end."""
     tn, td = PREFIX_JACCARD_NUM, PREFIX_JACCARD_DEN
-    sh = _shingled(spark, sf_dir).localCheckpoint(eager=True)
+    sh = stage(_shingled(spark, sf_dir))
     tok = sh.select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("t"))
     freq = tok.groupBy("t").agg(F.count("*").alias("cnt"))
     w = Window.partitionBy("doc_id").orderBy(F.asc("cnt"), F.asc("t"))
@@ -1252,13 +1244,12 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.concat_ws(" ", F.slice("toks", i + 1, 3)),
         )
     )
-    d = (
+    d = stage(
         ensure_parallelism(docs)
         .select("doc_id", "lang", "source", F.split(_norm_col(), " ").alias("toks"))
         .where(F.size("toks") >= 3)
         .select("doc_id", "lang", "source", shingles.alias("sh"))
         .withColumn("n", F.size("sh"))
-        .localCheckpoint(eager=True)
     )
     ex = d.select("doc_id", "lang", "source", "n", F.explode("sh").alias("s"))
     sdf = ex.groupBy("s").agg(F.count("*").alias("df"))
@@ -1381,8 +1372,8 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed the band self-join plus two equi-joins back — the same staged
     shape as dedup_minhash_lsh with one extra broadcast-sized join."""
     k = MINHASH_GROUPS * MINHASH_SLICES
-    sh = _shingled(spark, sf_dir).localCheckpoint(eager=True)
-    sigs = minhash_sigs(sh).localCheckpoint(eager=True)
+    sh = stage(_shingled(spark, sf_dir))
+    sigs = stage(minhash_sigs(sh))
     bands = minhash_bands(sh)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -1555,21 +1546,22 @@ def dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.log((F.col("n_docs") + F.lit(1.0)) / (F.col("df") + F.lit(1.0)))
          + F.lit(1.0)) * 1_000_000
     ).cast("bigint")
-    # lazy localCheckpoint (r12, measured): w feeds FOUR plan branches
+    # staged (r12, measured): w feeds FOUR plan branches
     # (both sides of the rerank join + both norm joins) and norms two —
     # without the cuts the toks-explode + tf/df aggregates + the global
     # count replayed per branch (4 identical SinglePartition count(1)
     # subtrees in the audited plan; 1 after). Same staged-intermediate
     # pattern as dedup_minhash_lsh's shingle frame.
-    w = (
+    w = stage(
         tf.join(dfreq, "token")
         .crossJoin(F.broadcast(n))
         .select("doc_id", "token", "df", (F.col("tf") * idf_micro).alias("wt"))
-        .localCheckpoint(eager=True)
     )
-    norms = w.groupBy("doc_id").agg(
-        F.sum(F.col("wt").cast("decimal(38,0)") * F.col("wt")).alias("norm2")
-    ).localCheckpoint(eager=True)
+    norms = stage(
+        w.groupBy("doc_id").agg(
+            F.sum(F.col("wt").cast("decimal(38,0)") * F.col("wt")).alias("norm2")
+        )
+    )
     wa = w.select(
         F.col("doc_id").alias("doc_a"), "token", F.col("wt").alias("wt_a")
     )
@@ -1589,9 +1581,9 @@ def dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bdf = bg.groupBy("b").agg(F.count("*").alias("bdf"))
     # cut: blocked feeds both sides of the candidate self-join — one
     # bigram explode + bdf aggregate instead of two
-    blocked = bg.join(
-        bdf.where(F.col("bdf").between(2, TFIDF_PAIR_DF_CAP)), "b"
-    ).localCheckpoint(eager=True)
+    blocked = stage(
+        bg.join(bdf.where(F.col("bdf").between(2, TFIDF_PAIR_DF_CAP)), "b")
+    )
     cand = (
         blocked.select(F.col("doc_id").alias("doc_a"), "b")
         .join(blocked.select(F.col("doc_id").alias("doc_b"), "b"), "b")

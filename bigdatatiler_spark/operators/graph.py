@@ -33,23 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
+from ._util import stage
 from .dedup import _SHINGLED_SQL, minhash_bands, minhash_bands_sql
 
 MAX_ITERS = 15
-
-
-def _validate_lineage_cut(edges: DataFrame, lineage_cut: str) -> None:
-    """Fail fast (shared by both algorithms): bad mode, or 'reliable'
-    without a checkpoint dir — better than a raw SparkException rounds in."""
-    if lineage_cut not in ("local", "reliable"):
-        raise ValueError(f"lineage_cut must be 'local' or 'reliable', got {lineage_cut!r}")
-    if lineage_cut == "reliable":
-        sc = edges.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            raise ValueError(
-                "lineage_cut='reliable' needs spark.sparkContext.setCheckpointDir "
-                "(a fault-tolerant path on a real cluster)"
-            )
 
 
 def _band_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,7 +45,7 @@ def _band_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash_lsh's candidate stage)."""
     from .dedup import _shingled
 
-    bands = minhash_bands(_shingled(spark, sf_dir)).localCheckpoint(eager=False)
+    bands = stage(minhash_bands(_shingled(spark, sf_dir)), "round")
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -98,18 +85,7 @@ def connected_components(
       loop survives executor loss. The per-round write is labels+edges
       only, not the upstream corpus. This is the 100 TB setting.
     """
-    _validate_lineage_cut(edges, lineage_cut)
-
-    def cut(df: DataFrame) -> DataFrame:
-        # eager=False: the checkpoint cut (LogicalRDD plan truncation) is
-        # applied immediately, but block materialization folds into the
-        # round's convergence action instead of a separate job — one job
-        # per round, not two (r12 optimization; semantics identical)
-        return (
-            df.localCheckpoint(eager=False)
-            if lineage_cut == "local"
-            else df.checkpoint()
-        )
+    mode = "round" if lineage_cut == "local" else lineage_cut
 
     fwd = edges.select(
         F.col(node_col_a).alias("src"), F.col(node_col_b).alias("dst")
@@ -117,14 +93,16 @@ def connected_components(
     # materialize the symmetrized edge set once — every iteration joins it,
     # and without this the upstream edge computation (e.g. the MinHash band
     # self-join) replays per round
-    both = cut(
+    both = stage(
         fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
+        .distinct(),
+        mode,
     )
-    labels = cut(
+    labels = stage(
         both.select(F.col("src").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("label"))
+        .select("node", F.col("node").alias("label")),
+        mode,
     )
     for _ in range(MAX_ITERS):
         neighbor_min = (
@@ -132,7 +110,7 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = cut(  # truncate lineage: O(1) plan per round
+        new_labels = stage(  # truncate lineage: O(1) plan per round
             labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
             .select(
                 "node",
@@ -140,7 +118,8 @@ def connected_components(
                     F.col("label"), F.coalesce("nbr_label", F.col("label"))
                 ).alias("label"),
                 (F.col("nbr_label") < F.col("label")).alias("_changed"),
-            )
+            ),
+            mode,
         )
         # full count, not limit(1): the scan doubles as the lazy
         # checkpoint's materializing job over every partition
@@ -179,18 +158,7 @@ def connected_components_star(
     Fixpoint = forest of stars rooted at each component's min node, so
     the final edge list IS the (node, cluster_id) mapping.
     """
-    _validate_lineage_cut(edges, lineage_cut)
-
-    def cut(df: DataFrame) -> DataFrame:
-        # eager=False: the checkpoint cut (LogicalRDD plan truncation) is
-        # applied immediately, but block materialization folds into the
-        # round's convergence action instead of a separate job — one job
-        # per round, not two (r12 optimization; semantics identical)
-        return (
-            df.localCheckpoint(eager=False)
-            if lineage_cut == "local"
-            else df.checkpoint()
-        )
+    mode = "round" if lineage_cut == "local" else lineage_cut
 
     def sig(df: DataFrame) -> tuple:
         """Cheap set signature (count, Σ xxhash64 as exact decimal) for the
@@ -207,18 +175,20 @@ def connected_components_star(
     raw = edges.select(
         F.col(node_col_a).alias("src"), F.col(node_col_b).alias("dst")
     )
-    nodes = cut(
+    nodes = stage(
         raw.select(F.col("src").alias("node"))
         .union(raw.select(F.col("dst").alias("node")))
-        .distinct()
+        .distinct(),
+        mode,
     )
     # canonical parent edges: larger → smaller, no self-loops
-    e = cut(
+    e = stage(
         raw.where(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
         )
-        .distinct()
+        .distinct(),
+        mode,
     )
     e_sig = sig(e)
     for _ in range(max_rounds):
@@ -245,10 +215,11 @@ def connected_components_star(
             .where(F.col("dst") != F.col("m"))
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
-        new_e = cut(
+        new_e = stage(
             repointed.union(mins2.select("src", F.col("m").alias("dst")))
             .where(F.col("src") != F.col("dst"))
-            .distinct()
+            .distinct(),
+            mode,
         )
         new_sig = sig(new_e)
         e = new_e
@@ -421,7 +392,7 @@ def dedup_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     mega-clusters costs the contraction two nodes, not two clusters."""
     from .dedup import INCREMENTAL_BATCH_MOD
 
-    edges = _band_edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = stage(_band_edges(spark, sf_dir), "round")
 
     def is_new(c: str):
         return F.col(c) % INCREMENTAL_BATCH_MOD == 0
@@ -847,25 +818,17 @@ def bfs_hops(
     ``node`` column. Seeds themselves emit hops = 0 whether or not they
     appear in the graph (an isolated seed is still distance 0 from
     itself)."""
-    _validate_lineage_cut(edges, lineage_cut)
-
-    def cut(df: DataFrame) -> DataFrame:
-        # eager=False: the checkpoint cut (LogicalRDD plan truncation) is
-        # applied immediately, but block materialization folds into the
-        # round's convergence action instead of a separate job — one job
-        # per round, not two (r12 optimization; semantics identical)
-        return (
-            df.localCheckpoint(eager=False)
-            if lineage_cut == "local"
-            else df.checkpoint()
-        )
+    mode = "round" if lineage_cut == "local" else lineage_cut
 
     fwd = edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    both = cut(
+    both = stage(
         fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
+        .distinct(),
+        mode,
     )
-    dist = cut(seeds.select("node", F.lit(0).cast("bigint").alias("hops")).distinct())
+    dist = stage(
+        seeds.select("node", F.lit(0).cast("bigint").alias("hops")).distinct(), mode
+    )
     frontier = dist
     for _ in range(max_hops):
         # relax one hop out of the frontier only (delta iteration)
@@ -875,16 +838,18 @@ def bfs_hops(
             .groupBy("node")
             .agg(F.min("hops").alias("hops"))
         )
-        improved = cut(
+        improved = stage(
             candidates.join(dist.withColumnRenamed("hops", "old"), "node", "left")
             .where(F.col("old").isNull() | (F.col("hops") < F.col("old")))
-            .select("node", "hops")
+            .select("node", "hops"),
+            mode,
         )
         # full count: materializes the lazy checkpoint in the same job
         if improved.count() == 0:
             break
-        dist = cut(
-            dist.union(improved).groupBy("node").agg(F.min("hops").alias("hops"))
+        dist = stage(
+            dist.union(improved).groupBy("node").agg(F.min("hops").alias("hops")),
+            mode,
         )
         frontier = improved
     return dist
@@ -959,23 +924,13 @@ def kcore_peel(
     """(node, degree): nodes surviving `rounds` peels at threshold k,
     with their degree in the induced subgraph after the last peel.
     ``edges`` rows are undirected (a, b) pairs."""
-    _validate_lineage_cut(edges, lineage_cut)
-
-    def cut(df: DataFrame) -> DataFrame:
-        # eager=False: the checkpoint cut (LogicalRDD plan truncation) is
-        # applied immediately, but block materialization folds into the
-        # round's convergence action instead of a separate job — one job
-        # per round, not two (r12 optimization; semantics identical)
-        return (
-            df.localCheckpoint(eager=False)
-            if lineage_cut == "local"
-            else df.checkpoint()
-        )
+    mode = "round" if lineage_cut == "local" else lineage_cut
 
     fwd = edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    sym = cut(
+    sym = stage(
         fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
+        .distinct(),
+        mode,
     )
     for _ in range(rounds):
         keep = (
@@ -983,10 +938,11 @@ def kcore_peel(
             .where(F.col("deg") >= k)
             .select("src")
         )
-        sym = cut(
+        sym = stage(
             sym.join(keep, "src", "left_semi")
             .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .select("src", "dst")
+            .select("src", "dst"),
+            mode,
         )
     return (
         sym.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))

@@ -30,7 +30,7 @@ budget, and the oracle unrolls the same three rounds as plain CTEs.
 Scale shape (100 TB): every step is keyed by node id — degree is one
 groupBy, each iteration is one equi-join (edges × ranks, shuffle on
 node) + one aggregation; nothing all-pairs, nothing driver-side. The
-symmetrized edge list is localCheckpoint()-ed ONCE so the upstream
+symmetrized edge list is staged ONCE so the upstream
 MinHash band self-join does not replay per iteration (same lineage
 rationale as graph.py's loop; 'reliable' checkpointing applies
 identically on a real cluster). Triangle counting uses degree-ordered
@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
+from ._util import stage
 from .dedup import _SHINGLED_SQL, minhash_bands_sql
 from .graph import _band_edges
 
@@ -68,12 +69,12 @@ def pagerank_integer(edges: DataFrame, iters: int = PAGERANK_ITERS) -> DataFrame
     construction — their rank is the teleport constant and carries no
     information.
     """
-    sym = (
+    # cut the band-self-join lineage: joined every round
+    sym = stage(
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .union(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint()  # cut the band-self-join lineage: joined every round
     )
-    deg = sym.groupBy("src").agg(F.count("*").alias("deg")).localCheckpoint()
+    deg = stage(sym.groupBy("src").agg(F.count("*").alias("deg")))
     ranks = deg.select(F.col("src").alias("node"), F.lit(PR_SCALE).cast("long").alias("r"))
     for _ in range(iters):
         contrib = ranks.join(deg, ranks.node == deg.src).select(
@@ -102,7 +103,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     # upstream, e.g. MinHash banding) is consumed by four joins below —
     # without the cut every reuse replays it (first audit of this plan:
     # 139 exchanges; with the cuts: the wedge+closing joins only)
-    e = edges.select(F.col("a"), F.col("b")).localCheckpoint()
+    e = stage(edges.select(F.col("a"), F.col("b")))
     sym = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
         e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
@@ -113,11 +114,14 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         .join(deg.select(F.col("src").alias("b"), F.col("deg").alias("db")), "b")
     )
     lower_first = F.struct("da", "a") < F.struct("db", "b")
-    o = with_deg.select(
-        F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        F.when(lower_first, F.col("db")).otherwise(F.col("da")).alias("ddeg"),
-    ).localCheckpoint()  # reused by both wedge legs and the closing join
+    # reused by both wedge legs and the closing join
+    o = stage(
+        with_deg.select(
+            F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("src"),
+            F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
+            F.when(lower_first, F.col("db")).otherwise(F.col("da")).alias("ddeg"),
+        )
+    )
     x, y = o.alias("x"), o.alias("y")
     wedges = x.join(
         y,
@@ -271,12 +275,12 @@ def _assortativity_oracle() -> str:
 def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the near-dup candidate graph (see block
     comment). Plan: the candidate edge list feeds FIVE branches (two
-    sym orientations, degrees, node/edge counts) — localCheckpoint it
+    sym orientations, degrees, node/edge counts) — stage it
     once (the pagerank precedent) so the MinHash band self-join runs a
     single time instead of replaying per branch (cold-plan audit read
     46 exchanges before the cut, 5 after); degrees broadcast onto both
     endpoints; the moment aggregate is a single row."""
-    edges = _band_edges(spark, sf_dir).localCheckpoint()
+    edges = stage(_band_edges(spark, sf_dir))
     sym = edges.selectExpr("a AS src", "b AS dst").unionAll(
         edges.selectExpr("b AS src", "a AS dst")
     )

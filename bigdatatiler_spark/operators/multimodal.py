@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 
 from ..registry import register
 from ..tables import table
+from ._util import stage
 
 FRAME_BYTES = 256  # fake "bytes per frame" used by the frame-count derivation
 
@@ -405,7 +406,7 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rides the decode stage — ahash_bands_stub.)
     from ._util import ensure_parallelism
 
-    bands = ahash_bands(ensure_parallelism(docs)).localCheckpoint(eager=True)
+    bands = stage(ahash_bands(ensure_parallelism(docs)))
     e = bands.select(
         "doc_id", "bands", F.posexplode("bands").alias("k", "v")
     )
@@ -646,7 +647,7 @@ def multimodal_image_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFra
                 rows.append((d, [(code >> (8 * k)) & 255 for k in range(8)]))
             yield pd.DataFrame(rows, columns=["doc_id", "bands"])
 
-    bands = docs.mapInPandas(_hash, _BANDS_SCHEMA).localCheckpoint(eager=True)
+    bands = stage(docs.mapInPandas(_hash, _BANDS_SCHEMA))
     e = bands.select("doc_id", "bands", F.posexplode("bands").alias("k", "v"))
     a = e.select(
         F.col("doc_id").alias("doc_a"), F.col("bands").alias("ba"), "k", "v"

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
 from ..tables import table
+from ._util import stage
 
 M = 4  #: subspaces
 DSUB = 16  #: dims per subspace (M * DSUB == similarity.DIM)
@@ -250,14 +251,10 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "_n_ids", F.count("*").over(Window.partitionBy("vec_id"))
     ).where(F.col("_n_ids") == 1).select("vec_id", "embedding")
-    # eager localCheckpoint (r13, guide §2.4): base feeds SIX branches
-    # (encode probe, codebook sample ×2 via ReuseExchange, query-side
-    # dtab, rerank lookup ×2) — one scan + ambiguity window instead of
-    # replays. Eager, not lazy: dtab and shortlist are broadcast-built
-    # futures, and two concurrent jobs materializing a shared lazy
-    # checkpoint duplicate its compute and race its lineage truncation
-    # (the dead-accumulator storm class fixed across dedup.py this round).
-    base = base.localCheckpoint(eager=True)
+    # staged (r13, guide §2.4): base feeds SIX branches (encode probe,
+    # codebook sample ×2 via ReuseExchange, query-side dtab, rerank
+    # lookup ×2) — one scan + ambiguity window instead of replays
+    base = stage(base)
     cb = _codebook_row(base)
     codes = encode_pq(base, cb)
     # per-query ADC lookup table: map (sub*KSUB + code) → exact distance

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..registry import register
 from ..tables import table
-from ._util import ms
+from ._util import ms, stage
 
 
 def violation_counts(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
@@ -850,7 +850,7 @@ def events_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = ev.groupBy(
         "event_type", (F.weekday("ts") + 1).cast("bigint").alias("dow")
     ).agg(F.count(F.lit(1)).alias("o"))
-    cells = cells.localCheckpoint(eager=True)
+    cells = stage(cells)
     r = cells.groupBy("event_type").agg(F.sum("o").cast("bigint").alias("rt"))
     c = cells.groupBy("dow").agg(F.sum("o").cast("bigint").alias("ct"))
     n = cells.agg(F.sum("o").cast("bigint").alias("nt"))

@@ -33,6 +33,7 @@ from ._util import (
     ntile_from_rank,
     one_minus,
     one_plus,
+    stage,
     ts_lit,
 )
 
@@ -426,24 +427,14 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor (≥{BASKET_MIN_SUPPORT}) keeps the output the interesting tail,
     applied BEFORE the scoring joins so low-support pairs never reach
     them."""
-    # lazy localCheckpoint (r12, measured): items feeds FIVE plan branches
-    # (both pair-join sides, part_orders, the basket-count scalar) — the
+    # staged (r12, measured): items feeds FIVE plan branches (both
+    # pair-join sides, part_orders, the basket-count scalar) — the
     # lineitem scan + distinct replayed per branch (10 scans in the
-    # audited plan; 2 after). Same staged-intermediate pattern as the
-    # dedup shingle frame; at 100 TB this is the staged `items` table.
-    # Fault-tolerance tradeoff (r12 ADVICE, applies to every
-    # localCheckpoint in the package): executor-local checkpoint blocks
-    # are NOT recoverable — on a real cluster an executor loss or
-    # dynamic-allocation decommission fails the query instead of
-    # recomputing. The 100 TB-production equivalent of this cut is a
-    # replicated checkpoint (Dataset.checkpoint + a durable checkpoint
-    # dir) or an explicit staged table; localCheckpoint is the local-mode
-    # / short-interactive form of the same plan shape.
-    items = (
+    # audited plan; 2 after). At 100 TB this is the staged `items` table.
+    items = stage(
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     a = items.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a")
@@ -658,7 +649,8 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is dimension-sized here but ~10⁹ rows at 100 TB — exactly the
     scale where the old global-ntile window serialized."""
     orders = table(spark, sf_dir, "orders")
-    base = (
+    # three rankings + the rollup consume it
+    base = stage(
         orders.groupBy(F.col("o_custkey").alias("c_custkey"))
         .agg(
             F.max(ms("o_orderdate")).alias("last_order_ms"),
@@ -667,7 +659,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("long")
             ).alias("monetary_cents"),
         )
-        .localCheckpoint()  # three rankings + the rollup consume it
     )
     n = base.agg(F.count(F.lit(1)).cast("long").alias("_n"))
     dims = (

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
 from ..tables import table
+from ._util import stage
 from .dedup import _SHINGLED_SQL, _shingled
 from .similarity import N_QUERIES, _DOT_QC, _EMB_NZ, _self_norm, dot, norm, nz_base
 from .text import _NORM_SQL, _norm_col
@@ -99,9 +100,9 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching the fusion."""
     # dense side — exact cosine kernel, rank ≤ EMB_K
     e = table(spark, sf_dir, "embeddings")
-    # lazy localCheckpoint (r12): base feeds both dense-side join
+    # staged (r12): base feeds both dense-side join
     # branches — one scan + ambiguity window instead of two
-    base = nz_base(e).localCheckpoint(eager=True)
+    base = stage(nz_base(e))
     q = base.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -125,10 +126,10 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "doc_id", "emb_rank")
     )
 
-    # lexical side — shingle Jaccard, rank ≤ LEX_K. Lazy localCheckpoint
-    # (r12): sh feeds the broadcast query side AND the probe side — one
+    # lexical side — shingle Jaccard, rank ≤ LEX_K. Staged (r12): sh
+    # feeds the broadcast query side AND the probe side — one
     # shingle pass instead of two.
-    sh = _shingled(spark, sf_dir).localCheckpoint(eager=True)
+    sh = stage(_shingled(spark, sf_dir))
     q_sh = sh.where(F.col("doc_id") < N_QUERIES).select(
         F.col("doc_id").alias("query_id"), F.col("sh").alias("q_sh")
     )
@@ -252,7 +253,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # postings frame once instead of re-running the explode+agg per branch
     # (split normalization measured: no win here — the agg pipeline, not
     # the explode, bounds this query)
-    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf")).localCheckpoint(eager=True)
+    tf = stage(toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf")))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = F.broadcast(
         dl.agg(
@@ -384,7 +385,7 @@ def _trigram_candidates(docs: DataFrame, patterns, n_rare: int = TRIGRAM_N_RARE)
     postings = ensure_parallelism(docs).select(
         "doc_id", F.explode(_char_trigrams("text")).alias("tg")
     )
-    hits = postings.join(F.broadcast(pats), "tg").localCheckpoint(eager=True)
+    hits = stage(postings.join(F.broadcast(pats), "tg"))
     tgdf = hits.groupBy("pattern", "tg").agg(F.count("*").alias("df"))
     w = Window.partitionBy("pattern").orderBy(F.asc("df"), F.asc("tg"))
     rare = F.broadcast(

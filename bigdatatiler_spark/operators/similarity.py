@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 
 from ..registry import register
 from ..tables import table
+from ._util import stage
 
 TOP_K = 5
 N_QUERIES = 5  # vec_id < 5 act as the query set
@@ -177,9 +178,9 @@ def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded score with vec_id tiebreak gives a total order, so top-k is
     deterministic. At scale this kernel runs per-LSH-bucket, not globally."""
     e = table(spark, sf_dir, "embeddings")
-    # lazy localCheckpoint (r12): base feeds both join sides — one
+    # staged (r12): base feeds both join sides — one
     # scan + ambiguity window instead of two
-    base = nz_base(e).localCheckpoint(eager=True)
+    base = stage(nz_base(e))
     q = base.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -368,7 +369,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow hashing + one equi-join + the per-candidate kernel — no
     all-pairs anywhere."""
     e = table(spark, sf_dir, "embeddings")
-    base = nz_base(e).localCheckpoint(eager=True)
+    base = stage(nz_base(e))
     per_table = [
         base.select(
             F.lit(t).alias("ht"),
@@ -380,7 +381,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = per_table[0]
     for frame in per_table[1:]:
         idx = idx.unionByName(frame)
-    idx = idx.localCheckpoint(eager=True)
+    idx = stage(idx)
     q_idx = idx.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "ht", "bucket"
     )
@@ -821,7 +822,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     off via nprobe (join against the n nearest cells instead of 1) and
     is pinned vs the brute-force kernel in tests/test_ann_recall.py."""
     e = table(spark, sf_dir, "embeddings")
-    base = nz_base(e).localCheckpoint(eager=True)
+    base = stage(nz_base(e))
     cents = kmeans_centroids_data(base, cache_key=("ivf", sf_dir))
     cells = nearest_cells(base, cents)
     qcells = cells.where(F.col("vec_id") < N_QUERIES).select(
@@ -891,7 +892,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe=1 plus one more row per query in the probe table; candidates
     from both probes rank in a single window."""
     e = table(spark, sf_dir, "embeddings")
-    base = nz_base(e).localCheckpoint(eager=True)
+    base = stage(nz_base(e))
     cents = kmeans_centroids_data(base, cache_key=("ivf", sf_dir))
     qprobes = nearest_cells(
         base.where(F.col("vec_id") < N_QUERIES), cents, n_probe=N_PROBE
@@ -1010,9 +1011,9 @@ def decontaminate_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFram
     larger benchmark sizes the LSH/IVF bucketing kernels above replace
     the dense scan, same as the ANN query path."""
     e = table(spark, sf_dir, "embeddings")
-    # lazy localCheckpoint (r12): base feeds the broadcast benchmark agg
+    # staged (r12): base feeds the broadcast benchmark agg
     # AND the corpus scoring pass — one scan + ambiguity window, not two
-    base = nz_base(e).localCheckpoint(eager=True)
+    base = stage(nz_base(e))
     is_bench = F.col("vec_id") % EMB_BENCH_MOD == 0
     bench_row = F.broadcast(
         base.where(is_bench).agg(
@@ -1137,11 +1138,11 @@ def ann_hamming_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreaks, so both stages are totally ordered and deterministic.
     """
     e = table(spark, sf_dir, "embeddings")
-    # lazy localCheckpoint (r12): the nz_base universe (scan + ambiguity
+    # staged (r12): the nz_base universe (scan + ambiguity
     # window) feeds FOUR plan branches here (both Hamming sides + both
     # rerank sides) — cut it so it computes once (9 scans → 1 in the
     # audited plan)
-    nzb = nz_base(e).localCheckpoint(eager=True)
+    nzb = stage(nz_base(e))
     codes = nzb.select(
         "vec_id",
         bq_word(F.col("embedding"), 0).alias("w0"),
@@ -1373,17 +1374,15 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     and cells are bounded by the same occupancy reporting the LSH bucket
     audit provides for MinHash."""
     e = table(spark, sf_dir, "embeddings")
-    # lazy localCheckpoint (r12): base feeds the assignment AND the
+    # staged (r12): base feeds the assignment AND the
     # vector-lookup join below — one scan + ambiguity window, not two
-    base = nz_base(e).localCheckpoint(eager=True)
+    base = stage(nz_base(e))
     cents = kmeans_centroids_data(base, cache_key=("ivf", sf_dir))
     cells = nearest_cells(base, cents)
-    # localCheckpoint: m feeds BOTH sides of the cell self-join — without
+    # staged: m feeds BOTH sides of the cell self-join — without
     # the cut the nz_base window + assignment join replay per side
     # (13 exchanges audited; 6 with the cut)
-    m = cells.join(
-        base.select("vec_id", "embedding", "nrm"), "vec_id"
-    ).localCheckpoint(eager=True)
+    m = stage(cells.join(base.select("vec_id", "embedding", "nrm"), "vec_id"))
 
     _dot = dot  # shared fold kernel
 

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from ._util import finite_or_null, ms
+from ._util import finite_or_null, ms, stage
 from ..registry import register
 from ..tables import table
 
@@ -622,7 +622,8 @@ def customer_revenue_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import distributed_rank, ntile_from_rank
 
     o = table(spark, sf_dir, "orders")
-    cust = (
+    # two consumers: the rank pipeline + the count
+    cust = stage(
         o.groupBy("o_custkey")
         .agg(
             F.sum(
@@ -632,7 +633,6 @@ def customer_revenue_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rev")
         )
         .where(F.col("rev").isNotNull())  # all-NaN customer: unknown revenue
-        .localCheckpoint()  # two consumers: the rank pipeline + the count
     )
     n = cust.agg(F.count(F.lit(1)).cast("long").alias("_n"))
     ranked = distributed_rank(
@@ -739,7 +739,8 @@ def orders_selectivity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import distributed_rank, ntile_from_rank
 
     o = table(spark, sf_dir, "orders")
-    cust = (
+    # consumers: rank pipeline, count, exact pass
+    cust = stage(
         o.groupBy("o_custkey")
         .agg(
             F.sum(
@@ -749,7 +750,6 @@ def orders_selectivity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rev")
         )
         .where(F.col("rev").isNotNull())  # all-NaN customer: unknown revenue
-        .localCheckpoint()  # consumers: rank pipeline, count, exact pass
     )
     n = cust.agg(F.count(F.lit(1)).cast("long").alias("_n"))
     hist = (

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
 from ..tables import table
+from ._util import stage
 
 PAGE_SIZE = 50
 PAGE = 3  # 0-based → rows [150, 200) of the total order
@@ -534,7 +535,7 @@ def events_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers survived the text roundtrip bit-exactly.
 
     Plan: export and re-read are distributed (one JSONL part per input
-    partition, no driver collect); the final aggregate localCheckpoints
+    partition, no driver collect); the final aggregate is staged eagerly
     so the returned frame outlives the temp export, which is removed."""
     import shutil
     import tempfile
@@ -553,7 +554,7 @@ def events_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id long, ts_ms long, user_id long,"
             " event_type string, cents long"
         ).json(out_dir)
-        agg = (
+        agg = stage(
             back.groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -565,7 +566,6 @@ def events_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("ts_checksum"),
             )
-            .localCheckpoint()
         )
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
@@ -597,7 +597,7 @@ def events_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride as epoch-ms integers (same precision rationale as JSONL).
 
     Plan: distributed export/read (one CSV part per input partition),
-    localCheckpointed rollup so the frame outlives the temp export."""
+    eagerly staged rollup so the frame outlives the temp export."""
     import shutil
     import tempfile
 
@@ -633,7 +633,7 @@ def events_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("nullValue", "\\N")
             .csv(out_dir)
         )
-        agg = (
+        agg = stage(
             back.groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -645,7 +645,6 @@ def events_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("n_anonymous"),
             )
-            .localCheckpoint()
         )
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
@@ -678,7 +677,7 @@ def events_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer projection is the schema-stable interchange choice).
 
     Plan: distributed export/read (one ORC stripe set per input
-    partition, no driver collect); the rollup localCheckpoints so the
+    partition, no driver collect); the rollup is staged eagerly so the
     returned frame outlives the temp export."""
     import shutil
     import tempfile
@@ -697,7 +696,7 @@ def events_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id long, ts_us long, user_id long,"
             " event_type string, val decimal(18,2)"
         ).orc(out_dir)
-        agg = (
+        agg = stage(
             back.groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -711,7 +710,6 @@ def events_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("ts_checksum"),
             )
-            .localCheckpoint()
         )
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
 from ..tables import table
-from ._util import int_ratio
+from ._util import int_ratio, stage
 
 # ASCII-only case fold, NOT lower(): full Unicode case mapping is
 # locale/library-defined and legitimately differs between engines (JVM
@@ -1742,10 +1742,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle of EVERY bigram row dominating). dbc is ≤ DSIR_BUCKETS rows
     # per doc whatever the doc length, so the scoring shuffle is bounded
     # by docs × 1024 instead of corpus bigrams — the 100 TB shape.
-    dbc = (
+    dbc = stage(
         hashed.groupBy("doc_id", "lang", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
     )
     prof = dbc.groupBy("bucket").agg(
         F.sum("cnt").alias("raw_cnt"),

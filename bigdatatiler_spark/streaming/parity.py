@@ -29,6 +29,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..operators._util import stage
 from ..registry import register
 from ..session import tune_session
 
@@ -693,11 +694,11 @@ def neardedup_apply_batch(
     have_index = bool(ids_parts)
     if have_index:
         new = new.join(spark.read.parquet(*ids_parts), "doc_id", "left_anti")
-    # localCheckpoint: each frame feeds 2-3 branches below; the batch is
+    # staged: each frame feeds 2-3 branches below; the batch is
     # bounded (one source file), so eager materialization is cheap and
     # keeps the per-batch plan flat instead of re-shingling per branch
-    sh_new = shingle_frame(new).localCheckpoint()
-    bands_new = minhash_bands(sh_new).localCheckpoint()
+    sh_new = stage(shingle_frame(new))
+    bands_new = stage(minhash_bands(sh_new))
 
     a, b = bands_new.alias("a"), bands_new.alias("b")
     cand = (
@@ -831,12 +832,12 @@ def docs_streaming_neardedup_parity(
         q.stop()
     # materialize the (pair-list-sized) result off the state dir, then
     # remove it: every invocation used to leak a corpus-scale directory
-    # of shingle sets/bands/results in /tmp (r11 ADVICE). The EAGER
-    # checkpoint is required — the returned frame must not reference the
+    # of shingle sets/bands/results in /tmp (r11 ADVICE). The stage must
+    # stay eager ("shared") — the returned frame must not reference the
     # deleted parquet paths.
     import shutil
 
-    out = _read_neardedup_results(spark, state_dir).localCheckpoint()
+    out = stage(_read_neardedup_results(spark, state_dir))
     shutil.rmtree(state_dir, ignore_errors=True)
     return out
 

@@ -209,16 +209,23 @@ def test_no_oracle_names_stay_out_of_window():
 def test_no_bare_persist_in_package():
     """r11 verdict item 3: a bare ``.persist()`` accumulates CacheManager
     entries across queries in a long-lived session with no unpersist
-    hook. Shared intermediates cache via ``localCheckpoint(eager=False)``
-    instead (same reuse, plus a lineage cut, plus block release when the
-    RDD is dereferenced) — pin that the pattern stays out."""
+    hook. Shared intermediates are staged through ``_util.stage`` instead
+    (an eager ``localCheckpoint``: same reuse, plus a lineage cut, plus
+    block release when the RDD is dereferenced) — pin that the pattern
+    stays out, and that ``stage`` stays the package's ONE staging call:
+    no ``.localCheckpoint(`` or ``.checkpoint(`` anywhere else."""
     import glob
 
     pkg = os.path.join(os.path.dirname(__file__), "..", "bigdatatiler_spark")
+    home = os.path.join("operators", "_util.py")
     offenders = []
     for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, pkg)
+        banned = [".persist()"]
+        if rel != home:
+            banned += [".localCheckpoint(", ".checkpoint("]
         with open(path) as f:
             for i, line in enumerate(f, 1):
-                if ".persist()" in line.split("#")[0]:
-                    offenders.append(f"{os.path.relpath(path, pkg)}:{i}")
-    assert not offenders, f"bare persist() sites: {offenders}"
+                code = line.split("#")[0]
+                offenders += [f"{rel}:{i} {b}" for b in banned if b in code]
+    assert not offenders, f"staging outside _util.stage: {offenders}"

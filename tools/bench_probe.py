@@ -1,4 +1,4 @@
-"""Bench-shaped session probe: reproduce in-bench-only timing effects.
+"""Bench-shaped session probe: per-query timing, and in-bench-only effects.
 
 Usage:
     python tools/bench_probe.py [--prefix N] [--index] [--labels] \
@@ -11,8 +11,12 @@ same warmup, then optionally replays bench state:
   --prefix N run the first N HEADLINE queries with the bench's _clear sweep
 
 then times each <target> query R times (default 3) with the bench's _clear
-between runs. Markers are printed to stderr with wall-clock timestamps so
-DAGScheduler error bursts in the log can be attributed to a query.
+between runs. With no replay flag this is the low-noise per-query timer:
+a fresh JVM holding only the requested queries, so the long-session
+GC/python-worker stall class cannot fire, and the min of R cold runs is
+the number a plan change has to move. Markers are printed to stderr with
+wall-clock timestamps so DAGScheduler error bursts in the log can be
+attributed to a query.
 """
 
 from __future__ import annotations
@@ -64,18 +68,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     specs = load_all()
 
-    def _run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    def _clear() -> None:
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-
     _mark("warmup start")
-    _run(specs["events_filtered_topk"].fn(spark, SF_DIR))
+    bench._run(specs["events_filtered_topk"].fn(spark, SF_DIR))
     bench._warm_python_workers(spark)
-    _clear()
+    bench._clear(spark)
     _mark("warmup done")
 
     if do_index:
@@ -85,21 +81,21 @@ def main() -> None:
         _ivf_base = nz_base(_table(spark, SF_DIR, "embeddings"))
         kmeans_centroids(_ivf_base, cache_key=("ivf", SF_DIR))
         _mark(f"index build done {time.time()-t0:.3f}s")
-        _clear()
+        bench._clear(spark)
 
     if do_labels:
         from bigdatatiler_spark.operators.graph import old_labels_path
         t0 = time.time()
         old_labels_path(spark, SF_DIR)
         _mark(f"label store done {time.time()-t0:.3f}s")
-        _clear()
+        bench._clear(spark)
 
     for name in bench.HEADLINE[:prefix_n]:
         spark.sparkContext.setJobDescription(f"prefix: {name}")
         t0 = time.time()
-        _run(specs[name].fn(spark, SF_DIR))
+        bench._run(specs[name].fn(spark, SF_DIR))
         _mark(f"prefix {name} {time.time()-t0:.3f}s")
-        _clear()
+        bench._clear(spark)
 
     out: dict[str, list[float]] = {}
     for name in targets:
@@ -108,11 +104,11 @@ def main() -> None:
             spark.sparkContext.setJobDescription(f"target: {name} rep{r}")
             _mark(f"target {name} rep{r} start")
             t0 = time.time()
-            _run(specs[name].fn(spark, SF_DIR))
+            bench._run(specs[name].fn(spark, SF_DIR))
             dt = round(time.time() - t0, 3)
             _mark(f"target {name} rep{r} done {dt}s")
             runs.append(dt)
-            _clear()
+            bench._clear(spark)
         out[name] = runs
     print(json.dumps(out))
 

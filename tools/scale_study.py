@@ -158,6 +158,7 @@ def main() -> int:
     ):
         build(dest=DEST, disjoint=disjoint)
 
+    from bench import _clear, _run
     from bigdatatiler_spark.registry import load_all
     from bigdatatiler_spark.session import get_spark
 
@@ -168,13 +169,9 @@ def main() -> int:
     specs = load_all()
 
     def run(name: str, sf_dir: str) -> float:
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        _clear(spark)
         t0 = time.time()
-        specs[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        _run(specs[name].fn(spark, sf_dir))
         return round(time.time() - t0, 3)
 
     # warmup (JVM + python workers)

@@ -65,16 +65,11 @@ def worker() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     specs = load_all()
 
-    def _clear() -> None:
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-
     import bench
 
     bench._run(specs["events_filtered_topk"].fn(spark, sf_dir))
     bench._warm_python_workers(spark)
-    _clear()
+    bench._clear(spark)
     out = {}
     for name in names:
         runs = []
@@ -82,7 +77,7 @@ def worker() -> int:
             t0 = time.time()
             bench._run(specs[name].fn(spark, sf_dir))
             runs.append(round(time.time() - t0, 3))
-            _clear()
+            bench._clear(spark)
         out[name] = min(runs)
         print(f"# local[{cpus}] {name}: min={min(runs)} runs={runs}",
               file=sys.stderr, flush=True)
