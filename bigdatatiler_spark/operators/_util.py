@@ -204,14 +204,11 @@ def stage(df: DataFrame, mode: str = "shared") -> DataFrame:
     if mode == "reliable":
         if df.sparkSession.sparkContext.getCheckpointDir() is None:
             raise ValueError(
-                "lineage_cut='reliable' needs spark.sparkContext.setCheckpointDir "
+                "reliable staging needs spark.sparkContext.setCheckpointDir "
                 "(a fault-tolerant path on a real cluster)"
             )
         return df.checkpoint()
-    raise ValueError(
-        "stage mode must be 'shared', 'round' or 'reliable' (graph loops: "
-        f"lineage_cut 'local' or 'reliable'), got {mode!r}"
-    )
+    raise ValueError(f"stage mode must be 'shared', 'round' or 'reliable', got {mode!r}")
 
 
 def distributed_rank(df, order_cols, rank_name: str = "rn", n_buckets: int = 32):

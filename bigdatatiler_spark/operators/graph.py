@@ -39,12 +39,22 @@ from .dedup import _SHINGLED_SQL, minhash_bands, minhash_bands_sql
 MAX_ITERS = 15
 
 
+def _loop_mode(lineage_cut: str) -> str:
+    """The ``stage`` mode for a loop's ``lineage_cut``: ``"local"`` is a
+    lazy per-round cut, ``"reliable"`` the fault-tolerant checkpoint."""
+    if lineage_cut not in ("local", "reliable"):
+        raise ValueError(f"lineage_cut must be 'local' or 'reliable', got {lineage_cut!r}")
+    return "round" if lineage_cut == "local" else "reliable"
+
+
 def _band_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash band-mate candidate pairs as undirected (a, b) edges — the
     shared input of both clustering algorithms (same banding kernel as
     dedup_minhash_lsh's candidate stage)."""
     from .dedup import _shingled
 
+    # lazy although the self-join below reads it twice, against stage's
+    # "round" rule; kept pending the ROADMAP item 3 eager-flip A/B
     bands = stage(minhash_bands(_shingled(spark, sf_dir)), "round")
     a, b = bands.alias("a"), bands.alias("b")
     return (
@@ -85,7 +95,7 @@ def connected_components(
       loop survives executor loss. The per-round write is labels+edges
       only, not the upstream corpus. This is the 100 TB setting.
     """
-    mode = "round" if lineage_cut == "local" else lineage_cut
+    mode = _loop_mode(lineage_cut)
 
     fwd = edges.select(
         F.col(node_col_a).alias("src"), F.col(node_col_b).alias("dst")
@@ -158,7 +168,7 @@ def connected_components_star(
     Fixpoint = forest of stars rooted at each component's min node, so
     the final edge list IS the (node, cluster_id) mapping.
     """
-    mode = "round" if lineage_cut == "local" else lineage_cut
+    mode = _loop_mode(lineage_cut)
 
     def sig(df: DataFrame) -> tuple:
         """Cheap set signature (count, Σ xxhash64 as exact decimal) for the
@@ -818,7 +828,7 @@ def bfs_hops(
     ``node`` column. Seeds themselves emit hops = 0 whether or not they
     appear in the graph (an isolated seed is still distance 0 from
     itself)."""
-    mode = "round" if lineage_cut == "local" else lineage_cut
+    mode = _loop_mode(lineage_cut)
 
     fwd = edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     both = stage(
@@ -924,7 +934,7 @@ def kcore_peel(
     """(node, degree): nodes surviving `rounds` peels at threshold k,
     with their degree in the induced subgraph after the last peel.
     ``edges`` rows are undirected (a, b) pairs."""
-    mode = "round" if lineage_cut == "local" else lineage_cut
+    mode = _loop_mode(lineage_cut)
 
     fwd = edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     sym = stage(

@@ -6,7 +6,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from bigdatatiler_spark.operators.graph import connected_components
+from bigdatatiler_spark.operators.graph import (
+    bfs_hops,
+    connected_components,
+    connected_components_star,
+    kcore_peel,
+)
 
 
 def _clusters(spark, edges, **kw):
@@ -48,6 +53,25 @@ def test_reliable_lineage_cut_mode(spark, tmp_path):
 def test_invalid_lineage_cut_rejected(spark):
     with pytest.raises(ValueError, match="lineage_cut"):
         _clusters(spark, [(1, 2)], lineage_cut="bogus")
+
+
+@pytest.mark.parametrize("cut", ["round", "shared"])
+@pytest.mark.parametrize(
+    "loop",
+    [
+        lambda e, cut: connected_components(e, "a", "b", lineage_cut=cut),
+        lambda e, cut: connected_components_star(e, "a", "b", lineage_cut=cut),
+        lambda e, cut: bfs_hops(e, e.select(F.col("a").alias("node")), lineage_cut=cut),
+        lambda e, cut: kcore_peel(e, lineage_cut=cut),
+    ],
+    ids=["cc", "cc_star", "bfs", "kcore"],
+)
+def test_lineage_cut_takes_only_loop_values(spark, loop, cut):
+    """Every loop accepts exactly 'local' and 'reliable': the staging
+    helper's own mode names are not part of the loops' API."""
+    edges = spark.createDataFrame([(1, 2)], ["a", "b"])
+    with pytest.raises(ValueError, match="lineage_cut"):
+        loop(edges, cut)
 
 
 def _star_clusters(spark, edges, **kw):
