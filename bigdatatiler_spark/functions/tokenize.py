@@ -1,8 +1,8 @@
 """Tokenizers for the text-analysis surface.
 
 Two tiers (the brief's "whitespace + a BPE-ish regex"):
-- whitespace: ``F.split`` on the normalized text (used throughout
-  operators/text.py);
+- whitespace: ``F.split`` on the normalized text, written inline
+  throughout operators/text.py;
 - BPE-ish regex: a GPT-2-style pre-tokenizer pattern — runs of letters,
   single digits, runs of non-alphanumerics — via ``regexp_extract_all``.
   Real BPE then merges within these pre-tokens; the pre-token count is
@@ -27,11 +27,6 @@ from ..tables import table
 #: symbol run on DuckDB only (ADVICE r9 — same class as _NORM_SQL).
 BPE_PATTERN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9 \t\n\r\x0B\f]+"
 _BPE_SQL_PATTERN = "[A-Za-z]+|[0-9]|[^A-Za-z0-9 \\t\\n\\r\\x0B\\f]+"
-
-
-def whitespace_tokens(text: Column) -> Column:
-    """Whitespace tokens of the already-normalized text."""
-    return F.split(text, " ")
 
 
 def bpe_pre_tokens(text: Column) -> Column:

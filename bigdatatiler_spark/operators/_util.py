@@ -89,31 +89,6 @@ def finite_or_null(col: str | Column) -> Column:
     return F.when(~F.isnan(c) & ~c.isin(float("inf"), float("-inf")), c)
 
 
-# SQL-side mirrors (DuckDB) of the same discipline, for oracle strings.
-SQL_PRICE = "DECIMAL(10,2)"
-SQL_RATE = "DECIMAL(3,2)"
-
-
-def sql_dec(col: str, typ: str = SQL_PRICE) -> str:
-    return f"CAST({col} AS {typ})"
-
-
-def sql_money_sum(expr: str, alias: str, ndigits: int = 2) -> str:
-    return f"CAST(round(sum({expr}), {ndigits}) AS DOUBLE) AS {alias}"
-
-
-def e_int(x: Column, scale: int, alias: str) -> Column:
-    """floor(x·10^scale) as BIGINT — the tie-free emission for RATIONAL
-    double ratios. round(double, n) half-up ties legitimately diverge
-    between engines (Spark rounds the double's exact decimal expansion;
-    DuckDB multiplies and nearbyints) whenever an int/int quotient lands
-    on an exact decimal midpoint — which small integer denominators
-    (token counts, char counts, powers of two) hit routinely. floor of
-    one correctly-rounded multiply has no tie to disagree on. SQL
-    mirror: CAST(floor((x) * 10^scale) AS BIGINT)."""
-    return F.floor(x * F.lit(float(10**scale))).cast("bigint").alias(alias)
-
-
 def int_ratio(num: Column, den: Column, scale: int, alias: str) -> Column:
     """floor((num·10^scale) / den) for exact-integer num/den — the SQL
     mirror is ``(num * 10^scale) // nullif(den, 0)``. The double

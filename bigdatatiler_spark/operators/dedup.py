@@ -13,8 +13,11 @@ north star), all expressed Spark-first over the ``documents`` /
 
 Scale design (100 TB): the LSH band join IS the scale path — candidate
 generation is an equi-join on (band_id, band_key), linear in corpus size,
-never all-pairs; only candidates pay the exact-Jaccard verification. The
-blocked Jaccard and brute-force cosine variants are the small-side /
+never all-pairs; only candidates pay the exact-Jaccard verification.
+``band_pairs`` (the candidate rule) and ``verified_pairs`` (the e6
+Jaccard check) are the one candidate and verify path: the MinHash
+queries, graph.py's band edges and the streaming near-dedup fold all
+call them. The blocked Jaccard and brute-force cosine variants are the small-side /
 verification kernels; their docstrings note the LSH/IVF upgrade path.
 All hashing is md5-based (not Spark's murmur3 `F.hash`) so signatures are
 engine-independent and oracle-checkable.
@@ -22,11 +25,12 @@ engine-independent and oracle-checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
 from ..tables import table
 from ._util import int_ratio, stage
+from .text import _NORM_SQL, _norm_col
 
 # MinHash parameters: K hashes, B bands of R=2 rows → catches pairs with
 # Jaccard ≳ (1/B)^(1/R) ≈ 0.35; verification threshold keeps true near-dups.
@@ -40,15 +44,6 @@ BLOCKED_COSINE_THRESHOLD = 0.35  # blocked variant keeps a fatter tail (bucketin
 #: hard input bound for the exact all-pairs kernels — above this, refuse and
 #: point at the LSH-blocked sibling rather than launch an O(n²) join
 EXACT_PAIRS_MAX_INPUT = 50_000
-
-# ASCII-only case fold — same rationale as text.py's _NORM_SQL (fuzz 9:
-# JVM vs utf8proc Unicode case mappings diverge on İ / final sigma).
-# Explicit whitespace class, not \s: RE2's \s lacks \x0B (ADVICE r9).
-_NORM_SQL = "translate(trim(regexp_replace(text, '[ \\t\\n\\r\\x0B\\f]+', ' ', 'g')), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')"
-
-
-def _norm_col() -> Column:
-    return F.translate(F.trim(F.regexp_replace("text", r"[ \t\n\r\x0B\f]+", " ")), "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz")
 
 
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -213,6 +208,52 @@ def minhash_bands(sh: DataFrame) -> DataFrame:
     )
 
 
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """(doc_id_1, doc_id_2), doc_id_1 < doc_id_2: the distinct LSH
+    candidate pairs of a (doc_id, band_id, band_key) frame — docs that
+    share any bucket. Pairs that share several bands collapse to one
+    row. The one candidate rule of the MinHash path (the oracles'
+    ``cand`` CTE); the band frame is read twice, so callers stage it."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_id_1"), F.col("b.doc_id").alias("doc_id_2")
+        )
+        .distinct()
+    )
+
+
+def verified_pairs(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(doc_id_1, doc_id_2, jaccard_e6): the ``cand`` pairs whose exact
+    shingle Jaccard reaches MINHASH_THRESHOLD. ``sh`` is the (doc_id, sh)
+    shingle frame, re-joined once per side, so callers stage it."""
+    pairs = cand.join(
+        sh.select(F.col("doc_id").alias("doc_id_1"), F.col("sh").alias("sh1")),
+        "doc_id_1",
+    ).join(
+        sh.select(F.col("doc_id").alias("doc_id_2"), F.col("sh").alias("sh2")),
+        "doc_id_2",
+    )
+    # integer Jaccard on the e6 grid — the rounded-double form is the
+    # midpoint-tie class (union sizes of 2^7·5^b land exactly on half
+    # boundaries); the threshold compares on the same grid
+    jaccard = int_ratio(
+        F.size(F.array_intersect("sh1", "sh2")),
+        F.size(F.array_union("sh1", "sh2")),
+        6,
+        "jaccard_e6",
+    )
+    return pairs.select("doc_id_1", "doc_id_2", jaccard).where(
+        F.col("jaccard_e6") >= int(MINHASH_THRESHOLD * 1000000)
+    )
+
+
 # ── band-bucket blowup guard (r9 verdict item 6) ────────────────────────
 # The 10× scaling study measured the minhash plan at 3.89× wall under a
 # pathologically self-similar replica: every near-identical doc lands in
@@ -339,45 +380,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The shingle frame feeds three plan branches (bands + both sides of
     the verification join) and the band frame two (self-join) — both are
-    cached via lazy local checkpoint so shingling/minhashing runs once,
-    not 3×/2× (and the lineage cut keeps every consumer's plan flat); at
-    100 TB these become staged intermediate tables (write once, read per
-    branch)."""
+    staged so shingling/minhashing runs once, not 3×/2× (and the lineage
+    cut keeps every consumer's plan flat); at 100 TB these become staged
+    intermediate tables (write once, read per branch)."""
     sh = stage(_shingled(spark, sf_dir))
-    bands = stage(minhash_bands(sh))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_1"), F.col("b.doc_id").alias("doc_id_2")
-        )
-        .distinct()
-    )
-    pairs = cand.join(
-        sh.select(F.col("doc_id").alias("doc_id_1"), F.col("sh").alias("sh1")),
-        "doc_id_1",
-    ).join(
-        sh.select(F.col("doc_id").alias("doc_id_2"), F.col("sh").alias("sh2")),
-        "doc_id_2",
-    )
-    # integer Jaccard on the e6 grid — the rounded-double form is the
-    # midpoint-tie class (union sizes of 2^7·5^b land exactly on half
-    # boundaries); the threshold compares on the same grid
-    jaccard = int_ratio(
-        F.size(F.array_intersect("sh1", "sh2")),
-        F.size(F.array_union("sh1", "sh2")),
-        6,
-        "jaccard_e6",
-    )
-    return (
-        pairs.select("doc_id_1", "doc_id_2", jaccard)
-        .where(F.col("jaccard_e6") >= int(MINHASH_THRESHOLD * 1000000))
-    )
+    return verified_pairs(band_pairs(stage(minhash_bands(sh))), sh)
 
 
 def _capped_minhash_oracle() -> str:
@@ -425,37 +432,7 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the driver hash stays exact EVEN when the cap engages."""
     # both frames are read twice (bands self-join, sh re-joined per side)
     sh = stage(_shingled(spark, sf_dir))
-    bands = stage(capped_bands(minhash_bands(sh)))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_1"),
-            F.col("b.doc_id").alias("doc_id_2"),
-        )
-        .distinct()
-    )
-    pairs = cand.join(
-        sh.select(F.col("doc_id").alias("doc_id_1"), F.col("sh").alias("sh1")),
-        "doc_id_1",
-    ).join(
-        sh.select(F.col("doc_id").alias("doc_id_2"), F.col("sh").alias("sh2")),
-        "doc_id_2",
-    )
-    jaccard = int_ratio(
-        F.size(F.array_intersect("sh1", "sh2")),
-        F.size(F.array_union("sh1", "sh2")),
-        6,
-        "jaccard_e6",
-    )
-    return pairs.select("doc_id_1", "doc_id_2", jaccard).where(
-        F.col("jaccard_e6") >= int(MINHASH_THRESHOLD * 1000000)
-    )
+    return verified_pairs(band_pairs(stage(capped_bands(minhash_bands(sh)))), sh)
 
 
 # Incoming-batch split for the incremental variant: every 10th doc plays
@@ -1374,21 +1351,7 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = MINHASH_GROUPS * MINHASH_SLICES
     sh = stage(_shingled(spark, sf_dir))
     sigs = stage(minhash_sigs(sh))
-    bands = minhash_bands(sh)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_1"),
-            F.col("b.doc_id").alias("doc_id_2"),
-        )
-        .distinct()
-    )
+    cand = band_pairs(minhash_bands(sh))
     x = sigs.select(
         F.col("doc_id").alias("doc_id_1"),
         *[F.col(f"s{i}").alias(f"x{i}") for i in range(k)],

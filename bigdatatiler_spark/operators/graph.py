@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
 from ._util import stage
-from .dedup import _SHINGLED_SQL, minhash_bands, minhash_bands_sql
+from .dedup import _SHINGLED_SQL, band_pairs, minhash_bands, minhash_bands_sql
 
 MAX_ITERS = 15
 
@@ -49,23 +49,15 @@ def _loop_mode(lineage_cut: str) -> str:
 
 def _band_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash band-mate candidate pairs as undirected (a, b) edges — the
-    shared input of both clustering algorithms (same banding kernel as
-    dedup_minhash_lsh's candidate stage)."""
+    shared input of both clustering algorithms (``band_pairs``, the
+    candidate rule of dedup_minhash_lsh, renamed)."""
     from .dedup import _shingled
 
-    # lazy although the self-join below reads it twice, against stage's
+    # lazy although band_pairs' self-join reads it twice, against stage's
     # "round" rule; kept pending the ROADMAP item 3 eager-flip A/B
     bands = stage(minhash_bands(_shingled(spark, sf_dir)), "round")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
-        .distinct()
+    return band_pairs(bands).select(
+        F.col("doc_id_1").alias("a"), F.col("doc_id_2").alias("b")
     )
 
 

@@ -402,7 +402,7 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the small-SF fixture is a single parquet split, which would serialize
     # it on one core AND recompute it per self-join side. Split-normalize
     # (conditional — no exchange on a corpus that already has splits) and
-    # cache (lazy local checkpoint): one distributed hash pass, read twice. (At 100 TB the hash
+    # stage it: one distributed hash pass, read twice. (At 100 TB the hash
     # rides the decode stage — ahash_bands_stub.)
     from ._util import ensure_parallelism
 

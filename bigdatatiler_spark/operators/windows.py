@@ -9,7 +9,7 @@ these are.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
 from ..tables import table
@@ -772,6 +772,36 @@ def events_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 PATH_LEN = 5  #: leading events kept per session path
 
 
+def _sessions(ev: DataFrame, *extra_cols: Column) -> DataFrame:
+    """(user_id, ts_us, event_id, event_type, *extra_cols, new_sess,
+    sess_id): the 30-min gaps-and-islands sessionizer over events ``ev``
+    with non-NULL ts, in one user-keyed window pass. In (ts_us, event_id)
+    order, a total order, a row starts a session when it is the user's
+    first or its lag is MORE than 30 minutes (exactly 30 minutes stays in
+    the session, as in events_session_windows); sess_id is the running
+    count of starts. The oracles' flagged/numbered CTEs are the same rule."""
+    ev = ev.withColumn("ts_us", F.unix_micros("ts"))
+    w = Window.partitionBy("user_id").orderBy(F.asc("ts_us"), F.asc("event_id"))
+    flagged = ev.select(
+        "user_id",
+        "ts_us",
+        "event_id",
+        "event_type",
+        *extra_cols,
+        F.when(
+            F.lag("ts_us").over(w).isNull()
+            | (F.col("ts_us") - F.lag("ts_us").over(w) > 30 * 60 * 1_000_000),
+            1,
+        )
+        .otherwise(0)
+        .alias("new_sess"),
+    )
+    return flagged.withColumn(
+        "sess_id",
+        F.sum("new_sess").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+
+
 @register(
     "events_session_paths",
     oracle=f"""
@@ -810,27 +840,7 @@ def events_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     collection order is irrelevant. Two user-keyed window passes + two
     aggs; path cardinality (≤ |types|^{PATH_LEN}) keeps the final agg
     broadcast-small."""
-    ev = table(spark, sf_dir, "events").where(F.col("ts").isNotNull()).withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts_us"), F.asc("event_id"))
-    flagged = ev.select(
-        "user_id",
-        "ts_us",
-        "event_id",
-        "event_type",
-        F.when(
-            F.lag("ts_us").over(w).isNull()
-            | (F.col("ts_us") - F.lag("ts_us").over(w) > 30 * 60 * 1_000_000),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_sess"),
-    )
-    numbered = flagged.withColumn(
-        "sess_id",
-        F.sum("new_sess").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
+    numbered = _sessions(table(spark, sf_dir, "events").where(F.col("ts").isNotNull()))
     paths = (
         numbered.groupBy("user_id", "sess_id")
         .agg(
@@ -1784,27 +1794,9 @@ def events_first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     """Revenue attributed to each session's first event type (see block
     comment). Shares the session kernel and boundary semantics with
     events_session_windows / events_session_paths."""
-    ev = table(spark, sf_dir, "events").where(F.col("ts").isNotNull()).withColumn(
-        "ts_us", F.unix_micros("ts")
-    )
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts_us"), F.asc("event_id"))
-    flagged = ev.select(
-        "user_id",
-        "ts_us",
-        "event_id",
-        "event_type",
+    numbered = _sessions(
+        table(spark, sf_dir, "events").where(F.col("ts").isNotNull()),
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
-        F.when(
-            F.lag("ts_us").over(w).isNull()
-            | (F.col("ts_us") - F.lag("ts_us").over(w) > 30 * 60 * 1_000_000),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_sess"),
-    )
-    numbered = flagged.withColumn(
-        "sess_id",
-        F.sum("new_sess").over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
     is_purchase = F.col("event_type") == "purchase"
     sess = (
@@ -1990,27 +1982,11 @@ def events_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline rides a single user-keyed exchange lineage before the final
     |types|-row rollup. Micro-cent credits stay < 2^63 through sf100
     (total purchase cents × 1e6)."""
-    ev = table(spark, sf_dir, "events").where(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    ).withColumn("ts_us", F.unix_micros("ts"))
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts_us"), F.asc("event_id"))
-    flagged = ev.select(
-        "user_id",
-        "ts_us",
-        "event_id",
-        "event_type",
+    numbered = _sessions(
+        table(spark, sf_dir, "events").where(
+            F.col("user_id").isNotNull() & F.col("ts").isNotNull()
+        ),
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
-        F.when(
-            F.lag("ts_us").over(w).isNull()
-            | (F.col("ts_us") - F.lag("ts_us").over(w) > 30 * 60 * 1_000_000),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_sess"),
-    )
-    numbered = flagged.withColumn(
-        "sess_id",
-        F.sum("new_sess").over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
     typed = numbered.groupBy("user_id", "sess_id", "event_type").agg(
         F.count(F.lit(1)).alias("n_touch"),

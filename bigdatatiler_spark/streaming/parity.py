@@ -1,6 +1,6 @@
 """Batch-checkable parity query for the streaming pipeline.
 
-The streaming family (ingest/joins/reassemble/stateful) was pytest-only
+The streaming family (ingest/joins/reassemble) was pytest-only
 through round 4 — the driver's correctness harness never executed a
 Structured Streaming plan. This module closes that gap: the registered
 query runs the REAL streaming engine (micro-batch execution,
@@ -674,12 +674,7 @@ def neardedup_apply_batch(
     pipeline appends to."""
     import os
 
-    from ..operators.dedup import (
-        MINHASH_THRESHOLD,
-        minhash_bands,
-        shingle_frame,
-    )
-    from ..operators._util import int_ratio
+    from ..operators.dedup import minhash_bands, shingle_frame, verified_pairs
 
     ids_p = os.path.join(state_dir, "ids")
     sh_p = os.path.join(state_dir, "sh")
@@ -700,6 +695,8 @@ def neardedup_apply_batch(
     sh_new = stage(shingle_frame(new))
     bands_new = stage(minhash_bands(sh_new))
 
+    # band_pairs' rule without its distinct: the union below is
+    # distinct'ed once, so a distinct here would add an aggregate
     a, b = bands_new.alias("a"), bands_new.alias("b")
     cand = (
         a.join(
@@ -732,22 +729,7 @@ def neardedup_apply_batch(
     all_sh = sh_new
     if have_index and sh_parts:
         all_sh = all_sh.unionByName(spark.read.parquet(*sh_parts))
-    pairs = cand.join(
-        all_sh.select(F.col("doc_id").alias("doc_id_1"), F.col("sh").alias("sh1")),
-        "doc_id_1",
-    ).join(
-        all_sh.select(F.col("doc_id").alias("doc_id_2"), F.col("sh").alias("sh2")),
-        "doc_id_2",
-    )
-    jaccard = int_ratio(
-        F.size(F.array_intersect("sh1", "sh2")),
-        F.size(F.array_union("sh1", "sh2")),
-        6,
-        "jaccard_e6",
-    )
-    out = pairs.select("doc_id_1", "doc_id_2", jaccard).where(
-        F.col("jaccard_e6") >= int(MINHASH_THRESHOLD * 1000000)
-    )
+    out = verified_pairs(cand, all_sh)
     if batch_id is None:
         # legacy append path (direct callers without a batch id): whole-
         # batch redelivery is still idempotent via the ids/ anti-join

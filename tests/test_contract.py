@@ -206,6 +206,27 @@ def test_no_oracle_names_stay_out_of_window():
     assert not no_oracle & set(ledger["never_certified"])
 
 
+def _package_code():
+    """(rel path, line number, code, enclosing top-level def) for every
+    line of the package, with ``#`` comments stripped."""
+    import glob
+    import re
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "bigdatatiler_spark")
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+        scope = "<module>"
+        with open(path) as f:
+            for i, line in enumerate(f, 1):
+                code = line.split("#")[0]
+                m = re.match(r"(?:def|class) (\w+)", code)
+                if m:
+                    scope = m.group(1)
+                elif re.match(r"[A-Za-z_]", code):
+                    scope = "<module>"
+                yield rel, i, code, scope
+
+
 def test_no_bare_persist_in_package():
     """r11 verdict item 3: a bare ``.persist()`` accumulates CacheManager
     entries across queries in a long-lived session with no unpersist
@@ -214,18 +235,33 @@ def test_no_bare_persist_in_package():
     block release when the RDD is dereferenced) — pin that the pattern
     stays out, and that ``stage`` stays the package's ONE staging call:
     no ``.localCheckpoint(`` or ``.checkpoint(`` anywhere else."""
-    import glob
-
-    pkg = os.path.join(os.path.dirname(__file__), "..", "bigdatatiler_spark")
-    home = os.path.join("operators", "_util.py")
     offenders = []
-    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
-        rel = os.path.relpath(path, pkg)
+    for rel, i, code, _ in _package_code():
         banned = [".persist()"]
-        if rel != home:
+        if rel != "operators/_util.py":
             banned += [".localCheckpoint(", ".checkpoint("]
-        with open(path) as f:
-            for i, line in enumerate(f, 1):
-                code = line.split("#")[0]
-                offenders += [f"{rel}:{i} {b}" for b in banned if b in code]
+        offenders += [f"{rel}:{i} {b}" for b in banned if b in code]
     assert not offenders, f"staging outside _util.stage: {offenders}"
+
+
+def test_shared_kernels_have_one_home():
+    """The LSH candidate self-join predicate lives in ``dedup.band_pairs``
+    (plus streaming parity's documented non-distinct join) and the 30-min
+    session gap rule in ``windows._sessions``; a hand-written copy
+    elsewhere is a second way to do the same thing."""
+    import re
+
+    band = re.compile(r'"a\.band_key"\)\s*==\s*F\.col\("b\.band_key"')
+    homes = {"band": [], "gap": []}
+    for rel, _, code, scope in _package_code():
+        if band.search(code):
+            homes["band"].append(f"{rel}::{scope}")
+        if "30 * 60 * 1_000_000" in code:
+            homes["gap"].append(f"{rel}::{scope}")
+    assert homes == {
+        "band": [
+            "operators/dedup.py::band_pairs",
+            "streaming/parity.py::neardedup_apply_batch",
+        ],
+        "gap": ["operators/windows.py::_sessions"],
+    }

@@ -4,7 +4,6 @@ transformation; plus stateful cross-batch chunk reassembly."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from bigdatatiler_spark.streaming.ingest import (
@@ -142,58 +141,6 @@ def test_stateful_reassembly_dedups_redelivered_chunks(spark, tmp_path):
     rows = spark.sql("SELECT * FROM reasm_redeliver").collect()
     assert len(rows) == 1
     assert (rows[0]["payload"], rows[0]["n_chunks"]) == ("AAABBBCCC", 3)
-
-
-def test_transform_with_state_reassembly(spark, tmp_path):
-    """Same cross-batch merge contract on the transformWithState API
-    (typed ListState/ValueState + timers, RocksDB state store)."""
-    from bigdatatiler_spark.streaming.stateful import (
-        ROCKSDB_PROVIDER,
-        reassemble_with_state,
-        runtime_available,
-    )
-
-    if not runtime_available():
-        pytest.skip("transformWithState needs protobuf (absent in container)")
-
-    src = str(tmp_path / "chunks")
-    batch1 = spark.createDataFrame(
-        [(1, 1, "BBB", 3), (1, 0, "AAA", 3), (2, 0, "solo", 1)],
-        ["record_id", "split_index", "chunk", "total_splits"],
-    )
-    batch2 = spark.createDataFrame(
-        [(1, 2, "CCC", 3)],
-        ["record_id", "split_index", "chunk", "total_splits"],
-    )
-    batch1.coalesce(1).write.mode("append").parquet(src)
-    batch2.coalesce(1).write.mode("append").parquet(src)
-
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(prov_key, ROCKSDB_PROVIDER)
-    try:
-        stream = spark.readStream.schema(batch1.schema).option(
-            "maxFilesPerTrigger", 1
-        ).parquet(src)
-        q = (
-            reassemble_with_state(stream)
-            .writeStream.format("memory")
-            .queryName("tws_test")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
-    got = {
-        r["record_id"]: (r["payload"], r["n_chunks"])
-        for r in spark.sql("SELECT * FROM tws_test").collect()
-    }
-    assert got == {1: ("AAABBBCCC", 3), 2: ("solo", 1)}
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
