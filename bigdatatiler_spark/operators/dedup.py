@@ -213,7 +213,7 @@ def band_pairs(bands: DataFrame) -> DataFrame:
     candidate pairs of a (doc_id, band_id, band_key) frame — docs that
     share any bucket. Pairs that share several bands collapse to one
     row. The one candidate rule of the MinHash path (the oracles'
-    ``cand`` CTE); the band frame is read twice, so callers stage it."""
+    ``cand`` CTE). Its self-join reads ``bands`` twice."""
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -232,7 +232,7 @@ def band_pairs(bands: DataFrame) -> DataFrame:
 def verified_pairs(cand: DataFrame, sh: DataFrame) -> DataFrame:
     """(doc_id_1, doc_id_2, jaccard_e6): the ``cand`` pairs whose exact
     shingle Jaccard reaches MINHASH_THRESHOLD. ``sh`` is the (doc_id, sh)
-    shingle frame, re-joined once per side, so callers stage it."""
+    shingle frame; it is read once per side."""
     pairs = cand.join(
         sh.select(F.col("doc_id").alias("doc_id_1"), F.col("sh").alias("sh1")),
         "doc_id_1",
