@@ -17,8 +17,13 @@ never all-pairs; only candidates pay the exact-Jaccard verification.
 ``band_pairs`` (the candidate rule) and ``verified_pairs`` (the e6
 Jaccard check) are the one candidate and verify path: the MinHash
 queries, graph.py's band edges and the streaming near-dedup fold all
-call them. The blocked Jaccard and brute-force cosine variants are the small-side /
-verification kernels; their docstrings note the LSH/IVF upgrade path.
+call them. Their DuckDB twins are the oracle fragments: the
+``shingled`` CTE (``_SHINGLED_SQL``), ``minhash_bands_sql`` (``sigs``
+and ``bands``), ``band_pairs_sql`` (``cand``) and ``verified_pairs_sql``
+(``verified``); every band-derived oracle here, in graph.py and in
+linkgraph.py is built from them. The blocked Jaccard and brute-force
+cosine variants are the small-side / verification kernels; their
+docstrings note the LSH/IVF upgrade path.
 All hashing is md5-based (not Spark's murmur3 `F.hash`) so signatures are
 engine-independent and oracle-checkable.
 """
@@ -73,11 +78,15 @@ def shingle_frame(docs: DataFrame) -> DataFrame:
     return d.select("doc_id", shingles.alias("sh"))
 
 
+# The shared oracle CTEs (``shingled`` here, ``sigs`` and ``bands`` in
+# minhash_bands_sql) are MATERIALIZED: DuckDB otherwise inlines a CTE at
+# every reference, so each band, join side and recursion step re-hashed
+# every shingle.
 _SHINGLED_SQL = f"""
   norm AS (
     SELECT doc_id, string_split({_NORM_SQL}, ' ') AS toks FROM documents
   ),
-  shingled AS (
+  shingled AS MATERIALIZED (
     SELECT doc_id,
            list_distinct([array_to_string(toks[i:i+2], ' ')
                           for i in generate_series(1, len(toks) - 2)]) AS sh
@@ -151,13 +160,44 @@ def minhash_bands_sql() -> str:
            {hash_cols}
       FROM shingled
     ),
-    sigs AS (
+    sigs AS MATERIALIZED (
       SELECT doc_id,
            {sig_cols}
       FROM hashed
     ),
-    bands AS (
+    bands AS MATERIALIZED (
       {band_selects}
+    )"""
+
+
+def band_pairs_sql(source: str = "bands") -> str:
+    """DuckDB CTE ``cand(doc_id_1, doc_id_2)``: the oracle twin of
+    ``band_pairs`` over a (doc_id, band_id, band_key) CTE named
+    ``source`` (the capped oracle passes its ``capped`` CTE)."""
+    return f"""
+    cand AS (
+      SELECT DISTINCT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2
+      FROM {source} a
+      JOIN {source} b ON a.band_id = b.band_id AND a.band_key = b.band_key
+                  AND a.doc_id < b.doc_id
+    )"""
+
+
+def verified_pairs_sql() -> str:
+    """DuckDB CTE ``verified(doc_id_1, doc_id_2, jaccard_e6)``: the
+    oracle twin of ``verified_pairs`` — the ``cand`` pairs whose e6
+    shingle Jaccard over the ``shingled`` CTE reaches MINHASH_THRESHOLD."""
+    jaccard = (
+        "(len(list_intersect(x.sh, y.sh)) * 1000000)"
+        " // len(list_distinct(list_concat(x.sh, y.sh)))"
+    )
+    return f"""
+    verified AS (
+      SELECT c.doc_id_1, c.doc_id_2, {jaccard} AS jaccard_e6
+      FROM cand c
+      JOIN shingled x ON c.doc_id_1 = x.doc_id
+      JOIN shingled y ON c.doc_id_2 = y.doc_id
+      WHERE {jaccard} >= {int(MINHASH_THRESHOLD * 1000000)}
     )"""
 
 
@@ -348,23 +388,9 @@ def _minhash_oracle() -> str:
     return f"""
     WITH {_SHINGLED_SQL},
     {minhash_bands_sql()},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2
-      FROM bands a
-      JOIN bands b ON a.band_id = b.band_id AND a.band_key = b.band_key
-                  AND a.doc_id < b.doc_id
-    )
-    SELECT
-      c.doc_id_1,
-      c.doc_id_2,
-      (len(list_intersect(x.sh, y.sh)) * 1000000)
-        // len(list_distinct(list_concat(x.sh, y.sh))) AS jaccard_e6
-    FROM cand c
-    JOIN shingled x ON c.doc_id_1 = x.doc_id
-    JOIN shingled y ON c.doc_id_2 = y.doc_id
-    WHERE (len(list_intersect(x.sh, y.sh)) * 1000000)
-            // len(list_distinct(list_concat(x.sh, y.sh)))
-          >= {int(MINHASH_THRESHOLD * 1000000)}
+    {band_pairs_sql()},
+    {verified_pairs_sql()}
+    SELECT doc_id_1, doc_id_2, jaccard_e6 FROM verified
     """
 
 
@@ -401,23 +427,9 @@ def _capped_minhash_oracle() -> str:
         FROM bands
       ) WHERE rk <= {BAND_BUCKET_CAP}
     ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2
-      FROM capped a
-      JOIN capped b ON a.band_id = b.band_id AND a.band_key = b.band_key
-                   AND a.doc_id < b.doc_id
-    )
-    SELECT
-      c.doc_id_1,
-      c.doc_id_2,
-      (len(list_intersect(x.sh, y.sh)) * 1000000)
-        // len(list_distinct(list_concat(x.sh, y.sh))) AS jaccard_e6
-    FROM cand c
-    JOIN shingled x ON c.doc_id_1 = x.doc_id
-    JOIN shingled y ON c.doc_id_2 = y.doc_id
-    WHERE (len(list_intersect(x.sh, y.sh)) * 1000000)
-            // len(list_distinct(list_concat(x.sh, y.sh)))
-          >= {int(MINHASH_THRESHOLD * 1000000)}
+    {band_pairs_sql("capped")},
+    {verified_pairs_sql()}
+    SELECT doc_id_1, doc_id_2, jaccard_e6 FROM verified
     """
 
 
@@ -441,30 +453,24 @@ INCREMENTAL_BATCH_MOD = 10
 
 
 def _incremental_oracle() -> str:
+    # its own candidate join: new × old, not the symmetric self-join
     return f"""
     WITH {_SHINGLED_SQL},
     {minhash_bands_sql()},
     cand AS (
-      SELECT DISTINCT n.doc_id AS doc_id, o.doc_id AS dup_of
+      SELECT DISTINCT n.doc_id AS doc_id_1, o.doc_id AS doc_id_2
       FROM bands n
       JOIN bands o ON n.band_id = o.band_id AND n.band_key = o.band_key
       WHERE n.doc_id % {INCREMENTAL_BATCH_MOD} = 0
         AND o.doc_id % {INCREMENTAL_BATCH_MOD} <> 0
-    )
+    ),
+    {verified_pairs_sql()}
     SELECT doc_id, dup_of, jaccard_e6 FROM (
-      SELECT s.doc_id, s.dup_of, s.jaccard_e6,
+      SELECT doc_id_1 AS doc_id, doc_id_2 AS dup_of, jaccard_e6,
              row_number() OVER (
-               PARTITION BY s.doc_id ORDER BY s.jaccard_e6 DESC, s.dup_of ASC
+               PARTITION BY doc_id_1 ORDER BY jaccard_e6 DESC, doc_id_2 ASC
              ) AS rn
-      FROM (
-        SELECT c.doc_id, c.dup_of,
-               (len(list_intersect(x.sh, y.sh)) * 1000000)
-                 // len(list_distinct(list_concat(x.sh, y.sh))) AS jaccard_e6
-        FROM cand c
-        JOIN shingled x ON c.doc_id = x.doc_id
-        JOIN shingled y ON c.dup_of = y.doc_id
-      ) s
-      WHERE s.jaccard_e6 >= {int(MINHASH_THRESHOLD * 1000000)}
+      FROM verified
     ) WHERE rn = 1
     """
 
@@ -1314,15 +1320,11 @@ def _minhash_audit_oracle() -> str:
     match_sum = " + ".join(
         f"(CASE WHEN x.s{i} = y.s{i} THEN 1 ELSE 0 END)" for i in range(k)
     )
+    # its own verify: permille estimate beside exact Jaccard, no threshold
     return f"""
     WITH {_SHINGLED_SQL},
     {minhash_bands_sql()},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2
-      FROM bands a
-      JOIN bands b ON a.band_id = b.band_id AND a.band_key = b.band_key
-                  AND a.doc_id < b.doc_id
-    )
+    {band_pairs_sql()}
     SELECT
       c.doc_id_1,
       c.doc_id_2,

@@ -18,7 +18,10 @@ Iterations needed = graph diameter (near-dup clusters are shallow — a
 handful of rounds); MAX_ITERS bounds the worst case. The DuckDB oracle
 computes the same fixpoint declaratively with a recursive CTE (min label
 over the reachable set), so the iterative implementation is verified
-against an independent formulation.
+against an independent formulation. Its oracle fragments live here once:
+``edges_sql`` (the symmetric ``edges`` CTE) and ``components_sql``
+(``edges``, the ``reach`` recursion and the min label ``comp``), read
+over dedup.py's ``band_pairs_sql`` or ``verified_pairs_sql`` pairs.
 
 Why not Spark's own recursive CTE (new in Spark 4)? Checked: it accepts
 only UNION ALL recursion ([UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE]), and
@@ -34,7 +37,14 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
 from ._util import stage
-from .dedup import _SHINGLED_SQL, band_pairs, minhash_bands, minhash_bands_sql
+from .dedup import (
+    _SHINGLED_SQL,
+    band_pairs,
+    band_pairs_sql,
+    minhash_bands,
+    minhash_bands_sql,
+    verified_pairs_sql,
+)
 
 MAX_ITERS = 15
 
@@ -240,27 +250,40 @@ def connected_components_star(
     ).select("node", F.coalesce("label", "node").alias("cluster_id"))
 
 
-def _cc_oracle() -> str:
+def edges_sql(pairs: str = "cand") -> str:
+    """DuckDB CTE ``edges(a, b)``: both orientations of the (doc_id_1,
+    doc_id_2) pair CTE named ``pairs``."""
     return f"""
-    WITH RECURSIVE {_SHINGLED_SQL},
-    {minhash_bands_sql()},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x
-      JOIN bands y ON x.band_id = y.band_id AND x.band_key = y.band_key
-                  AND x.doc_id < y.doc_id
-    ),
     edges AS (
-      SELECT a, b FROM cand UNION SELECT b, a FROM cand
-    ),
+      SELECT doc_id_1 AS a, doc_id_2 AS b FROM {pairs}
+      UNION
+      SELECT doc_id_2, doc_id_1 FROM {pairs}
+    )"""
+
+
+def components_sql(pairs: str = "cand") -> str:
+    """DuckDB CTEs ``edges``, ``reach`` and ``comp(doc_id, cluster_id)``:
+    the oracle twin of ``connected_components`` over the pair CTE named
+    ``pairs`` — the min label over each node's reachable set, by a
+    UNION-deduplicated recursion (the query needs ``WITH RECURSIVE``)."""
+    return f"""{edges_sql(pairs)},
     reach(node, label) AS (
       SELECT a, a FROM edges
       UNION
       SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-    )
-    SELECT node AS doc_id, min(label) AS cluster_id
-    FROM reach
-    GROUP BY node
+    ),
+    comp AS (
+      SELECT node AS doc_id, min(label) AS cluster_id FROM reach GROUP BY node
+    )"""
+
+
+def _cc_oracle() -> str:
+    return f"""
+    WITH RECURSIVE {_SHINGLED_SQL},
+    {minhash_bands_sql()},
+    {band_pairs_sql()},
+    {components_sql()}
+    SELECT doc_id, cluster_id FROM comp
     """
 
 
@@ -442,22 +465,9 @@ def _cluster_hist_oracle() -> str:
     return f"""
     WITH RECURSIVE {_SHINGLED_SQL},
     {minhash_bands_sql()},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x
-      JOIN bands y ON x.band_id = y.band_id AND x.band_key = y.band_key
-                  AND x.doc_id < y.doc_id
-    ),
-    edges AS (
-      SELECT a, b FROM cand UNION SELECT b, a FROM cand
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-    ),
-    cc AS (SELECT node, min(label) AS cluster_id FROM reach GROUP BY node),
-    sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM cc GROUP BY cluster_id),
+    {band_pairs_sql()},
+    {components_sql()},
+    sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM comp GROUP BY cluster_id),
     hist AS (
       SELECT cluster_size,
              count(*) AS n_clusters,
@@ -469,7 +479,7 @@ def _cluster_hist_oracle() -> str:
              count(DISTINCT s.doc_id) AS n_clusters,
              count(DISTINCT s.doc_id) AS n_docs
       FROM shingled s
-      WHERE NOT EXISTS (SELECT 1 FROM cc WHERE cc.node = s.doc_id)
+      WHERE NOT EXISTS (SELECT 1 FROM comp c WHERE c.doc_id = s.doc_id)
     )
     SELECT cluster_size, n_clusters, n_docs FROM hist
     UNION ALL
@@ -525,39 +535,13 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cc_verified_oracle() -> str:
-    from .dedup import MINHASH_THRESHOLD
-
-    jaccard = (
-        "(len(list_intersect(x.sh, y.sh)) * 1000000)"
-        " // len(list_distinct(list_concat(x.sh, y.sh)))"
-    )
     return f"""
     WITH RECURSIVE {_SHINGLED_SQL},
     {minhash_bands_sql()},
-    cand AS (
-      SELECT DISTINCT p.doc_id AS a, q.doc_id AS b
-      FROM bands p
-      JOIN bands q ON p.band_id = q.band_id AND p.band_key = q.band_key
-                  AND p.doc_id < q.doc_id
-    ),
-    verified AS (
-      SELECT c.a, c.b
-      FROM cand c
-      JOIN shingled x ON c.a = x.doc_id
-      JOIN shingled y ON c.b = y.doc_id
-      WHERE {jaccard} >= {int(MINHASH_THRESHOLD * 1000000)}
-    ),
-    edges AS (
-      SELECT a, b FROM verified UNION SELECT b, a FROM verified
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-    )
-    SELECT node AS doc_id, min(label) AS cluster_id, count(*) OVER () AS n_clustered_docs
-    FROM reach
-    GROUP BY node
+    {band_pairs_sql()},
+    {verified_pairs_sql()},
+    {components_sql("verified")}
+    SELECT doc_id, cluster_id, count(*) OVER () AS n_clustered_docs FROM comp
     """
 
 
@@ -585,42 +569,15 @@ def dedup_clusters_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _keep_canonical_oracle() -> str:
-    from .dedup import MINHASH_THRESHOLD
-
-    jaccard = (
-        "(len(list_intersect(x.sh, y.sh)) * 1000000)"
-        " // len(list_distinct(list_concat(x.sh, y.sh)))"
-    )
     return f"""
     WITH RECURSIVE {_SHINGLED_SQL},
     {minhash_bands_sql()},
-    cand AS (
-      SELECT DISTINCT p.doc_id AS a, q.doc_id AS b
-      FROM bands p
-      JOIN bands q ON p.band_id = q.band_id AND p.band_key = q.band_key
-                  AND p.doc_id < q.doc_id
-    ),
-    verified AS (
-      SELECT c.a, c.b
-      FROM cand c
-      JOIN shingled x ON c.a = x.doc_id
-      JOIN shingled y ON c.b = y.doc_id
-      WHERE {jaccard} >= {int(MINHASH_THRESHOLD * 1000000)}
-    ),
-    edges AS (
-      SELECT a, b FROM verified UNION SELECT b, a FROM verified
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-    ),
-    labels AS (
-      SELECT node AS doc_id, min(label) AS cluster_id FROM reach GROUP BY node
-    ),
+    {band_pairs_sql()},
+    {verified_pairs_sql()},
+    {components_sql("verified")},
     full_docs AS (
       SELECT d.doc_id, coalesce(l.cluster_id, d.doc_id) AS cluster_id, d.n_chars
-      FROM documents d LEFT JOIN labels l USING (doc_id)
+      FROM documents d LEFT JOIN comp l USING (doc_id)
     ),
     best AS (
       SELECT cluster_id, max(n_chars) AS max_chars, count(*) AS cluster_size
@@ -708,23 +665,8 @@ def _leakage_split_oracle() -> str:
     return f"""
     WITH RECURSIVE {_SHINGLED_SQL},
     {minhash_bands_sql()},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x
-      JOIN bands y ON x.band_id = y.band_id AND x.band_key = y.band_key
-                  AND x.doc_id < y.doc_id
-    ),
-    edges AS (
-      SELECT a, b FROM cand UNION SELECT b, a FROM cand
-    ),
-    reach(node, label) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-    ),
-    comp AS (
-      SELECT node AS doc_id, min(label) AS cluster_id FROM reach GROUP BY node
-    ),
+    {band_pairs_sql()},
+    {components_sql()},
     g AS (
       SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS group_id
       FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
@@ -861,15 +803,8 @@ def _bfs_oracle() -> str:
     return f"""
     WITH RECURSIVE {_SHINGLED_SQL},
     {minhash_bands_sql()},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x
-      JOIN bands y ON x.band_id = y.band_id AND x.band_key = y.band_key
-                  AND x.doc_id < y.doc_id
-    ),
-    edges AS (
-      SELECT a, b FROM cand UNION SELECT b, a FROM cand
-    ),
+    {band_pairs_sql()},
+    {edges_sql()},
     walk(node, hops) AS (
       SELECT doc_id, 0 FROM documents WHERE doc_id % {BFS_SEED_MOD} = 0
       UNION
@@ -953,8 +888,9 @@ def kcore_peel(
 
 
 def _kcore_oracle() -> str:
+    # its own peel: the 3 bounded rounds unrolled, not a recursion
     k, peel = KCORE_K, []
-    prev = "e0"
+    prev = "edges"
     for r in range(1, KCORE_ROUNDS + 1):
         peel.append(
             f"""k{r} AS (
@@ -971,15 +907,8 @@ def _kcore_oracle() -> str:
     return f"""
     WITH {_SHINGLED_SQL},
     {minhash_bands_sql()},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x
-      JOIN bands y ON x.band_id = y.band_id AND x.band_key = y.band_key
-                  AND x.doc_id < y.doc_id
-    ),
-    e0 AS (
-      SELECT a, b FROM cand UNION SELECT b, a FROM cand
-    ),
+    {band_pairs_sql()},
+    {edges_sql()},
     {chain}
     SELECT a AS doc_id, CAST(count(*) AS BIGINT) AS degree
     FROM {prev} GROUP BY a

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
 from ._util import stage
-from .dedup import _SHINGLED_SQL, minhash_bands_sql
+from .dedup import _SHINGLED_SQL, band_pairs_sql, minhash_bands_sql
 from .graph import _band_edges
 
 #: fixed power-iteration budget (unrolled identically in the oracle)
@@ -143,21 +143,9 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     return corners.groupBy("node").agg(F.count("*").alias("tri_count"))
 
 
-def _edges_sql_prefix() -> str:
-    """Shared DuckDB CTE chain: documents → shingles → MinHash bands →
-    canonical candidate edges (a < b) — same kernel the Spark side's
-    _band_edges uses, declared independently."""
-    return f"""
-    WITH {_SHINGLED_SQL},
-    {minhash_bands_sql()},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x
-      JOIN bands y ON x.band_id = y.band_id AND x.band_key = y.band_key
-                  AND x.doc_id < y.doc_id
-    )"""
-
-
+# The oracles below read the band-candidate graph ``cand(doc_id_1,
+# doc_id_2)`` from the shared dedup fragments; their pagerank, triangle
+# and assortativity bodies are each their own kernel.
 def _pagerank_oracle() -> str:
     prev = "r0"
     iter_ctes = []
@@ -174,9 +162,12 @@ def _pagerank_oracle() -> str:
       GROUP BY e.dst
     )""")
         prev = f"r{i}"
-    return f"""{_edges_sql_prefix()},
-    sym AS (SELECT a AS src, b AS dst FROM cand
-            UNION ALL SELECT b, a FROM cand),
+    return f"""
+    WITH {_SHINGLED_SQL},
+    {minhash_bands_sql()},
+    {band_pairs_sql()},
+    sym AS (SELECT doc_id_1 AS src, doc_id_2 AS dst FROM cand
+            UNION ALL SELECT doc_id_2, doc_id_1 FROM cand),
     deg AS (SELECT src, count(*) AS deg FROM sym GROUP BY src),
     r0 AS (SELECT src AS node, CAST({PR_SCALE} AS BIGINT) AS r FROM deg),
     {",".join(iter_ctes)}
@@ -198,12 +189,15 @@ def graph_pagerank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangle_oracle() -> str:
-    return f"""{_edges_sql_prefix()},
+    return f"""
+    WITH {_SHINGLED_SQL},
+    {minhash_bands_sql()},
+    {band_pairs_sql()},
     tri AS (
-      SELECT e1.a AS x, e1.b AS y, e2.b AS z
+      SELECT e1.doc_id_1 AS x, e1.doc_id_2 AS y, e2.doc_id_2 AS z
       FROM cand e1
-      JOIN cand e2 ON e2.a = e1.b
-      JOIN cand e3 ON e3.a = e1.a AND e3.b = e2.b
+      JOIN cand e2 ON e2.doc_id_1 = e1.doc_id_2
+      JOIN cand e3 ON e3.doc_id_1 = e1.doc_id_1 AND e3.doc_id_2 = e2.doc_id_2
     ),
     corners AS (
       SELECT x AS doc_id FROM tri
@@ -239,11 +233,14 @@ def graph_triangle_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _assortativity_oracle() -> str:
-    return f"""{_edges_sql_prefix()},
+    return f"""
+    WITH {_SHINGLED_SQL},
+    {minhash_bands_sql()},
+    {band_pairs_sql()},
     sym AS (
-      SELECT a AS src, b AS dst FROM cand
+      SELECT doc_id_1 AS src, doc_id_2 AS dst FROM cand
       UNION ALL
-      SELECT b AS src, a AS dst FROM cand
+      SELECT doc_id_2 AS src, doc_id_1 AS dst FROM cand
     ),
     deg AS (SELECT src, count(*) AS deg FROM sym GROUP BY src),
     pairs AS (

@@ -210,9 +210,9 @@ def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tumbling_counts(_table(spark, sf_dir, "events"), size="1 hour")
 
 
-@register(
-    "events_session_windows",
-    oracle="""
+# gaps-and-islands sessions; also the oracle of the streaming twin,
+# events_streaming_session_parity
+_SESSION_ORACLE = """
     WITH flagged AS (
       SELECT user_id, ts,
              CASE WHEN lag(ts) OVER w IS NULL
@@ -235,8 +235,10 @@ def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
       count(*) AS n_events
     FROM numbered
     GROUP BY user_id, sess_id
-    """,
-)
+    """
+
+
+@register("events_session_windows", oracle=_SESSION_ORACLE)
 def events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-min inactivity gap) per user — F.session_window
     in batch; the oracle derives identical sessions via gaps-and-islands.

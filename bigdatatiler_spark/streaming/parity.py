@@ -256,33 +256,10 @@ def events_streaming_sliding_parity(spark: SparkSession, sf_dir: str) -> DataFra
 _SINK3 = "streaming_parity_session"
 
 
-@register(
-    "events_streaming_session_parity",
-    oracle="""
-    WITH flagged AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w > INTERVAL 30 MINUTES
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM events
-      WHERE ts IS NOT NULL
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-    ),
-    numbered AS (
-      SELECT user_id, ts,
-             sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                 ROWS UNBOUNDED PRECEDING) AS sess_id
-      FROM flagged
-    )
-    SELECT
-      user_id,
-      epoch_ms(date_trunc('milliseconds', min(ts))) AS session_start_ms,
-      epoch_ms(date_trunc('milliseconds', max(ts) + INTERVAL 30 MINUTES)) AS session_end_ms,
-      count(*) AS n_events
-    FROM numbered
-    GROUP BY user_id, sess_id
-    """,
-)
+from ..operators.windows import _SESSION_ORACLE
+
+
+@register("events_streaming_session_parity", oracle=_SESSION_ORACLE)
 def events_streaming_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-min gap) executed BY THE STREAMING ENGINE —
     the third streaming shape after tumbling and sliding, and the one

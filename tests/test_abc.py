@@ -11,10 +11,8 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-import duckdb
-
 from bigdatatiler_spark.registry import load_all
-from tools.check_oracle import table_hash
+from tools.check_oracle import oracle_connection, table_hash
 
 D = dt.datetime(2025, 5, 1)
 
@@ -48,16 +46,7 @@ def test_abc_boundary_rows_join_head_class(spark, tmp_path):
         "B": (1, 15000),   # exactly 95.0% cumulative → still B
         "C": (1, 5000),
     }
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    con.execute(
-        "CREATE VIEW orders AS SELECT * FROM read_parquet("
-        f"'{os.path.join(path, 'orders.parquet')}/*.parquet')"
-    )
+    con = oracle_connection(path)
     res = con.execute(spec.oracle)
     ocols = [d[0] for d in res.description]
     assert sorted(sdf.columns) == sorted(ocols)

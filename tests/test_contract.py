@@ -248,20 +248,33 @@ def test_shared_kernels_have_one_home():
     """The LSH candidate self-join predicate lives in ``dedup.band_pairs``
     (plus streaming parity's documented non-distinct join) and the 30-min
     session gap rule in ``windows._sessions``; a hand-written copy
-    elsewhere is a second way to do the same thing."""
+    elsewhere is a second way to do the same thing. The oracle side
+    likewise: the SQL band-equality join lives in ``dedup.band_pairs_sql``
+    (plus the incremental oracle's new x old join) and the component
+    recursion in ``graph.components_sql``."""
     import re
 
     band = re.compile(r'"a\.band_key"\)\s*==\s*F\.col\("b\.band_key"')
-    homes = {"band": [], "gap": []}
+    band_sql = re.compile(r"\w+\.band_key\s*=\s*\w+\.band_key")
+    homes = {"band": [], "gap": [], "band_sql": [], "reach": []}
     for rel, _, code, scope in _package_code():
         if band.search(code):
             homes["band"].append(f"{rel}::{scope}")
         if "30 * 60 * 1_000_000" in code:
             homes["gap"].append(f"{rel}::{scope}")
+        if band_sql.search(code):
+            homes["band_sql"].append(f"{rel}::{scope}")
+        if "reach(node, label)" in code:
+            homes["reach"].append(f"{rel}::{scope}")
     assert homes == {
         "band": [
             "operators/dedup.py::band_pairs",
             "streaming/parity.py::neardedup_apply_batch",
         ],
         "gap": ["operators/windows.py::_sessions"],
+        "band_sql": [
+            "operators/dedup.py::band_pairs_sql",
+            "operators/dedup.py::_incremental_oracle",
+        ],
+        "reach": ["operators/graph.py::components_sql"],
     }

@@ -267,7 +267,7 @@ def test_capped_lsh_oracle_parity_when_cap_engages(spark, tmp_path):
     band bucket at occupancy 100 > BAND_BUCKET_CAP=64, and both engines
     must replay the identical md5-ordered within-bucket sample — so the
     capped candidate set (and the verified pairs) hash-match."""
-    import duckdb
+    from tools.check_oracle import oracle_connection
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -299,16 +299,7 @@ def test_capped_lsh_oracle_parity_when_cap_engages(spark, tmp_path):
     # by 64*63/2 instead of 100*99/2
     assert 0 < len(srows) < n * (n - 1) // 2
 
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{d}/documents.parquet')"
-    )
+    con = oracle_connection(str(d))
     res = con.execute(spec.oracle)
     ocols = [c[0] for c in res.description]
     orows = res.fetchall()

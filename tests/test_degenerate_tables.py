@@ -35,14 +35,10 @@ query through BOTH engines so none of the classes can silently return.
 
 from __future__ import annotations
 
-import os
-
-import duckdb
 import pytest
 
 from bigdatatiler_spark.registry import load_all
-from bigdatatiler_spark.tables import TABLES
-from tools.check_oracle import pandas_hash, table_hash
+from tools.check_oracle import oracle_connection, pandas_hash, table_hash
 from tools.hostile_fixtures import build_truncated
 
 #: every query red in the round-13 trunc0/trunc1 sweeps before the fixes
@@ -95,16 +91,7 @@ def degen_dir(request, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def oracle_con(degen_dir):
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    for t in TABLES:
-        p = os.path.join(degen_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle_connection(degen_dir)
     return con
 
 

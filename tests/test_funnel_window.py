@@ -7,10 +7,8 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-import duckdb
-
 from bigdatatiler_spark.registry import load_all
-from tools.check_oracle import table_hash
+from tools.check_oracle import oracle_connection, table_hash
 
 T0 = dt.datetime(2025, 6, 1)
 DAY_MS = 86_400_000
@@ -55,16 +53,7 @@ def test_funnel_window_boundary(spark, tmp_path):
     (n_signup, n_view, n_click, n_purchase, rate) = srows[0]
     assert (n_signup, n_view, n_click, n_purchase) == (3, 2, 1, 1)
     assert rate == 3333  # 1/3 on the e4 grid, floored
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{os.path.join(path, 'events.parquet')}/*.parquet')"
-    )
+    con = oracle_connection(path)
     res = con.execute(spec.oracle)
     ocols = [d[0] for d in res.description]
     assert sorted(sdf.columns) == sorted(ocols)
@@ -122,16 +111,7 @@ def test_day_bucketing_pre_1970_matches_oracle(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "events.parquet")
     )
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{os.path.join(path, 'events.parquet')}/*.parquet')"
-    )
+    con = oracle_connection(path)
     for name in ("events_rolling_7d_active_users", "events_dau_mau_stickiness"):
         spec = load_all()[name]
         sdf = spec.fn(spark, path)

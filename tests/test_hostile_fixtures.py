@@ -24,14 +24,10 @@ the harness — so none of these classes can silently return.
 
 from __future__ import annotations
 
-import os
-
-import duckdb
 import pytest
 
 from bigdatatiler_spark.registry import load_all
-from bigdatatiler_spark.tables import TABLES
-from tools.check_oracle import pandas_hash, table_hash
+from tools.check_oracle import oracle_connection, pandas_hash, table_hash
 from tools.hostile_fixtures import build
 
 #: the queries that were red on hostile content before the round-5 fixes,
@@ -291,16 +287,7 @@ def hostile_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def oracle_con(hostile_dir):
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    for t in TABLES:
-        p = os.path.join(hostile_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle_connection(hostile_dir)
     return con
 
 

@@ -14,10 +14,8 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-import duckdb
-
 from bigdatatiler_spark.registry import load_all
-from tools.check_oracle import table_hash
+from tools.check_oracle import oracle_connection, table_hash
 
 # Monday anchors (date_trunc('week') is Monday-aligned in both engines)
 W = [dt.datetime(2025, 3, 3) + dt.timedelta(weeks=k, days=2) for k in range(5)]
@@ -69,16 +67,7 @@ def test_lifecycle_global_week_gap(spark, tmp_path):
     for act, new, ret, res, _ in by_week.values():
         assert act == new + ret + res
     # full differential vs the registered oracle on the same files
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{os.path.join(path, 'events.parquet')}/*.parquet')"
-    )
+    con = oracle_connection(path)
     res = con.execute(spec.oracle)
     ocols = [d[0] for d in res.description]
     assert sorted(sdf.columns) == sorted(ocols)

@@ -7,14 +7,10 @@ the driver round. The full sf0.01 sweep is tools/check_oracle.py.
 
 from __future__ import annotations
 
-import os
-
-import duckdb
 import pytest
 
 from bigdatatiler_spark.registry import load_all
-from bigdatatiler_spark.tables import TABLES
-from tools.check_oracle import table_hash
+from tools.check_oracle import oracle_connection, table_hash
 
 SF = "/root/testdata/sf0.001"
 
@@ -23,16 +19,7 @@ SPECS = {n: s for n, s in load_all().items() if s.oracle is not None}
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    for t in TABLES:
-        p = os.path.join(SF, f"{t}.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    yield con
+    return oracle_connection(SF)
 
 
 @pytest.mark.parametrize("name", sorted(SPECS))

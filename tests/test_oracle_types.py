@@ -17,9 +17,9 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
+from tools.check_oracle import oracle_connection
 from tools.oracle_types import SAFE, census
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -36,12 +36,7 @@ def test_no_hugeint_or_boolean_oracle_columns():
 
 def test_gate_catches_reintroduced_hugeint():
     """The gate itself must flag a HUGEINT column (meta-test)."""
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
+    con = oracle_connection(SF_DIR)
     rel = con.sql("SELECT sum(x) AS s FROM (VALUES (CAST(1 AS BIGINT))) t(x)")
     types = [str(t).upper() for t in rel.types]
     assert "HUGEINT" in types[0]

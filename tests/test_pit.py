@@ -15,10 +15,8 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-import duckdb
-
 from bigdatatiler_spark.registry import load_all
-from tools.check_oracle import table_hash
+from tools.check_oracle import oracle_connection, table_hash
 
 D = dt.datetime(2025, 3, 1)
 
@@ -75,17 +73,7 @@ def test_pit_zero_width_intervals_match_oracle(spark, tmp_path):
     assert (201, 1) not in got  # pre-history ship dropped
     assert got[(201, 2)] == "C-PRIO"
     # full differential vs the registered oracle on the same files
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    for t in ("orders", "lineitem"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-            f"'{os.path.join(path, t + '.parquet')}/*.parquet')"
-        )
+    con = oracle_connection(path)
     res = con.execute(spec.oracle)
     ocols = [d[0] for d in res.description]
     orows = res.fetchall()

@@ -12,14 +12,11 @@ column for every row (or fail the fixture canary)."""
 
 from __future__ import annotations
 
-import os
-
-import duckdb
 import pytest
 
 from bigdatatiler_spark.registry import load_all
-from bigdatatiler_spark.tables import TABLES, table
-from tools.check_oracle import table_hash
+from bigdatatiler_spark.tables import table
+from tools.check_oracle import oracle_connection, table_hash
 from tools.hostile_fixtures import build_evolved
 
 #: queries that read the evolved table through every surface the class
@@ -52,23 +49,7 @@ def evolved_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def oracle_con(evolved_dir):
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    for t in TABLES:
-        p = os.path.join(evolved_dir, f"{t}.parquet")
-        if os.path.isdir(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{p}/*.parquet', union_by_name=true)"
-            )
-        elif os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
+    con = oracle_connection(evolved_dir)
     return con
 
 

@@ -19,14 +19,13 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from bigdatatiler_spark.registry import load_all
-from bigdatatiler_spark.tables import TABLES, _union_read_schema, table
-from tools.check_oracle import table_hash
+from bigdatatiler_spark.tables import _union_read_schema, table
+from tools.check_oracle import oracle_connection, table_hash
 from tools.hostile_fixtures import build_evolved_deep
 
 #: every surface the class threatens: tokenizer + quality over the
@@ -66,23 +65,7 @@ def deep_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def oracle_con(deep_dir):
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    for t in TABLES:
-        p = os.path.join(deep_dir, f"{t}.parquet")
-        if os.path.isdir(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{p}/*.parquet', union_by_name=true)"
-            )
-        elif os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
+    con = oracle_connection(deep_dir)
     return con
 
 

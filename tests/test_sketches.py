@@ -83,7 +83,7 @@ def test_kmv_small_group_is_exact(spark, tmp_path):
     cardinality on BOTH engines, not the ~K bias of the unfilled-sketch
     formula — exercised through the registered query + its oracle on a
     synthetic 5-distinct events table."""
-    import duckdb
+    from tools.check_oracle import oracle_connection
 
     from bigdatatiler_spark.operators.sketches import sketch_kmv_distinct
     from bigdatatiler_spark.registry import QUERIES
@@ -104,16 +104,7 @@ def test_kmv_small_group_is_exact(spark, tmp_path):
     out = sketch_kmv_distinct(spark, str(tmp_path)).first()
     assert out["exact_distinct"] == 5 and out["kmv_estimate"] == 5.0
 
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{tmp_path}/events.parquet/*.parquet')"
-    )
+    con = oracle_connection(str(tmp_path))
     row = con.execute(QUERIES["sketch_kmv_distinct"].oracle).fetchone()
     assert row[1] == 5 and row[2] == 5.0, row
 

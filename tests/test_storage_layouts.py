@@ -29,12 +29,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 from bigdatatiler_spark.registry import load_all
-from bigdatatiler_spark.tables import TABLES
-from tools.check_oracle import table_hash
+from tools.check_oracle import oracle_connection, table_hash
 from tools.hostile_fixtures import RECODE_VARIANTS, build_recoded
 
 #: float-heavy scan, hour bucketing, tokenizer, and the streaming engine
@@ -55,16 +53,7 @@ def recoded_dir(request, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def oracle_con(recoded_dir):
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    for t in TABLES:
-        p = os.path.join(recoded_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle_connection(recoded_dir)
     return con
 
 
@@ -158,16 +147,7 @@ def hostile_bss_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def hostile_bss_oracle(hostile_bss_dir):
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    for t in TABLES:
-        p = os.path.join(hostile_bss_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle_connection(hostile_bss_dir)
     return con
 
 

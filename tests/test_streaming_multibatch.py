@@ -33,13 +33,12 @@ from __future__ import annotations
 import os
 import shutil
 
-import duckdb
 import pyarrow.parquet as pq
 import pytest
 
 from bigdatatiler_spark.registry import load_all
 from bigdatatiler_spark.tables import TABLES
-from tools.check_oracle import pandas_hash, table_hash
+from tools.check_oracle import oracle_connection, pandas_hash, table_hash
 
 SRC = "/root/testdata/sf0.001"
 N_SPLITS = 4
@@ -105,22 +104,7 @@ def split_dir(request, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def oracle_con(split_dir):
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    for t in TABLES:
-        p = os.path.join(split_dir, f"{t}.parquet")
-        if t == "events":
-            con.execute(
-                f"CREATE VIEW events AS SELECT * FROM read_parquet('{p}/*.parquet')"
-            )
-        elif os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
+    con = oracle_connection(split_dir)
     return con
 
 

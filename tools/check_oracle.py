@@ -38,6 +38,30 @@ def _norm_cell(v) -> str:
     return str(v)
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table in ``sf_dir``:
+    a ``<table>.parquet`` file reads as is, a ``<table>.parquet``
+    directory of part files (a Spark write) as their union by column
+    name; absent tables get no view.
+
+    threads=1: DuckDB 1.0.0's parallel window operator non-
+    deterministically merges sessions across far-future timestamp gaps
+    (~1/12 runs on the hostile fixture, r11); single-threaded execution
+    is stable and canonical."""
+    con = duckdb.connect()
+    con.execute("SET threads=1")
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(p):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{p}/*.parquet', union_by_name=true)"
+            )
+        elif os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
 def table_hash(cols: list[str], rows: list[tuple]) -> tuple[int, str]:
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     lines = sorted("\x1f".join(_norm_cell(r[i]) for i in order) for r in rows)
@@ -84,16 +108,7 @@ def main() -> int:
         print(f"ERROR: unknown query name(s): {sorted(unknown)}")
         return 2
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle_connection(sf_dir)
 
     failures, checked, rows_only = [], 0, 0
     for name, spec in sorted(specs.items()):

@@ -31,12 +31,9 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
 from bigdatatiler_spark.registry import load_all
 from bigdatatiler_spark.session import get_spark
-from bigdatatiler_spark.tables import TABLES
-from tools.check_oracle import table_hash
+from tools.check_oracle import oracle_connection, table_hash
 
 #: Hostile session variants. Keys deliberately include everything the
 #: engine's tune_session re-pins (to exercise the repair) plus confs it
@@ -73,16 +70,7 @@ VARIANTS: dict[str, dict[str, str]] = {
 
 
 def oracle_hashes(sf_dir: str, specs) -> dict[str, tuple[int, str]]:
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle_connection(sf_dir)
     out = {}
     for name, spec in specs.items():
         if spec.oracle is None:

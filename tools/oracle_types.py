@@ -20,26 +20,15 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
 from bigdatatiler_spark.registry import load_all
-from bigdatatiler_spark.tables import TABLES
+from tools.check_oracle import oracle_connection
 
 SAFE = {"BIGINT", "INTEGER", "SMALLINT", "TINYINT", "VARCHAR", "DOUBLE"}
 
 
 def census(sf_dir: str = "/root/testdata/sf0.01"):
     """Return {query_name: [(col, type), ...]} of unsafe oracle columns."""
-    con = duckdb.connect()
-    # threads=1: DuckDB 1.0.0's parallel window operator non-
-    # deterministically merges sessions across far-future timestamp
-    # gaps (~1/12 runs on the hostile fixture, r11); single-threaded
-    # execution is stable and canonical
-    con.execute("SET threads=1")
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle_connection(sf_dir)
     bad: dict[str, list[tuple[str, str]]] = {}
     errs: dict[str, str] = {}
     for name, spec in sorted(load_all().items()):
