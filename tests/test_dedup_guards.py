@@ -267,12 +267,11 @@ def test_capped_lsh_oracle_parity_when_cap_engages(spark, tmp_path):
     band bucket at occupancy 100 > BAND_BUCKET_CAP=64, and both engines
     must replay the identical md5-ordered within-bucket sample — so the
     capped candidate set (and the verified pairs) hash-match."""
-    from tools.check_oracle import oracle_connection
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from bigdatatiler_spark.registry import load_all
-    from tools.check_oracle import table_hash
+    from tools.check_oracle import oracle_connection, table_hash
 
     n = 100
     text = "alpha beta gamma delta epsilon zeta eta theta"

@@ -83,10 +83,9 @@ def test_kmv_small_group_is_exact(spark, tmp_path):
     cardinality on BOTH engines, not the ~K bias of the unfilled-sketch
     formula — exercised through the registered query + its oracle on a
     synthetic 5-distinct events table."""
-    from tools.check_oracle import oracle_connection
-
     from bigdatatiler_spark.operators.sketches import sketch_kmv_distinct
     from bigdatatiler_spark.registry import QUERIES
+    from tools.check_oracle import oracle_connection
 
     # ts in int64 nanos: the canonical table() loader derives ts/ts_ns on
     # every events read (and its schema canary requires the full column
