@@ -2,9 +2,12 @@
 
 The reference id is ``{UserId}_{Trigger}_{ULID}_{epochMs}`` with
 ``NoUserId`` / ``NoTrigger`` fallbacks for null-or-blank fields
-(/root/reference/LogChange.cs:80-85); split children append ``_split{i}``
-(LogChange.cs:87-92). ULID's property that matters is time-sortability:
-the 48-bit millisecond prefix makes ids order by creation time.
+(LogChange.cs:80-85). Split children append ``_split{i}`` there
+(LogChange.cs:87-92); the tiler here keeps ``parent_id`` and
+``split_index`` as columns instead (logstore/tile.py). ULID's property
+that matters is time-sortability: the 48-bit millisecond prefix makes ids
+order by creation time. The registered ``event_id_generation`` query
+builds its ids with ``doc_id``.
 
 Engine-native construction (pure built-in expressions, no UDF):
 - the ULID slot keeps time-sortability by construction — the id already
@@ -38,7 +41,8 @@ def doc_id(
     """``{user}_{trigger}_{disc}_{epochMs}`` — time-sortable like the
     reference's ULID-bearing id. ``discriminator`` defaults to uuid()
     (random, like ULID's random tail); pass md5(payload) for
-    content-deterministic ids (reproducible pipelines)."""
+    content-deterministic ids (reproducible pipelines), or a NULL string
+    to drop the segment (``concat_ws`` skips NULLs)."""
     disc = discriminator if discriminator is not None else F.uuid()
     return F.concat_ws(
         "_",
@@ -47,8 +51,3 @@ def doc_id(
         disc,
         F.unix_millis(ts.cast("timestamp")).cast("string"),
     )
-
-
-def split_id(parent_id: Column, split_index: Column) -> Column:
-    """Child-chunk id: ``{parent}_split{i}`` (LogChange.cs:87-92)."""
-    return F.concat(parent_id, F.lit("_split"), split_index.cast("string"))

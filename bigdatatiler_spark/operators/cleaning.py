@@ -132,7 +132,6 @@ def doc_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exact-substring duplicate spans --------------------------------------
 SPAN_K = 5  # tokens per span (Lee et al. use 50; scaled to the test corpus)
 SPAN_MIN_DOCS = 2  # a span is "duplicated" if it appears in >= 2 documents
-DUP_SPAN_FLAG = 0.5  # doc flagged when more than half its spans are shared
 
 
 @register(
@@ -203,8 +202,9 @@ def doc_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("h", F.lit(1).alias("is_dup"))
     )
     # the duplicated fraction is emitted as integer per-mille and the flag
-    # as an integer 2·dup > total comparison (DUP_SPAN_FLAG = 0.5) — no
-    # float division reaches the comparison hash (round-2 driver red row)
+    # as an integer 2·dup > total comparison (flagged when more than half
+    # its spans are shared) — no float division reaches the comparison
+    # hash (round-2 driver red row)
     return (
         spans.join(shared, "h", "left")
         .groupBy("doc_id")

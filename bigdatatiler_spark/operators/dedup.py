@@ -39,7 +39,6 @@ from .text import _NORM_SQL, _norm_col
 
 # MinHash parameters: K hashes, B bands of R=2 rows → catches pairs with
 # Jaccard ≳ (1/B)^(1/R) ≈ 0.35; verification threshold keeps true near-dups.
-MINHASH_K = 16
 MINHASH_BANDS = 8
 MINHASH_THRESHOLD = 0.6
 NGRAM_THRESHOLD = 0.9
@@ -502,28 +501,21 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n.band_id") == F.col("o.band_id"))
             & (F.col("n.band_key") == F.col("o.band_key")),
         )
-        .select(F.col("n.doc_id").alias("doc_id"), F.col("o.doc_id").alias("dup_of"))
+        .select(
+            F.col("n.doc_id").alias("doc_id_1"), F.col("o.doc_id").alias("doc_id_2")
+        )
         .distinct()
     )
-    pairs = cand.join(
-        sh.select("doc_id", F.col("sh").alias("sh_new")), "doc_id"
-    ).join(
-        sh.select(F.col("doc_id").alias("dup_of"), F.col("sh").alias("sh_old")),
-        "dup_of",
-    )
-    jaccard = int_ratio(
-        F.size(F.array_intersect("sh_new", "sh_old")),
-        F.size(F.array_union("sh_new", "sh_old")),
-        6,
-        "jaccard_e6",
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("jaccard_e6"), F.asc("dup_of"))
+    w = Window.partitionBy("doc_id_1").orderBy(F.desc("jaccard_e6"), F.asc("doc_id_2"))
     return (
-        pairs.select("doc_id", "dup_of", jaccard)
-        .where(F.col("jaccard_e6") >= int(MINHASH_THRESHOLD * 1000000))
+        verified_pairs(cand, sh)
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select("doc_id", "dup_of", "jaccard_e6")
+        .select(
+            F.col("doc_id_1").alias("doc_id"),
+            F.col("doc_id_2").alias("dup_of"),
+            "jaccard_e6",
+        )
     )
 
 

@@ -3,14 +3,13 @@
 Design (BASELINE.json north star): image/audio/video travel as
 ``binary`` columns with a metadata struct; decode / feature-extraction /
 resize / frame-sampling run as Arrow-batched Pandas UDFs over
-``mapInPandas``. Since round 5 the decode and resize stages are REAL for
-images (PIL when importable, else the dependency-free PNG codec in
-``media/png.py`` — decode, nearest-neighbor resize, pixel aHash) and for
-audio (RIFF/PCM WAV via ``media/wav.py`` — struct-only parsing).
-Video decode remains environment-bound (compressed codecs need ffmpeg)
-and raises NotImplementedError at the documented boundary; its
-plumbing — schema, batch iteration, 1→N frame fan-out — is tested in
-fake mode.
+``mapInPandas`` inside the registered queries. The decode and resize
+stages are REAL for images (PIL when importable, else the dependency-free
+PNG codec in ``media/png.py`` — decode, nearest-neighbor resize, pixel
+aHash) and for audio (RIFF/PCM WAV via ``media/wav.py`` — struct-only
+parsing). Video frames travel in the dependency-free FPK1 container
+(``media/framepack.py``); compressed video codecs need ffmpeg and are
+out of scope.
 
 Oracle-checked queries: ``multimodal_payload_stats`` (byte accounting /
 hashing of the binary column), ``multimodal_phash_near_dup``
@@ -29,10 +28,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -42,83 +39,6 @@ from ..tables import table
 from ._util import stage
 
 FRAME_BYTES = 256  # fake "bytes per frame" used by the frame-count derivation
-
-#: Output schema of the decode/feature-extract stage.
-DECODED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("format", StringType()),
-        StructField("payload_len", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_frames", IntegerType()),
-    ]
-)
-
-
-def with_payload(docs: DataFrame) -> DataFrame:
-    """Attach a binary payload column + metadata struct to a document
-    table. Stand-in for reading real media via ``binaryFile`` — the
-    downstream plumbing (BinaryType column, metadata struct) is identical."""
-    return docs.select(
-        "doc_id",
-        F.encode("text", "UTF-8").alias("payload"),
-        F.struct(
-            F.lit("fake/utf8").alias("format"),
-            F.length(F.encode("text", "UTF-8")).alias("n_bytes"),
-        ).alias("media_meta"),
-    )
-
-
-def decode_stub(df: DataFrame, fake: bool = True) -> DataFrame:
-    """Decode / feature-extract stage as ``mapInPandas``.
-
-    ``fake=True`` derives deterministic pseudo-metadata from the bytes
-    (so plumbing is testable regardless of payload content);
-    ``fake=False`` is the REAL decoder path: PIL when importable (all
-    formats), else the dependency-free PNG codec in ``media/png.py`` —
-    non-PNG bytes without PIL raise NotImplementedError, the documented
-    environment boundary. Arrow-batched either way: each pandas batch
-    holds many payloads.
-    """
-
-    def _decode(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
-
-        for pdf in batches:
-            if not fake:
-                from ..media.png import decode_image
-
-                rows = []
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                    w, h, ch, _px = decode_image(bytes(payload))
-                    rows.append(
-                        (doc_id, f"image/decoded-{ch}ch", len(payload), w, h, 1)
-                    )
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "format", "payload_len",
-                        "width", "height", "n_frames",
-                    ],
-                )
-                continue
-            payloads = pdf["payload"]
-            lens = payloads.map(len)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "format": "fake/utf8",
-                    "payload_len": lens,
-                    # deterministic pseudo-dimensions from the first bytes
-                    "width": payloads.map(lambda b: (b[0] if len(b) else 0) + 1),
-                    "height": payloads.map(lambda b: (b[-1] if len(b) else 0) + 1),
-                    "n_frames": (lens + FRAME_BYTES - 1) // FRAME_BYTES,
-                }
-            )
-
-    return df.mapInPandas(_decode, DECODED_SCHEMA)
-
 
 @register(
     "multimodal_payload_stats",
@@ -148,109 +68,6 @@ def multimodal_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("payload", BinaryType()),
-    ]
-)
-
-
-def resize_stub(
-    df: DataFrame, target_w: int, target_h: int, fake: bool = True
-) -> DataFrame:
-    """Resize stage over decoded media: (payload, width, height) →
-    (payload', target_w, target_h). Fake mode scales the byte budget by
-    the area ratio and truncates — deterministic, so the batch plumbing
-    (binary in AND out of Arrow) is testable. ``fake=False`` is the REAL
-    resampler: payload is treated as a raw 8-bit pixel buffer (grayscale
-    when len == w*h, else channels inferred) and resampled
-    nearest-neighbor via ``media.png.resize_nearest`` — no PIL needed.
-    """
-
-    def _resize(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
-
-        for pdf in batches:
-            if not fake:
-                from ..media.png import resize_nearest
-
-                rows = []
-                for doc_id, w, h, payload in zip(
-                    pdf["doc_id"], pdf["width"], pdf["height"], pdf["payload"]
-                ):
-                    buf = bytes(payload)
-                    ch = max(len(buf) // max(w * h, 1), 1)
-                    rows.append(
-                        (
-                            doc_id,
-                            target_w,
-                            target_h,
-                            resize_nearest(w, h, ch, buf, target_w, target_h),
-                        )
-                    )
-                yield pd.DataFrame(
-                    rows, columns=["doc_id", "width", "height", "payload"]
-                )
-                continue
-
-            def _scale(row):
-                area = max(row["width"] * row["height"], 1)
-                keep = max(
-                    1, int(len(row["payload"]) * min(target_w * target_h / area, 1.0))
-                )
-                return row["payload"][:keep]
-
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": target_w,
-                    "height": target_h,
-                    "payload": pdf.apply(_scale, axis=1),
-                }
-            )
-
-    return df.mapInPandas(_resize, RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_index", IntegerType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
-def sample_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
-    """Frame-sampling stage: one input payload → every_n-th FRAME_BYTES
-    slice as its own row (the 1→N fan-out shape of video frame
-    extraction). mapInPandas output rows need not align 1:1 with input
-    rows — the returned batch is simply longer; Spark re-batches. The
-    fan-out multiplies downstream row count, so at 100 TB sample *before*
-    shuffling (this stage is narrow) and repartition after."""
-
-    def _sample(batches: Iterator[Any]) -> Iterator[Any]:
-        import pandas as pd
-
-        for pdf in batches:
-            out_ids, out_idx, out_frames = [], [], []
-            for _, row in pdf.iterrows():
-                payload = row["payload"]
-                n_frames = (len(payload) + FRAME_BYTES - 1) // FRAME_BYTES
-                for i in range(0, n_frames, every_n):
-                    out_ids.append(row["doc_id"])
-                    out_idx.append(i)
-                    out_frames.append(payload[i * FRAME_BYTES : (i + 1) * FRAME_BYTES])
-            yield pd.DataFrame(
-                {"doc_id": out_ids, "frame_index": out_idx, "frame": out_frames}
-            )
-
-    return df.mapInPandas(_sample, FRAME_SCHEMA)
-
-
 # --- perceptual-hash near-duplicates --------------------------------------
 # aHash (average hash), the classic perceptual image fingerprint: 64 bits,
 # bit i = (mean of region i) > (global mean). Near-duplicates are pairs
@@ -264,14 +81,12 @@ def sample_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
 # all-pairs. At 100 TB the knobs move to 16-bit bands + threshold ≤ 3,
 # the same trade the MinHash banding docs describe.
 #
-# Here the "image" is the document's payload (this container has no
-# image libs — multimodal decode is stubbed); regions are the 64
-# equal-ish slices of the code sequence, and the mean comparison is the
-# integer cross-product seg_sum·L > tot·seg_len — no division, engine-
-# exact. The JVM/SQL path below hashes CHARACTER CODES (ASCII corpus ⇒
-# identical to bytes; oracle-replayable); ``ahash_bands_stub`` is the
-# production mapInPandas slot hashing raw BYTES at decode time, pinned
-# equal to the SQL path on this corpus in tests/test_multimodal.py.
+# Here the "image" is the document's text; regions are the 64 equal-ish
+# slices of its code sequence, and the mean comparison is the integer
+# cross-product seg_sum·L > tot·seg_len — no division, engine-exact. The
+# JVM/SQL path below hashes CHARACTER CODES (ASCII corpus ⇒ identical to
+# bytes; oracle-replayable); ``multimodal_image_ahash_near_dup`` runs the
+# same near-dup pipeline on decoded PNG pixels.
 
 PHASH_THRESH = 12  #: max Hamming distance for a near-dup pair (of 64)
 
@@ -351,45 +166,6 @@ def ahash_bands(docs: DataFrame) -> DataFrame:
     ).select("doc_id", F.expr(_BANDS_SPARK).alias("bands"))
 
 
-def ahash_bands_stub(df: DataFrame) -> DataFrame:
-    """Production slot: the same 64-bit aHash over raw payload BYTES at
-    decode time (mapInPandas, Arrow-batched). On the ASCII test corpus
-    bytes == character codes, so this is pinned equal to `ahash_bands`;
-    with a real decoder the input becomes the decoded pixel buffer."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("bands", ArrayType(IntegerType())),
-        ]
-    )
-
-    def _hash(batches: Iterator[Any]) -> Iterator[Any]:
-        import numpy as np
-        import pandas as pd
-
-        def bands_of(payload: bytes) -> list[int]:
-            b = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-            L = len(b)
-            tot = int(b.sum())
-            bits = []
-            for i in range(64):
-                lo, hi = i * L // 64, (i + 1) * L // 64
-                if hi == lo:
-                    bits.append(0)
-                else:
-                    bits.append(1 if int(b[lo:hi].sum()) * L > tot * (hi - lo) else 0)
-            return [
-                sum(bits[8 * k + j] << j for j in range(8)) for k in range(8)
-            ]
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "bands": pdf["payload"].map(bands_of)}
-            )
-
-    return df.mapInPandas(_hash, schema)
-
-
 @register("multimodal_phash_near_dup", oracle=_PHASH_ORACLE)
 def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash near-duplicate pairs: docs whose 64-bit aHash
@@ -403,7 +179,7 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it on one core AND recompute it per self-join side. Split-normalize
     # (conditional — no exchange on a corpus that already has splits) and
     # stage it: one distributed hash pass, read twice. (At 100 TB the hash
-    # rides the decode stage — ahash_bands_stub.)
+    # rides the decode stage, as in multimodal_image_ahash_near_dup.)
     from ._util import ensure_parallelism
 
     bands = stage(ahash_bands(ensure_parallelism(docs)))
@@ -432,9 +208,9 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- real-bytes decode: end-to-end PNG round trip -------------------------
-# Round 5: the decode slot is no longer only a stub. Each document gets a
-# deterministic synthetic 16x16 grayscale image (pixel i of doc d =
-# (d*31 + i*7) mod 256 — content the oracle can recompute in pure SQL),
+# Each document gets a deterministic synthetic 16x16 grayscale image
+# (pixel i of doc d = (d*31 + i*7) mod 256 — content the oracle can
+# recompute in pure SQL),
 # the Spark side ENCODES it to real PNG bytes and DECODES it back through
 # media/png.py (PIL when present, the stdlib codec otherwise) inside an
 # Arrow-batched mapInPandas stage, then reports pixel statistics from the
@@ -992,8 +768,7 @@ def multimodal_wav_rms_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # buffer. resize_nearest maps target (tx, ty) → source ((tx·W)//TW,
 # (ty·H)//TH) = (2tx, 2ty) here, so the oracle replays the exact index
 # map in SQL over the same generator formula (floor-mod — class 20).
-# A hash match certifies the codec AND the resampler's index math;
-# resize_stub(fake=False) plumbing was previously pytest-only.
+# A hash match certifies the codec AND the resampler's index math.
 
 RESIZE_TW = RESIZE_TH = 8
 

@@ -28,20 +28,6 @@ from ..tables import table
 from ._util import ms, stage
 
 
-def violation_counts(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
-    """1-row frame: for each named rule, the COUNT OF ROWS VIOLATING it
-    (rules are boolean Columns that are True when the row is GOOD).
-    Arbitrarily many rules stay one map-side aggregate pass."""
-    if not rules:
-        raise ValueError("violation_counts requires at least one rule")
-    return df.agg(
-        *[
-            F.sum((~cond).cast("bigint")).alias(name)
-            for name, cond in rules.items()
-        ]
-    )
-
-
 def duplicate_key_count(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:
     """1-row frame ``dup_<keys>``: how many key values occur more than
     once (a PRIMARY KEY / UNIQUE constraint as an aggregate)."""
@@ -231,20 +217,6 @@ def bucket_checksums(df: DataFrame, key: Column, repr_col: Column) -> DataFrame:
             F.sum("sig").cast("decimal(38,0)").alias("sig_sum"),
         )
     )
-
-
-def diverging_buckets(a: DataFrame, b: DataFrame) -> list[int]:
-    """Buckets where two checksum frames disagree — the re-scan set."""
-    joined = a.alias("a").join(
-        b.alias("b"), F.col("a.bucket") == F.col("b.bucket"), "full_outer"
-    )
-    rows = joined.where(
-        F.col("a.n_rows").isNull()
-        | F.col("b.n_rows").isNull()
-        | (F.col("a.n_rows") != F.col("b.n_rows"))
-        | (F.col("a.sig_sum") != F.col("b.sig_sum"))
-    ).select(F.coalesce(F.col("a.bucket"), F.col("b.bucket")).alias("bucket"))
-    return sorted(r.bucket for r in rows.collect())
 
 
 @register(

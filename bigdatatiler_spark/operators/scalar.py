@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..logstore.ids import doc_id
 from ..registry import register
 from ..tables import table
 from ._util import dec, ms, ts_lit
@@ -36,23 +37,18 @@ from ._util import dec, ms, ts_lit
 def event_id_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O20-O22 parity: `{UserId}_{Trigger}_{epochMs}` document ids with the
     reference's null/blank fallbacks (LogChange.cs:80-85: NoUserId /
-    NoTrigger), plus JSON payload extraction. The ULID segment of the
-    reference id is random — covered by the deterministic logstore.ids
-    module and its unit tests, not an oracle query."""
+    NoTrigger), plus JSON payload extraction. The id is
+    ``logstore.ids.doc_id`` with a NULL discriminator: the reference's
+    ULID segment is random, so it is left out here and ``concat_ws``
+    skips the NULL, keeping the id oracle-checkable."""
     ev = table(spark, sf_dir, "events").where(F.col("user_id") <= 20)
-    blank_safe = F.when(
-        F.col("event_type").isNotNull() & (F.trim("event_type") != ""),
-        F.col("event_type"),
-    ).otherwise(F.lit("NoTrigger"))
     return ev.select(
         "event_id",
-        F.concat_ws(
-            "_",
-            F.when(F.col("user_id").isNotNull(), F.col("user_id").cast("string")).otherwise(
-                "NoUserId"
-            ),
-            blank_safe,
-            F.unix_millis("ts").cast("string"),
+        doc_id(
+            F.col("user_id"),
+            F.col("event_type"),
+            F.col("ts"),
+            discriminator=F.lit(None).cast("string"),
         ).alias("doc_id"),
         # try_cast: a non-scalar $.k (nested object — fuzz 5) must be NULL,
         # not an ANSI CAST_INVALID_INPUT (ANSI is the Spark 4 default)

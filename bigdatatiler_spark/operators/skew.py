@@ -72,22 +72,6 @@ def salted_sum_count(
     return p1.groupBy(key).agg(*merges)
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    distinguisher: str,
-    n: int = N_SALT,
-) -> DataFrame:
-    """Equi-join where ``big``'s ``key`` is skewed: small side replicates
-    n×, big side routes by (key, salt). Result ≡ big.join(small, key)."""
-    salted_big = big.withColumn("_salt", salt_col(distinguisher, n))
-    replicated = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n)]))
-    )
-    return salted_big.join(replicated, [key, "_salt"]).drop("_salt")
-
-
 @register(
     "skew_salted_user_activity",
     oracle="""

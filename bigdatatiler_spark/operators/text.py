@@ -208,12 +208,6 @@ def corpus_language_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- quality scoring ------------------------------------------------------
 
-#: weights of the composite quality score (stopword-, alpha-, length-term)
-QW_STOP, QW_ALPHA, QW_LEN = 0.4, 0.3, 0.3
-STOP_SAT = 0.05  # stopword ratio at which the stopword term saturates
-LEN_SAT = 50.0  # token count at which the length term saturates
-
-
 _QUALITY_ORACLE = f"""
     WITH t AS (
       SELECT doc_id, source, text, n_chars,
@@ -259,8 +253,9 @@ def quality_frame(docs: DataFrame) -> DataFrame:
     hits = F.size(F.filter("toks", lambda x: x.isin(*_EN_STOPWORDS)))
     alpha = F.length(F.regexp_replace("text", r"[^A-Za-z]", ""))
     punct = F.length(F.regexp_replace("text", r"[^.!?,;:]", ""))
-    # every term lives on the e4 integer grid: /STOP_SAT is ×20, /LEN_SAT
-    # is ×200, and the 0.4/0.3/0.3 weights are 4/3/3 over 10 — the whole
+    # every term lives on the e4 integer grid: the stopword term saturates
+    # at ratio 0.05 (×20), the length term at 50 tokens (×200), and the
+    # 0.4/0.3/0.3 weights are 4/3/3 over 10 — the whole
     # score is exact integer arithmetic end to end (this query is where
     # the round(double) midpoint-tie divergence was OBSERVED at sf0.1)
     terms = t.select(

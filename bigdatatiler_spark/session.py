@@ -55,8 +55,8 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Spark's legacy INT96 timestamp encoding carries NO column statistics,
     # so every timestamp written by the engine would be invisible to
-    # row-group/file min-max skipping — the clustered/z-ordered layouts
-    # and manifest pruning all lose their reason to exist. INT64 micros
+    # row-group/file min-max skipping, and a sorted or Z-ordered layout
+    # would lose its reason to exist. INT64 micros
     # has stats and is what every modern reader expects.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }

@@ -6,9 +6,6 @@ becomes:
 
 - Parquet as the primary table format (schema-on-write, partitioned) —
   `read_table` / `write_table`;
-- JSON and CSV for document/interchange parity — explicit schemas always
-  (schema inference is a full extra pass at 100 TB, and silently drifts);
-- `binaryFile` reads for opaque blobs;
 - a per-row byte sink mirroring `writeDocumentTofile`
   (BigDataLogControl.cs:354-361) — but distributed: each *executor*
   writes its partition's payloads, no driver collect.
@@ -25,7 +22,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 #: physical-tiling defaults (the engine's analogue of the 1.5 MB doc cap)
 DEFAULT_MAX_RECORDS_PER_FILE = 1_000_000
@@ -72,67 +68,6 @@ def write_table(
     w.parquet(path)
 
 
-def read_json(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    """JSON lines reader — explicit schema, corrupt rows quarantined to
-    `_corrupt_record` instead of failing the 100 TB job."""
-    return (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("compression", "gzip").json(path)
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: StructType, header: bool = True
-) -> DataFrame:
-    return (
-        spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("mode", "PERMISSIVE")
-        .csv(path)
-    )
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", "true").csv(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC reader — the other columnar interchange format (Hive-ecosystem
-    tables land as ORC; same predicate-pushdown/column-pruning contract
-    as parquet, verified in tests/test_sources.py). Avro is NOT offered:
-    spark-avro is an external module absent from this environment, and a
-    silently-degraded reader is worse than none."""
-    return spark.read.orc(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
-) -> None:
-    """ORC writer with the same physical-tiling policy as write_table."""
-    w = (
-        df.write.mode(mode)
-        .option("compression", DEFAULT_COMPRESSION)
-        .option("maxRecordsPerFile", DEFAULT_MAX_RECORDS_PER_FILE)
-    )
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
-def read_binary_files(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Opaque-blob reader: (path, modificationTime, length, content)."""
-    return spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-
-
 def write_payload_files(
     df: DataFrame,
     out_dir: str,
@@ -164,40 +99,3 @@ def write_payload_files(
 
     sel.foreachPartition(_write_partition)
     return len([n for n in os.listdir(out_dir) if n.endswith(suffix)])
-
-
-def export_jsonl_shards(
-    df: DataFrame,
-    path: str,
-    shard_col: str,
-    n_shards: int,
-    order_col: str | None = None,
-    max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Trainer-facing JSONL export: the corpus lands as ``shard=K/``
-    directories of JSON-lines files, sharded by a STABLE hash of
-    ``shard_col`` (md5-derived, same idiom as sampling.py — re-running
-    the export after a rewrite/compaction puts every record back in the
-    same shard, which is what makes training resumable), optionally
-    sorted within each shard and split at ``max_records_per_file`` so no
-    single file exceeds what a trainer worker wants to stream.
-
-    Plan shape: one repartition keyed by the shard id (the only
-    shuffle), then ``partitionBy`` writes each shard directory from the
-    partition that owns it — shard count decouples from executor count,
-    and `maxRecordsPerFile` bounds file size without a second pass.
-    """
-    shard = (
-        F.conv(
-            F.substring(F.md5(F.col(shard_col).cast("string")), 1, 8), 16, 10
-        ).cast("bigint")
-        % n_shards
-    ).alias("shard")
-    out = df.withColumn("shard", shard).repartition(n_shards, "shard")
-    if order_col is not None:
-        out = out.sortWithinPartitions("shard", order_col)
-    writer = out.write.mode(mode).partitionBy("shard")
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.json(path)

@@ -1,127 +1,15 @@
-"""Physical data layout: range-clustered writes and size-targeted
-compaction.
+"""Physical data layout: the Z-order (Morton) clustering key.
 
 The reference's only layout policy is the 1.5 MB per-document cap
 (LogChange.cs:23-24) — a single-node store doesn't need more. A 100 TB
-parquet table needs two more:
-
-- **Clustered (sorted) layout** for data skipping: rows range-partitioned
-  and sorted on the columns queries filter by, so every file (and every
-  row group inside it) covers a narrow, non-overlapping key range.
-  Parquet stores per-row-group min/max stats; a pushed-down predicate
-  then skips whole row groups / files instead of scanning the table.
-  This is the open-analogue of clustering keys in any warehouse, built
-  from two primitives Spark already has: `repartitionByRange` (sampled
-  range exchange → equal-sized, ordered output partitions — no global
-  sort materialization on one node) + `sortWithinPartitions`.
-
-- **Compaction** for the small-files problem: streaming ingest and
-  per-partition appends leave thousands of KB-sized files; each file
-  costs a task + a footer read + a metadata entry, so scan cost drifts
-  away from data cost. Compaction rewrites a table at a target file
-  size with the SAME clustering, restoring the skip-friendly layout.
-
-Both are plain batch jobs over DataFrames — at 100 TB they run per
-partition-directory (compact yesterday's partition, not the table).
+parquet table queried by two independent predicates (user and time, the
+reference's two query axes) also needs a sort key that keeps parquet's
+per-file min/max stats narrow on BOTH columns. ``zorder_key`` is that
+key; the registered ``events_zorder_key`` query computes it per event and
+is oracle-checked like any other operator.
 """
 
 from __future__ import annotations
-
-import math
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-
-from .io import DEFAULT_COMPRESSION
-
-#: target bytes per parquet file after compaction (128 MB — one HDFS-ish
-#: block: big enough to amortize footers/tasks, small enough to parallelize)
-DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_by: tuple[str, ...],
-    num_files: int,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as ``num_files`` range-clustered, internally sorted
-    parquet files on ``cluster_by``.
-
-    `repartitionByRange` samples the keys and assigns contiguous,
-    non-overlapping ranges to partitions (one ordered shuffle, skew-aware
-    via sampling); `sortWithinPartitions` orders rows inside each, so
-    parquet's row-group min/max stats are tight. A subsequent scan with a
-    pushed filter on the leading cluster column touches only the files
-    whose range intersects the predicate.
-    """
-    if not cluster_by:
-        raise ValueError("cluster_by must name at least one column")
-    (
-        df.repartitionByRange(num_files, *cluster_by)
-        .sortWithinPartitions(*cluster_by)
-        .write.mode(mode)
-        .option("compression", DEFAULT_COMPRESSION)
-        .parquet(path)
-    )
-
-
-def _data_files(path: str) -> list[str]:
-    return [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith("_")
-    ]
-
-
-def table_file_stats(path: str) -> dict:
-    """{'n_files': int, 'total_bytes': int, 'avg_bytes': float} for a
-    (non-partitioned) parquet directory — the compaction trigger input.
-
-    At 100 TB this comes from the table metadata / listing service, not a
-    local listdir; the decision logic is the same: compact when
-    avg_bytes drifts far below the target."""
-    files = _data_files(path)
-    total = sum(os.path.getsize(f) for f in files)
-    return {
-        "n_files": len(files),
-        "total_bytes": total,
-        "avg_bytes": (total / len(files)) if files else 0.0,
-    }
-
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    cluster_by: tuple[str, ...] = (),
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-) -> dict:
-    """Rewrite the parquet directory at ``path`` into
-    ``ceil(total_bytes / target_file_bytes)`` files at ``out_path``,
-    re-clustered on ``cluster_by`` when given (else coalesced without a
-    shuffle). Returns {'files_before', 'files_after'}.
-
-    Writing to a fresh directory then swapping is deliberate: a compactor
-    must never destroy the only copy mid-rewrite. On a real cluster the
-    swap is an atomic metadata commit (table format / HMS); here the
-    caller renames."""
-    before = table_file_stats(path)
-    n_out = max(1, math.ceil(before["total_bytes"] / target_file_bytes))
-    df = spark.read.parquet(path)
-    if cluster_by:
-        write_clustered(df, out_path, cluster_by, n_out, mode="overwrite")
-    else:
-        # coalesce: merges partitions without a shuffle — the cheap path
-        # when the existing row order is fine and only file count is wrong
-        (
-            df.coalesce(n_out)
-            .write.mode("overwrite")
-            .option("compression", DEFAULT_COMPRESSION)
-            .parquet(out_path)
-        )
-    return {"files_before": before["n_files"], "files_after": len(_data_files(out_path))}
 
 
 # --- Z-order (Morton) clustering ------------------------------------------
@@ -170,49 +58,6 @@ def _scale_expr(col: str, lo: str, hi: str, bits: int) -> str:
     )
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    num_files: int,
-    bits: int = ZORDER_BITS,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` range-clustered on the Morton key of (col_a, col_b):
-    min/max-normalize both dimensions (one tiny 1-row aggregate), then
-    one sampled range exchange + in-partition sort on the interleaved
-    key, so every file covers a small tile of the 2-D space and parquet
-    min/max stats stay tight on BOTH columns. Same plan shape (and cost)
-    as write_clustered plus the bounds aggregate."""
-    from pyspark.sql import functions as F
-
-    b = df.agg(
-        F.min(col_a).alias("a_lo"),
-        F.max(col_a).alias("a_hi"),
-        F.min(col_b).alias("b_lo"),
-        F.max(col_b).alias("b_hi"),
-    ).first()
-    if b["a_lo"] is None or b["b_lo"] is None:
-        # empty input (or all-null dims): nothing to cluster — write the
-        # empty table with its schema instead of interpolating None into SQL
-        df.write.mode(mode).option("compression", DEFAULT_COMPRESSION).parquet(path)
-        return
-    na = _scale_expr(col_a, str(b["a_lo"]), str(b["a_hi"]), bits)
-    nb = _scale_expr(col_b, str(b["b_lo"]), str(b["b_hi"]), bits)
-    (
-        df.withColumn("__na", F.expr(na))
-        .withColumn("__nb", F.expr(nb))
-        .withColumn("__zkey", zorder_key("__na", "__nb", bits))
-        .repartitionByRange(num_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__na", "__nb", "__zkey")
-        .write.mode(mode)
-        .option("compression", DEFAULT_COMPRESSION)
-        .parquet(path)
-    )
-
-
 def _zorder_oracle() -> str:
     b = ZORDER_BITS
     top = (1 << b) - 1
@@ -257,11 +102,10 @@ def _register_zorder_query() -> None:
     def events_zorder_key(spark: SparkSession, sf_dir: str) -> _DF:
         """The Z-order layout key as a first-class operator: per event,
         its min/max-normalized (user, epoch-hour) tile coordinates and
-        Morton key — the sort key write_zordered clusters on. The bounds
+        Morton key — the sort key a Z-ordered write clusters on. The bounds
         are a 1-row broadcast aggregate (the oracle's window-over-()
         formulation is the independent cross-check); everything else is a
-        map-only projection. The layout win the key buys is measured in
-        tests/test_layout.py from parquet footer min/max ranges."""
+        map-only projection."""
         b = ZORDER_BITS
         ev = table(spark, sf_dir, "events").select(
             "event_id",

@@ -1,24 +1,17 @@
-"""Continuous aggregation: hypertable-style rollups with incremental
-refresh, plus CDC-style MERGE/upsert.
+"""Hourly rollup state and partition-scoped MERGE/upsert.
 
 The reference is an append-only log store (LogChange.cs:99-342 — documents
 are inserted, never aggregated in place). At 100 TB an events table is
 unqueryable raw for dashboard-class questions; the warehouse-native answer
 is a *materialized rollup* (TimescaleDB's continuous aggregates, Druid
 rollup segments): a small pre-aggregated table keyed by (time bucket,
-dimension), refreshed incrementally as new data lands.
+dimension).
 
-Scale design — both operations touch only the data that changed:
-
-- **Rollup state is re-mergeable.** Every measure is an integer partial
-  aggregate (count; exact DECIMAL cents, not float sums), so
-  ``merged = re-aggregate(old ∪ delta)`` is associative and exact — no
-  "average of averages" class of bug, no float drift between refreshes.
-- **Refresh rewrites only affected day partitions.** The delta's distinct
-  ``bucket_date`` set is tiny (days, not rows) and drives (a) a
-  partition-pruned read of the existing rollup and (b) a *dynamic*
-  partition overwrite, so a daily refresh over a year-long rollup
-  rewrites 1-2 directories, not 365.
+- **Rollup state is re-mergeable.** ``hourly_rollup`` emits only integer
+  partial aggregates (count; exact DECIMAL cents, not float sums), so
+  ``re-aggregate(old ∪ delta)`` is associative and exact — no "average
+  of averages" class of bug. The registered ``events_hourly_rollup``
+  query is that state, oracle-checked against raw events.
 - **MERGE is partition-scoped.** Upserts join the update set against only
   the target partitions it can touch; untouched partitions are never
   read or rewritten.
@@ -30,127 +23,26 @@ algorithm those formats run, expressed on partition directories.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .io import DEFAULT_COMPRESSION
 
-#: partition column the rollup is stored under (one directory per day —
-#: the refresh/overwrite granularity)
-BUCKET_DATE = "bucket_date"
 
-_MEASURES = ("n_events", "value_cents")
-
-
-def hourly_rollup(events: DataFrame, with_users_hll: bool = False) -> DataFrame:
+def hourly_rollup(events: DataFrame) -> DataFrame:
     """(hour bucket, event_type) rollup with re-mergeable integer measures.
 
     ``bucket_ms`` is the epoch-ms hour start (never a raw timestamp —
     registry determinism rules); ``value_cents`` sums exact DECIMAL(18,2)
     cents as BIGINT. One shuffle, with map-side partial aggregation.
-
-    ``with_users_hll`` adds ``users_hll`` — a Druid-style re-aggregatable
-    DataSketches HLL of distinct ``user_id`` per bucket. COUNT(DISTINCT)
-    is the one dashboard measure a plain rollup CANNOT answer (distinct
-    counts don't sum across buckets or refreshes); storing the sketch
-    state makes it mergeable like the integer measures: ``_merge`` folds
-    deltas with ``hll_union_agg`` (register-wise max — commutative and
-    associative, so incremental == full recompute exactly, proven in
-    tests/test_rollup.py), and any day/week/whole-table distinct count
-    is ``hll_sketch_estimate(hll_union_agg(users_hll))`` over the tiny
-    rollup instead of a 100 TB re-scan of raw events.
     """
-    base = events.select(
+    return events.select(
         (F.unix_millis(F.date_trunc("hour", F.col("ts")))).alias("bucket_ms"),
         "event_type",
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
-        "user_id",
-    ).groupBy("bucket_ms", "event_type")
-    aggs = [
+    ).groupBy("bucket_ms", "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("cents").alias("value_cents"),
-    ]
-    if with_users_hll:
-        aggs.append(F.hll_sketch_agg("user_id").alias("users_hll"))
-    return base.agg(*aggs)
-
-
-def _with_bucket_date(rollup: DataFrame) -> DataFrame:
-    return rollup.withColumn(
-        BUCKET_DATE,
-        F.date_format(F.timestamp_millis(F.col("bucket_ms")), "yyyy-MM-dd"),
     )
-
-
-def _merge(parts: DataFrame) -> DataFrame:
-    """Re-aggregate partial rollup rows — associative/exact by design.
-    Sketch columns merge by register union, integers by sum."""
-    aggs = [
-        F.sum("n_events").alias("n_events"),
-        F.sum("value_cents").alias("value_cents"),
-    ]
-    if "users_hll" in parts.columns:
-        aggs.append(F.hll_union_agg("users_hll").alias("users_hll"))
-    return parts.groupBy("bucket_ms", "event_type", BUCKET_DATE).agg(*aggs)
-
-
-def build_rollup(events: DataFrame, path: str, with_users_hll: bool = False) -> None:
-    """Materialize the hourly rollup, one parquet directory per day."""
-    (
-        _with_bucket_date(hourly_rollup(events, with_users_hll))
-        .repartition(BUCKET_DATE)
-        .write.mode("overwrite")
-        .option("compression", DEFAULT_COMPRESSION)
-        .partitionBy(BUCKET_DATE)
-        .parquet(path)
-    )
-
-
-def refresh_rollup(spark: SparkSession, path: str, new_events: DataFrame) -> list[str]:
-    """Incrementally fold ``new_events`` into the rollup at ``path``.
-
-    Computes the delta rollup, reads ONLY the existing day-partitions the
-    delta touches (partition pruning on ``bucket_date``), re-merges, and
-    dynamically overwrites just those directories. Returns the affected
-    dates. Exactly-once caveat: the overwrite is idempotent per refresh
-    batch, but feeding the same events twice double-counts — callers
-    dedup the input (streaming: ``dedup_within_watermark``) upstream.
-    """
-    # the stored schema decides whether the delta carries the HLL column —
-    # a sketch-bearing rollup stays sketch-bearing across refreshes
-    stored = spark.read.parquet(path)
-    delta = _with_bucket_date(
-        hourly_rollup(new_events, with_users_hll="users_hll" in stored.columns)
-    )
-    # The affected-date set is days, not rows — a driver-side list is the
-    # partition-pruning predicate, same trick Delta's replaceWhere uses.
-    dates = sorted(r[0] for r in delta.select(BUCKET_DATE).distinct().collect())
-    if not dates:
-        return []
-    existing = (
-        stored
-        # prune on the raw partition column (Catalyst casts the string
-        # literals; only the affected directories are listed/read) ...
-        .filter(F.col(BUCKET_DATE).isin(dates))
-        # ... then normalize the inferred-DATE partition value back to the
-        # delta's string form so the union's types line up
-        .withColumn(BUCKET_DATE, F.date_format(BUCKET_DATE, "yyyy-MM-dd"))
-    )
-    merged = _merge(existing.unionByName(delta))
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition(BUCKET_DATE)
-            .write.mode("overwrite")
-            .option("compression", DEFAULT_COMPRESSION)
-            .partitionBy(BUCKET_DATE)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
-    return dates
 
 
 def merge_upsert(
@@ -194,57 +86,6 @@ def merge_upsert(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
 
 
-def _journal_dir(path: str) -> str:
-    return os.path.join(path, "_rollup_commits")
-
-
-def committed_batches(path: str) -> set[int]:
-    d = _journal_dir(path)
-    if not os.path.isdir(d):
-        return set()
-    return {int(f) for f in os.listdir(d) if f.isdigit()}
-
-
-def rollup_batch_handler(path: str):
-    """foreachBatch handler folding each micro-batch into the rollup,
-    idempotent in batch_id.
-
-    Structured Streaming re-delivers the last uncommitted batch after a
-    failure (at-least-once); the journal marker written AFTER the
-    partition overwrite turns that into exactly-once — a replayed
-    batch_id is a no-op instead of a double-count. The marker lives
-    beside the data (on a cluster: same DFS/object store, written by the
-    driver) — the same write-then-commit order table formats use.
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in committed_batches(path):
-            return
-        if os.path.isdir(path) and any(
-            f.startswith(f"{BUCKET_DATE}=") for f in os.listdir(path)
-        ):
-            refresh_rollup(batch_df.sparkSession, path, batch_df)
-        else:
-            build_rollup(batch_df, path)
-        os.makedirs(_journal_dir(path), exist_ok=True)
-        with open(os.path.join(_journal_dir(path), str(batch_id)), "w"):
-            pass
-
-    return _apply
-
-
-def stream_rollup(events_stream: DataFrame, path: str, checkpoint_dir: str):
-    """Continuous aggregation: maintain the hourly rollup from an events
-    stream. Each micro-batch touches only the day partitions it contains
-    — steady-state cost tracks the batch, not the table. Returns the
-    started query (caller awaits termination)."""
-    from ..streaming.joins import write_foreach_batch
-
-    return write_foreach_batch(
-        events_stream, rollup_batch_handler(path), checkpoint_dir
-    )
-
-
 def _register_queries() -> None:
     from ..registry import register
     from ..tables import table
@@ -264,74 +105,9 @@ def _register_queries() -> None:
     )
     def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         """The materialized-rollup state as a query: (hour, event_type)
-        buckets with all-integer re-mergeable measures. This exact frame
-        is what build_rollup persists and refresh_rollup folds deltas
-        into (tests/test_rollup.py proves incremental == full recompute);
-        the oracle recomputes it from raw events independently."""
+        buckets with all-integer re-mergeable measures; the oracle
+        recomputes it from raw events independently."""
         return hourly_rollup(table(spark, sf_dir, "events"))
 
 
 _register_queries()
-
-
-def refresh_rollup_from_diff(
-    spark: SparkSession,
-    rollup_path: str,
-    table_path: str,
-    from_version: int,
-    to_version: int,
-) -> list[str]:
-    """Incremental view maintenance off the CDC feed, WITH retractions.
-
-    ``refresh_rollup`` handles append-only deltas; versioned tables also
-    produce row REMOVALS (commit_delete, overwrites). Because every
-    measure is an additive integer partial aggregate, a removal folds in
-    as its exact negative — fold(added) − fold(removed) == recompute, no
-    approximation, no full re-scan; buckets whose count reaches zero are
-    dropped. IO is bounded by the diff (changed files only), not the
-    table or the rollup.
-
-    Sketch columns are NOT retractable (an HLL union cannot forget);
-    a sketch-bearing rollup must recompute affected buckets from the
-    current version instead — this function refuses it loudly rather
-    than silently over-counting.
-    """
-    from .versioned import version_diff
-
-    stored = spark.read.parquet(rollup_path)
-    if "users_hll" in stored.columns:
-        raise ValueError(
-            "refresh_rollup_from_diff cannot retract HLL sketch state; "
-            "rebuild the affected buckets from the current table version "
-            "(sketches are mergeable, not subtractable)"
-        )
-    added, removed = version_diff(spark, table_path, from_version, to_version)
-    plus = _with_bucket_date(hourly_rollup(added))
-    minus = _with_bucket_date(hourly_rollup(removed)).select(
-        "bucket_ms",
-        "event_type",
-        (-F.col("n_events")).alias("n_events"),
-        (-F.col("value_cents")).alias("value_cents"),
-        BUCKET_DATE,
-    )
-    delta = plus.unionByName(minus)
-    dates = sorted(r[0] for r in delta.select(BUCKET_DATE).distinct().collect())
-    if not dates:
-        return []
-    existing = stored.filter(F.col(BUCKET_DATE).isin(dates)).withColumn(
-        BUCKET_DATE, F.date_format(BUCKET_DATE, "yyyy-MM-dd")
-    )
-    merged = _merge(existing.unionByName(delta)).where(F.col("n_events") > 0)
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition(BUCKET_DATE)
-            .write.mode("overwrite")
-            .option("compression", DEFAULT_COMPRESSION)
-            .partitionBy(BUCKET_DATE)
-            .parquet(rollup_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
-    return dates

@@ -9,9 +9,7 @@ shape. This module provides:
   files dropped by an upstream writer, exactly-once via file tracking);
 - shared window transformations that run identically on batch and
   streaming frames (the batch run is oracle-checked in operators/windows,
-  the streaming run is integration-tested with availableNow triggers);
-- ``dedup_within_watermark``: at-least-once → effectively-once by keyed
-  dedup bounded by the watermark.
+  the streaming run is integration-tested with availableNow triggers).
 
 Watermark discipline: every stateful op bounds its state with
 ``withWatermark`` — unbounded state is the streaming analog of a
@@ -109,11 +107,3 @@ def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
             "n_events",
         )
     )
-
-
-def dedup_within_watermark(events: DataFrame) -> DataFrame:
-    """Keyed dedup with watermark-bounded state (streaming-safe
-    dropDuplicates — the batch equivalent is a plain dropDuplicates)."""
-    if events.isStreaming:
-        return events.dropDuplicatesWithinWatermark(["event_id"])
-    return events.dropDuplicates(["event_id"])

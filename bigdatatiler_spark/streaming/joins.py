@@ -1,4 +1,4 @@
-"""Stream-stream joins and idempotent micro-batch sinks.
+"""Stream-stream interval joins.
 
 Stream-stream interval join: the streaming form of the engine's
 range/as-of joins (operators/asof.py). Both sides carry watermarks and
@@ -6,16 +6,9 @@ the join condition bounds event-time distance, so Spark can size the
 join state buffer and evict rows once the other side's watermark passes
 — without the time bound the state is unbounded (the streaming analog of
 an unbucketed cross join; never ship that).
-
-foreachBatch sink: each micro-batch arrives with a monotonically
-increasing batch_id; writing through a batch_id-keyed path (or a
-transactional target) makes replays after failure idempotent —
-exactly-once output on top of at-least-once re-execution.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -76,28 +69,3 @@ def purchase_attribution_join(
         "p_ts",
         "c_ts",
     )
-
-
-def write_foreach_batch(
-    stream: DataFrame,
-    handler: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-    output_mode: str = "append",
-):
-    """Run a stream through a foreachBatch handler with checkpointing.
-
-    The handler receives (batch_df, batch_id); it must be idempotent in
-    batch_id — on recovery Spark may re-deliver the last uncommitted
-    batch. Returns the started query (caller awaits termination).
-    ``output_mode='update'`` is required upstream of stateful operators
-    (applyInPandasWithState/transformWithState) that emit on completion.
-    """
-    writer = (
-        stream.writeStream.foreachBatch(handler)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,6 +1,6 @@
 """Batch-checkable parity query for the streaming pipeline.
 
-The streaming family (ingest/joins/reassemble) was pytest-only
+The streaming family (ingest/joins) was pytest-only
 through round 4 — the driver's correctness harness never executed a
 Structured Streaming plan. This module closes that gap: the registered
 query runs the REAL streaming engine (micro-batch execution,
@@ -19,7 +19,7 @@ the full streaming plan compiles and executes under the driver's session.
 Scale: this is THE streaming rollup shape — per (type, hour) partial
 aggregation in state, O(|types| x |hours|) state rows, shuffle only on
 the window key. At 100 TB the same plan runs continuously with an
-append-mode sink + downstream compaction (sources/rollup.py's journal).
+append-mode sink + downstream compaction.
 """
 
 from __future__ import annotations
@@ -508,8 +508,7 @@ def events_streaming_stateful_parity(spark: SparkSession, sf_dir: str) -> DataFr
     µs). The built-in shapes (window agg, dedup, join) cover declarable
     state; this certifies the ESCAPE HATCH users reach for when state
     transitions are imperative (sessionization with business rules,
-    fraud counters, chain reassembly — streaming/reassemble.py shares
-    this exact API).
+    fraud counters, chain reassembly).
 
     Determinism under micro-batch splits: state is cumulative and every
     invocation of a key consumes ≥1 new row, so n_events strictly

@@ -54,8 +54,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 #: Columns the engine requires per table (schema canary — a regenerated
 #: fixture that drops/renames one of these fails with a NAMED diagnostic
 #: instead of 9 downstream AnalysisExceptions).
@@ -404,15 +402,3 @@ def event_ts(iso: str) -> Column:
     (string→timestamp parses in the session tz, pinned UTC by tune_session;
     pushes down into the parquet scan)."""
     return F.lit(iso).cast("timestamp")
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every test table as a temp view (canonicalized columns, same
-    loaders as the DataFrame surface) so ad-hoc ``spark.sql`` works against
-    the same names the DuckDB oracle uses."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -13,15 +13,14 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 #: Slow tier (r12 verdict item 3): the default `pytest tests/` run must
-#: complete inside the driver's verification window, so the two files
-#: whose wall-clock dwarfs everything else — the streaming micro-batch
-#: replay matrix and the hostile-fixture differential sweep — are
-#: SKIPPED by default with an explicit reason in the report, and run
-#: when BDT_FULL_TESTS=1 (the builder's full gate before every round
-#: commit; its result is recorded in OPTIMIZATION_r*.md). Contracts,
-#: sf0.01 oracle comparisons, and the plan pins all stay in the default
-#: tier. Measured per-file (idle box, r13): every other file ≤ ~100 s.
-SLOW_TIER_FILES = ("test_streaming.py", "test_hostile_fixtures.py")
+#: complete inside the driver's verification window, so the file whose
+#: wall-clock dwarfs everything else — the hostile-fixture differential
+#: sweep (109 cases) — is SKIPPED by default with an explicit reason in
+#: the report, and runs when BDT_FULL_TESTS=1.
+#: Contracts, sf0.01 oracle comparisons, and the plan pins all stay in
+#: the default tier. test_streaming.py runs by default: its four tests
+#: take ~65 s on a 4-core box.
+SLOW_TIER_FILES = ("test_hostile_fixtures.py",)
 
 
 def pytest_collection_modifyitems(config, items):

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdatatiler_spark.logstore.codec import unzip_payload, zip_payload
-from bigdatatiler_spark.logstore.ids import doc_id, split_id
+from bigdatatiler_spark.logstore.ids import doc_id
 from bigdatatiler_spark.logstore.tile import reassemble, tile
 
 
@@ -64,11 +64,6 @@ def test_doc_id_fallbacks(spark):
     assert ids[2]["id"].startswith("u2_NoTrigger_")
     # time-sortable: epoch-ms is embedded
     assert all(r["id"].endswith("_1700000000000") for r in ids)
-
-
-def test_split_id(spark):
-    df = spark.createDataFrame([("p1", 2)], ["pid", "idx"])
-    assert df.select(split_id(F.col("pid"), F.col("idx")).alias("s")).first()["s"] == "p1_split2"
 
 
 def test_tile_zip_reassemble_roundtrip(spark, docs):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import ast
+import glob
 import importlib.util
 import os
 
@@ -30,7 +32,9 @@ def test_registry_consistency(spark):
     qs, osql = mod.queries(), mod.oracle_sql()
     assert len(qs) >= 40
     assert set(osql) <= set(qs)
-    # every callable is (spark, sf_dir) -> DataFrame (lazy — no job run here)
+    # every callable is (spark, sf_dir) -> DataFrame; building it is not
+    # free: queries with eager ``_util.stage(df, "shared")`` sites run
+    # Spark jobs here, before any action
     for name, fn in qs.items():
         df = fn(spark, "/root/testdata/sf0.001")
         assert df.columns, name
@@ -209,7 +213,6 @@ def test_no_oracle_names_stay_out_of_window():
 def _package_code():
     """(rel path, line number, code, enclosing top-level def) for every
     line of the package, with ``#`` comments stripped."""
-    import glob
     import re
 
     pkg = os.path.join(os.path.dirname(__file__), "..", "bigdatatiler_spark")
@@ -278,3 +281,85 @@ def test_shared_kernels_have_one_home():
         ],
         "reach": ["operators/graph.py::components_sql"],
     }
+
+
+#: Package definitions kept although no root reaches them, with the reason.
+_UNREACHED_ALLOWED = {
+    "write_payload_files": "O7 byte sink: the reference's writeDocumentTofile "
+    "(BigDataLogControl.cs:354-361, README row O7)",
+}
+
+
+def _names(node):
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+    return out
+
+
+def test_every_package_definition_is_reached():
+    """Every top-level def, class and assigned name in the package is
+    reached, transitively, from a root: the registered queries and their
+    oracles, ``bench.py``, ``__spark_entry__.py``, ``tools/*.py`` and
+    ``perfbench/*.py``. Tests are not roots — code only a test calls is
+    a second surface nothing runs. Matching is by name, so a name clash
+    counts as a caller; module-level statements other than imports count
+    as roots (they run on import)."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    roots: set[str] = set()
+    for path in sorted(glob.glob(os.path.join(REPO, "bigdatatiler_spark", "**", "*.py"),
+                                 recursive=True)):
+        rel = os.path.relpath(path, REPO)
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+                bound = {stmt.name}
+            elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+                targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+                bound = {n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)}
+            elif isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            else:
+                roots |= _names(stmt)
+                continue
+            registered = any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+                for d in getattr(stmt, "decorator_list", ())
+            )
+            for name in bound:
+                if registered or (name.startswith("__") and name.endswith("__")):
+                    roots |= _names(stmt) | {name}
+                else:
+                    defs.setdefault(name, []).append((rel, stmt))
+    for pattern in ("bench.py", "__spark_entry__.py", "tools/*.py", "perfbench/*.py"):
+        for path in glob.glob(os.path.join(REPO, pattern)):
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            roots |= _names(tree) | {
+                a.name for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+                for a in n.names
+            }
+
+    reached: set[str] = set()
+    todo = list(roots)
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            for _, stmt in defs.get(name, ()):
+                todo.extend(_names(stmt) - reached)
+    assert set(_UNREACHED_ALLOWED) <= set(defs), "stale allowance"
+    unreached = sorted(
+        f"{rel}:{stmt.lineno} {name}"
+        for name, found in defs.items()
+        if name not in reached and name not in _UNREACHED_ALLOWED
+        for rel, stmt in found
+    )
+    assert not unreached, (
+        f"{len(unreached)} package definitions no query, tool or workload "
+        "reaches:\n" + "\n".join(unreached)
+    )

@@ -54,23 +54,6 @@ def test_fixture_canaries_pass(spark):
             assert df.columns, f"{sf}/{name}"
 
 
-def test_register_views_sql_surface(spark):
-    """register_views exposes every table to raw spark.sql under the
-    oracle's names, with the canonical loader columns (ts/ts_ns pair)."""
-    from bigdatatiler_spark.tables import register_views
-
-    register_views(spark, SF)
-    row = spark.sql(
-        "SELECT count(*) AS n, min(ts_ns) AS mn FROM events"
-    ).first()
-    assert row["n"] > 0 and row["mn"] > 0
-    joined = spark.sql(
-        "SELECT count(*) AS n FROM orders o JOIN customer c"
-        " ON o.o_custkey = c.c_custkey"
-    ).first()
-    assert joined["n"] > 0
-
-
 def test_events_postconditions(spark):
     """table('events') must expose canonical (ts timestamp, ts_ns long)
     whatever physical encoding the fixture uses."""

@@ -1,143 +1,6 @@
-"""Physical-layout contracts: range-clustered writes must produce
-disjoint per-file key ranges (verified from the parquet footers
-themselves, not from Spark's own reporting), and compaction must hit the
-target file count without losing rows."""
+"""Table-loader metadata caches stay bounded."""
 
 from __future__ import annotations
-
-import pyarrow.parquet as pq
-from pyspark.sql import functions as F
-
-from bigdatatiler_spark.sources.layout import (
-    _data_files,
-    compact_table,
-    table_file_stats,
-    write_clustered,
-)
-
-SF = "/root/testdata/sf0.001"
-
-
-def _file_ranges(path: str, column: str) -> list[tuple]:
-    """Per-file (min, max) of ``column`` read from parquet row-group
-    statistics — the exact metadata a scan uses to skip."""
-    ranges = []
-    for f in sorted(_data_files(path)):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.to_arrow_schema().get_field_index(column)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            assert st is not None and st.has_min_max, "stats missing"
-            mins.append(st.min)
-            maxs.append(st.max)
-        ranges.append((min(mins), max(maxs)))
-    return ranges
-
-
-def test_write_clustered_produces_disjoint_sorted_files(spark, tmp_path):
-    out = str(tmp_path / "orders_clustered")
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    n = orders.count()
-    write_clustered(orders, out, ("o_orderdate",), num_files=4)
-
-    back = spark.read.parquet(out)
-    assert back.count() == n
-
-    ranges = sorted(_file_ranges(out, "o_orderdate"))
-    assert len(ranges) == 4
-    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
-        assert hi <= lo, f"file ranges overlap: {hi} > {lo}"
-
-
-def test_clustered_scan_pushes_range_predicate(spark, tmp_path):
-    """The point of the layout: a range filter must reach the parquet
-    scan as a pushed filter so the disjoint file stats can prune."""
-    out = str(tmp_path / "orders_clustered2")
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    write_clustered(orders, out, ("o_orderdate",), num_files=4)
-
-    q = spark.read.parquet(out).where(F.col("o_orderdate") < "1993-01-01")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "o_orderdate" in plan.split("PushedFilters")[1][:200]
-
-
-def test_compact_table_hits_target_and_keeps_rows(spark, tmp_path):
-    frag = str(tmp_path / "fragmented")
-    out = str(tmp_path / "compacted")
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    n = orders.count()
-    # simulate streaming-ingest fragmentation: 64 tiny files
-    orders.repartition(64).write.parquet(frag)
-    assert table_file_stats(frag)["n_files"] == 64
-
-    total = table_file_stats(frag)["total_bytes"]
-    stats = compact_table(spark, frag, out, target_file_bytes=total // 3 + 1)
-    assert stats["files_before"] == 64
-    assert stats["files_after"] <= 3
-    assert spark.read.parquet(out).count() == n
-
-
-def test_zorder_balances_pruning_across_both_dimensions(spark, tmp_path):
-    """The point of Z-ordering, measured from the parquet footers a scan
-    actually prunes with: a time-sorted layout prunes hour predicates
-    perfectly but makes every USER-equality query read ALL files (each
-    file spans the full user domain). Morton clustering on (user, hour)
-    bounds the files touched by BOTH predicate classes — the worst-case
-    single-dimension query touches strictly fewer files than the
-    single-column layout's worst case."""
-    from bigdatatiler_spark.sources.layout import write_zordered
-    from bigdatatiler_spark.tables import table
-
-    ev = table(spark, SF, "events").select(
-        "event_id",
-        F.col("user_id").alias("u"),
-        F.expr("unix_millis(ts) div 3600000").alias("hr"),
-    )
-    n_files = 8
-    ts_path, z_path = str(tmp_path / "by_time"), str(tmp_path / "by_z")
-    write_clustered(ev, ts_path, ("hr",), n_files)
-    write_zordered(ev, z_path, "u", "hr", n_files)
-
-    users = [r["u"] for r in ev.select("u").distinct().collect()]
-    h_lo, h_hi = ev.agg(F.min("hr"), F.max("hr")).first()
-    slab = max((h_hi - h_lo + 1) // n_files, 1)
-    hour_slabs = [(h_lo + i * slab, h_lo + (i + 1) * slab - 1) for i in range(n_files)]
-
-    def touched(path):
-        us, ts = _file_ranges(path, "u"), _file_ranges(path, "hr")
-        avg_user = sum(
-            sum(1 for lo, hi in us if lo <= u <= hi) for u in users
-        ) / len(users)
-        avg_hour = sum(
-            sum(1 for lo, hi in ts if not (hi < a or lo > b))
-            for a, b in hour_slabs
-        ) / len(hour_slabs)
-        return avg_user, avg_hour
-
-    u_time, h_time = touched(ts_path)
-    u_z, h_z = touched(z_path)
-    # identical rows either way
-    assert spark.read.parquet(ts_path).count() == spark.read.parquet(z_path).count() == ev.count()
-    # time-sorted: user queries are unprunable (read everything)
-    assert u_time == n_files
-    # z-order: BOTH query classes prune; worst case strictly better
-    assert max(u_z, h_z) < u_time * 0.8, (
-        f"z worst-case {max(u_z, h_z)} vs time-sort worst-case {u_time} "
-        f"(user: {u_z} vs {u_time}, hour: {h_z} vs {h_time})"
-    )
-
-
-def test_zorder_empty_input_writes_schema(spark, tmp_path):
-    """Empty input: write the (empty) table cleanly rather than fail on
-    None min/max bounds (review finding)."""
-    from bigdatatiler_spark.sources.layout import write_zordered
-
-    df = spark.createDataFrame([], "u long, hr long, payload string")
-    out = str(tmp_path / "empty_z")
-    write_zordered(df, out, "u", "hr", 4)
-    back = spark.read.parquet(out)
-    assert back.count() == 0 and set(back.columns) == {"u", "hr", "payload"}
 
 
 def test_module_caches_bounded():

@@ -1,10 +1,10 @@
-"""Tests for the dependency-free PNG codec (media/png.py) and the REAL
-(fake=False) multimodal decode/resize paths that round 5 built on it.
+"""Tests for the dependency-free PNG codec (media/png.py) and the WAV
+codec (media/wav.py), and the registered queries built on them.
 
 The codec is exercised both pure-Python (round trips across every
 channel count x every PNG filter type, so all five unfilter branches
-run on real filtered data) and end-to-end through Spark's mapInPandas
-stages on real PNG bytes. When PIL happens to be installed the
+run on real filtered data) and end-to-end through the registered
+mapInPandas queries on real PNG bytes. When PIL happens to be installed the
 decode_image path prefers it — the cross-check test pins the two
 implementations equal on the same bytes.
 """
@@ -12,14 +12,6 @@ implementations equal on the same bytes.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from bigdatatiler_spark.media.png import (
     ahash64,
@@ -29,7 +21,6 @@ from bigdatatiler_spark.media.png import (
     probe_pil,
     resize_nearest,
 )
-from bigdatatiler_spark.operators.multimodal import decode_stub, resize_stub
 
 
 def _pattern(w: int, h: int, ch: int, seed: int = 0) -> bytes:
@@ -97,44 +88,6 @@ def test_ahash64_invariances():
     assert bin(code ^ shifted).count("1") <= 6
     # constant image: no block exceeds the global mean -> code 0
     assert ahash64(w, h, 1, bytes([128]) * (w * h)) == 0
-
-
-def test_decode_stub_real_path_on_png_bytes(spark):
-    """fake=False end-to-end on REAL PNG payloads through mapInPandas."""
-    rows = []
-    for d in range(6):
-        w, h = 4 + d, 3 + d
-        rows.append((d, encode_png(w, h, 1, _pattern(w, h, 1, seed=d))))
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-    )
-    df = spark.createDataFrame(rows, schema)
-    out = {r["doc_id"]: r for r in decode_stub(df, fake=False).collect()}
-    assert len(out) == 6
-    for d in range(6):
-        assert out[d]["width"] == 4 + d
-        assert out[d]["height"] == 3 + d
-        assert out[d]["format"] == "image/decoded-1ch"
-
-
-def test_resize_stub_real_path_resamples_pixels(spark):
-    """fake=False resize: raw pixel buffers resampled nearest-neighbor
-    inside the Arrow batch, verified against the pure function."""
-    w, h, ch = 8, 8, 1
-    px = _pattern(w, h, ch, seed=2)
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-    df = spark.createDataFrame([(1, w, h, px)], schema)
-    out = resize_stub(df, 4, 4, fake=False).collect()
-    assert len(out) == 1
-    assert (out[0]["width"], out[0]["height"]) == (4, 4)
-    assert bytes(out[0]["payload"]) == resize_nearest(w, h, ch, px, 4, 4)
 
 
 def test_png_decode_stats_query_runs(spark):

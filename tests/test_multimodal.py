@@ -1,132 +1,7 @@
-"""Multimodal plumbing tests: binary columns through mapInPandas."""
+"""Multimodal query semantics on controlled data: perceptual-hash
+near-dups, the audio quality gate and video scene cuts."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from bigdatatiler_spark.operators.multimodal import (
-    DECODED_SCHEMA,
-    decode_stub,
-    with_payload,
-)
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.createDataFrame(
-        [(1, "hello world"), (2, "héllo"), (3, "x" * 1000)], ["doc_id", "text"]
-    )
-
-
-def test_payload_is_binary(spark, docs):
-    df = with_payload(docs)
-    assert dict(df.dtypes)["payload"] == "binary"
-    row = df.where(F.col("doc_id") == 2).first()
-    assert row["payload"] == "héllo".encode()  # utf-8 bytes, not chars
-    assert row["media_meta"]["n_bytes"] == 6
-
-
-def test_decode_stub_fake(spark, docs):
-    out = decode_stub(with_payload(docs), fake=True)
-    assert out.schema == DECODED_SCHEMA
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert rows[1]["payload_len"] == 11
-    assert rows[3]["n_frames"] == 4  # ceil(1000/256)
-    assert rows[1]["width"] == ord("h") + 1  # deterministic fake dims
-
-
-def test_decode_stub_real_rejects_non_image_bytes(spark, docs):
-    """fake=False is the real decoder; utf8 text payloads are not PNG and
-    (without PIL) must hit the documented NotImplementedError boundary.
-    With PIL present they fail as undecodable images instead — either way
-    the real path refuses to fabricate metadata from non-image bytes."""
-    with pytest.raises(
-        Exception, match="NotImplementedError|only PNG|cannot identify"
-    ):
-        decode_stub(with_payload(docs), fake=False).collect()
-
-
-def test_resize_stub_scales_payload(spark, docs):
-    from bigdatatiler_spark.operators.multimodal import resize_stub
-
-    decoded = decode_stub(with_payload(docs), fake=True)
-    src = decoded.join(with_payload(docs).select("doc_id", "payload"), "doc_id")
-    out = resize_stub(src.select("doc_id", "width", "height", "payload"), 4, 4)
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert all(r["width"] == 4 and r["height"] == 4 for r in rows.values())
-    # byte budget shrank for the large doc (area ratio < 1), kept ≥ 1 byte
-    assert 1 <= len(rows[3]["payload"]) < 1000
-
-
-def test_binaryfile_source_to_decode_pipeline(spark, docs, tmp_path):
-    """End-to-end media ingestion: payloads written as individual files →
-    binaryFile source → decode_stub → frame sampling. This is the real
-    on-cluster shape (spark.read.format('binaryFile') over an object
-    store); the decode stays the deterministic fake, the plumbing —
-    file scan schema, binary content column, id recovery from the path,
-    Arrow batches in and out — is all real."""
-    from bigdatatiler_spark.operators.multimodal import sample_frames
-    from bigdatatiler_spark.sources.io import read_binary_files, write_payload_files
-
-    media_dir = str(tmp_path / "media")
-    n = write_payload_files(
-        with_payload(docs), media_dir, name_col="doc_id", payload_col="payload",
-        suffix=".bin",
-    )
-    assert n == 3
-
-    scanned = read_binary_files(spark, media_dir, glob="*.bin")
-    assert dict(scanned.dtypes)["content"] == "binary"
-    media = scanned.select(
-        F.regexp_extract(F.col("path"), r"(\d+)\.bin$", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("content").alias("payload"),
-    )
-    decoded = {r["doc_id"]: r for r in decode_stub(media, fake=True).collect()}
-    assert decoded[1]["payload_len"] == 11
-    assert decoded[3]["n_frames"] == 4
-    # and the frame fan-out runs off the file-sourced payloads too
-    frames = sample_frames(media, every_n=2).collect()
-    assert {r["frame_index"] for r in frames if r["doc_id"] == 3} == {0, 2}
-
-
-def test_sample_frames_fanout(spark, docs):
-    from bigdatatiler_spark.operators.multimodal import FRAME_BYTES, sample_frames
-
-    out = sample_frames(
-        with_payload(docs).select("doc_id", "payload"), every_n=2
-    ).collect()
-    by_doc: dict[int, list] = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # doc 3: 1000 bytes → 4 frames → sampled frames 0 and 2
-    idx = sorted(r["frame_index"] for r in by_doc[3])
-    assert idx == [0, 2]
-    frame0 = next(r for r in by_doc[3] if r["frame_index"] == 0)
-    assert frame0["frame"] == b"x" * FRAME_BYTES
-    # short docs yield exactly one frame (index 0)
-    assert [r["frame_index"] for r in by_doc[1]] == [0]
-
-
-def test_ahash_stub_matches_sql_path(spark):
-    """The byte-hashing mapInPandas slot and the oracle-replayable
-    char-code SQL path must agree on the ASCII corpus (bytes == codes)."""
-    from bigdatatiler_spark.operators.multimodal import (
-        ahash_bands,
-        ahash_bands_stub,
-        with_payload,
-    )
-    from bigdatatiler_spark.tables import table
-
-    docs = table(spark, "/root/testdata/sf0.001", "documents")
-    sql_side = {r.doc_id: r.bands for r in ahash_bands(docs).collect()}
-    stub_side = {
-        r.doc_id: r.bands
-        for r in ahash_bands_stub(with_payload(docs)).collect()
-    }
-    assert sql_side == stub_side
 
 
 def test_phash_finds_perturbed_payloads_not_strangers(spark):

@@ -106,26 +106,6 @@ def test_ivf_assignment_is_narrow(spark):
     assert "Window" not in head, "assignment regressed to a window sort"
 
 
-def test_runtime_bloom_filter_prunes_fact_scan(spark):
-    """SURVEY.md §8 open thread: shuffle-side pruning when the selective
-    predicate is on the other join side. Under scale-representative confs
-    the optimizer must inject might_contain on the lineitem side, and the
-    result must equal the unfiltered-plan result (pure physical machinery)."""
-    from bigdatatiler_spark.plans.runtime_filters import (
-        bloom_prunable_join,
-        has_runtime_bloom_filter,
-        runtime_bloom_pruning,
-    )
-
-    baseline = {tuple(r) for r in bloom_prunable_join(spark, SF).collect()}
-    with runtime_bloom_pruning(spark):
-        df = bloom_prunable_join(spark, SF)
-        assert has_runtime_bloom_filter(df), "no bloom runtime filter injected"
-        assert {tuple(r) for r in df.collect()} == baseline
-    # confs restored: the same build outside the block must not inject
-    assert not has_runtime_bloom_filter(bloom_prunable_join(spark, SF))
-
-
 def test_vocab_coverage_broadcasts_topk_vocab(spark):
     """Vocab induction must be top-V (TakeOrderedAndProject, no global
     sort) and the vocab must broadcast back onto the corpus — a

@@ -1,10 +1,7 @@
-"""Incremental rollup refresh and partition-scoped MERGE upsert.
+"""Partition-scoped MERGE upsert and the gap-filled rollup queries.
 
-Proves the two scale contracts in sources/rollup.py:
-- incremental refresh is EXACT (fold(delta) == full recompute) because
-  every measure is an integer re-mergeable partial aggregate;
-- refresh and upsert rewrite only the partitions they touch (untouched
-  day directories keep their files byte-for-byte).
+``merge_upsert`` rewrites only the partitions it touches (untouched
+directories keep their files byte-for-byte).
 """
 
 from __future__ import annotations
@@ -12,22 +9,9 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 
-from bigdatatiler_spark.sources.rollup import (
-    BUCKET_DATE,
-    build_rollup,
-    hourly_rollup,
-    merge_upsert,
-    refresh_rollup,
-)
-from bigdatatiler_spark.tables import table
-
-SF = "/root/testdata/sf0.001"
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+from bigdatatiler_spark.sources.rollup import merge_upsert
 
 
 def _part_files(path: str) -> dict[str, set[tuple[str, float]]]:
@@ -42,59 +26,6 @@ def _part_files(path: str) -> dict[str, set[tuple[str, float]]]:
             if f.endswith(".parquet")
         }
     return out
-
-
-def test_incremental_refresh_equals_full_recompute(spark, tmp_path):
-    ev = table(spark, SF, "events")
-    mid = ev.select(F.expr("percentile_approx(unix_millis(ts), 0.5)")).first()[0]
-    first = ev.filter(F.unix_millis("ts") < mid)
-    second = ev.filter(F.unix_millis("ts") >= mid)
-    assert first.limit(1).count() == 1 and second.limit(1).count() == 1
-
-    path = str(tmp_path / "rollup")
-    build_rollup(first, path)
-    affected = refresh_rollup(spark, path, second)
-    assert affected  # the second half touches at least one day
-
-    got = spark.read.parquet(path).drop(BUCKET_DATE)
-    want = hourly_rollup(ev)
-    assert _rows(got) == _rows(want)
-
-
-def test_refresh_rewrites_only_affected_partitions(spark, tmp_path):
-    ev = table(spark, SF, "events")
-    path = str(tmp_path / "rollup")
-    build_rollup(ev, path)
-    before = _part_files(path)
-    assert len(before) >= 2, "need >=2 day partitions to show pruning"
-
-    # replay one single day's events as the delta
-    one_day = sorted(before)[0].split("=", 1)[1]
-    delta = ev.filter(F.date_format("ts", "yyyy-MM-dd") == one_day)
-    affected = refresh_rollup(spark, path, delta)
-    assert affected == [one_day]
-
-    after = _part_files(path)
-    touched = {d for d in before if before[d] != after.get(d)}
-    assert touched == {f"{BUCKET_DATE}={one_day}"}
-    # and the replayed day doubled its counts (documented double-count
-    # semantics for non-deduped input — refresh is a fold, not a set union)
-    n = (
-        spark.read.parquet(path)
-        .filter(F.col(BUCKET_DATE) == one_day)
-        .agg(F.sum("n_events"))
-        .first()[0]
-    )
-    assert n == 2 * delta.count()
-
-
-def test_refresh_empty_delta_is_noop(spark, tmp_path):
-    ev = table(spark, SF, "events")
-    path = str(tmp_path / "rollup")
-    build_rollup(ev, path)
-    before = _rows(spark.read.parquet(path))
-    assert refresh_rollup(spark, path, ev.filter(F.lit(False))) == []
-    assert _rows(spark.read.parquet(path)) == before
 
 
 def test_merge_upsert_updates_and_inserts(spark, tmp_path):
@@ -122,43 +53,6 @@ def test_merge_upsert_updates_and_inserts(spark, tmp_path):
 def test_merge_upsert_requires_keys(spark, tmp_path):
     with pytest.raises(ValueError):
         merge_upsert(spark, str(tmp_path), spark.range(1), keys=())
-
-
-def test_stream_rollup_matches_batch_and_dedups_replays(spark, tmp_path):
-    from bigdatatiler_spark.sources.rollup import (
-        committed_batches,
-        rollup_batch_handler,
-        stream_rollup,
-    )
-
-    ev = table(spark, SF, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    src = str(tmp_path / "src")
-    # three source files → three micro-batches under maxFilesPerTrigger=1
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    path = str(tmp_path / "rollup")
-    q = stream_rollup(stream, path, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(path).drop(BUCKET_DATE)
-    assert _rows(got) == _rows(hourly_rollup(ev))
-    done = committed_batches(path)
-    assert len(done) == 3
-
-    # failure replay: re-deliver an already-committed batch_id — no-op
-    before = _rows(spark.read.parquet(path))
-    rollup_batch_handler(path)(ev, max(done))
-    assert _rows(spark.read.parquet(path)) == before
 
 
 def test_gapfill_and_locf_on_sparse_hours(spark, tmp_path):
@@ -195,91 +89,3 @@ def test_gapfill_and_locf_on_sparse_hours(spark, tmp_path):
     assert locf[h0] == 100 and locf[h0 + hr] == 250
     assert locf[h0 + 2 * hr] == 250 and locf[h0 + 3 * hr] == 250
     assert locf[h0 + 4 * hr] == 1000
-
-
-def test_hll_sketch_column_merges_exactly(spark, tmp_path):
-    """The re-aggregatable distinct-count column: build the rollup from
-    the first 20 days, fold the rest in via refresh_rollup, and the
-    merged sketches must estimate IDENTICALLY to a full single-pass
-    recompute (HLL union is register-wise max — order-independent), and
-    match the exact distinct count within DataSketches' error bound."""
-    path = os.path.join(tmp_path, "rollup_hll")
-    ev = table(spark, SF, "events")
-    cut = "2024-01-21"
-    build_rollup(ev.where(F.col("ts") < F.lit(cut).cast("timestamp")), path,
-                 with_users_hll=True)
-    refresh_rollup(spark, path, ev.where(F.col("ts") >= F.lit(cut).cast("timestamp")))
-
-    stored = spark.read.parquet(path)
-    assert "users_hll" in stored.columns
-
-    # per-bucket estimates: incremental == full recompute, bucket by bucket
-    full = hourly_rollup(ev, with_users_hll=True)
-    est_inc = {
-        (r.bucket_ms, r.event_type): r.est
-        for r in stored.select(
-            "bucket_ms", "event_type",
-            F.hll_sketch_estimate("users_hll").alias("est"),
-        ).collect()
-    }
-    est_full = {
-        (r.bucket_ms, r.event_type): r.est
-        for r in full.select(
-            "bucket_ms", "event_type",
-            F.hll_sketch_estimate("users_hll").alias("est"),
-        ).collect()
-    }
-    assert est_inc == est_full
-
-    # whole-table distinct users answered from the ROLLUP (union of all
-    # bucket sketches) vs the exact answer from raw events
-    est_total = stored.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("users_hll")).alias("e")
-    ).collect()[0].e
-    exact_total = ev.select("user_id").distinct().count()
-    assert abs(est_total - exact_total) <= max(1, exact_total * 0.05)
-
-
-def test_refresh_from_diff_handles_appends_and_deletes(spark, tmp_path):
-    """IVM with retractions: build the rollup at v1, mutate the table
-    (append + targeted delete), fold the CDC diff — result equals a full
-    recompute of the current version, bucket for bucket."""
-    from bigdatatiler_spark.sources.rollup import refresh_rollup_from_diff
-    from bigdatatiler_spark.sources.versioned import (
-        commit_append,
-        commit_delete,
-        read_table,
-    )
-
-    ev = table(spark, SF, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    tpath = os.path.join(tmp_path, "vtable")
-    rpath = os.path.join(tmp_path, "rollup")
-    commit_append(spark, tpath, ev.where(F.col("event_id") < 700))
-    build_rollup(read_table(spark, tpath), rpath)
-
-    commit_append(spark, tpath, ev.where(F.col("event_id") >= 700))
-    commit_delete(spark, tpath, "event_id", [10, 11, 12, 500])
-
-    dates = refresh_rollup_from_diff(spark, rpath, tpath, 1, 3)
-    assert dates
-
-    got = _rows(spark.read.parquet(rpath).drop(BUCKET_DATE))
-    want = _rows(hourly_rollup(read_table(spark, tpath)))
-    assert got == want
-
-
-def test_refresh_from_diff_refuses_sketch_rollups(spark, tmp_path):
-    import pytest as _pytest
-
-    from bigdatatiler_spark.sources.rollup import refresh_rollup_from_diff
-    from bigdatatiler_spark.sources.versioned import commit_append
-
-    ev = table(spark, SF, "events")
-    tpath = os.path.join(tmp_path, "vtable")
-    rpath = os.path.join(tmp_path, "rollup")
-    commit_append(spark, tpath, ev.limit(100))
-    build_rollup(ev, rpath, with_users_hll=True)
-    with _pytest.raises(ValueError, match="retract"):
-        refresh_rollup_from_diff(spark, rpath, tpath, 1, 1)

@@ -1,5 +1,4 @@
-"""Skew salting (result parity + distribution) and bucketed co-located
-joins (exchange-free plan)."""
+"""Skew salting: result parity and distribution."""
 
 from __future__ import annotations
 
@@ -8,10 +7,8 @@ from pyspark.sql import Row, functions as F
 from bigdatatiler_spark.operators.skew import (
     N_SALT,
     salt_col,
-    salted_join,
     salted_sum_count,
 )
-from bigdatatiler_spark.sources.bucketing import read_bucketed, write_bucketed
 
 
 def _skewed_df(spark):
@@ -47,44 +44,3 @@ def test_salted_agg_matches_plain(spark):
         F.sum(F.col("v").cast("decimal(18,2)")).alias("sum_v"),
     )
     assert sorted(salted.collect()) == sorted(plain.collect())
-
-
-def test_salted_join_matches_plain(spark):
-    big = _skewed_df(spark)
-    small = spark.createDataFrame(
-        [Row(k="hot", label="H")] + [Row(k=f"cold{i}", label=f"C{i}") for i in range(100)]
-    )
-    got = salted_join(big, small, key="k", distinguisher="i")
-    want = big.join(small, "k")
-    assert got.count() == want.count() == 1000
-    assert sorted(got.select("k", "i", "v", "label").collect()) == sorted(
-        want.select("k", "i", "v", "label").collect()
-    )
-
-
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    # warehouse dir is a static conf — tables land in the session default
-    # (./spark-warehouse) and are dropped in the finally block
-    left = spark.range(0, 10_000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("a")
-    )
-    right = spark.range(0, 10_000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("b")
-    )
-    write_bucketed(left, "t_left", 8, ("k",), sort_cols=("k",))
-    write_bucketed(right, "t_right", 8, ("k",), sort_cols=("k",))
-    try:
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = read_bucketed(spark, "t_left").join(
-            read_bucketed(spark, "t_right"), "k"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        # co-located buckets: the join runs with NO shuffle on either side
-        assert "Exchange" not in plan
-        assert joined.count() == 10_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_left")
-        spark.sql("DROP TABLE IF EXISTS t_right")

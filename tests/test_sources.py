@@ -1,5 +1,5 @@
-"""Format surface: parquet/json/csv round-trips, binary blob IO, and the
-distributed byte sink (O7 parity — SURVEY.md §2.1)."""
+"""Format surface: parquet round-trips and the distributed byte sink
+(O7 parity — SURVEY.md §2.1)."""
 
 from __future__ import annotations
 
@@ -14,12 +14,7 @@ from pyspark.sql.types import (
 )
 
 from bigdatatiler_spark.sources.io import (
-    read_binary_files,
-    read_csv,
-    read_json,
     read_table,
-    write_csv,
-    write_json,
     write_payload_files,
     write_table,
 )
@@ -55,40 +50,6 @@ def test_parquet_partitioned_roundtrip(spark, tmp_path):
     assert read_table(spark, path).count() == 4
 
 
-def test_json_roundtrip_with_schema(spark, tmp_path):
-    df = spark.createDataFrame(ROWS, SCHEMA)
-    path = str(tmp_path / "j")
-    write_json(df, path)
-    back = read_json(spark, path, SCHEMA)
-    assert back.select("user_id", "n", "note").sort("n").collect() == df.sort(
-        "n"
-    ).collect()
-
-
-def test_json_corrupt_rows_quarantined(spark, tmp_path):
-    bad = tmp_path / "bad"
-    bad.mkdir()
-    (bad / "part-0.json").write_text(
-        '{"user_id": "u1", "n": 1, "note": "ok"}\n{not json at all\n'
-    )
-    # StructType.add mutates in place — build a fresh schema instead
-    schema = StructType(SCHEMA.fields + [StructField("_corrupt_record", StringType())])
-    back = read_json(spark, str(bad), schema)
-    rows = back.collect()
-    assert len(rows) == 2
-    corrupt = [r for r in rows if r["_corrupt_record"] is not None]
-    assert len(corrupt) == 1  # bad line kept, not crashed on
-
-
-def test_csv_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame(ROWS, SCHEMA)
-    path = str(tmp_path / "c")
-    write_csv(df, path)
-    back = read_csv(spark, path, SCHEMA)
-    got = {(r.user_id, r.n, r.note) for r in back.collect()}
-    assert got == {("u1", 1, "alpha"), ("u1", 2, "beta,with comma"), ("u2", 3, None)}
-
-
 def test_payload_file_sink_and_binary_read(spark, tmp_path):
     """O7: byte[] payload → one .zip file per row, then read back as blobs."""
     out = tmp_path / "blobs"
@@ -110,96 +71,12 @@ def test_payload_file_sink_and_binary_read(spark, tmp_path):
     with zipfile.ZipFile(out / "doc1.zip") as z:
         assert z.read("1.xml") == b"<log id='1'/>"
 
-    back = read_binary_files(spark, str(out), glob="*.zip")
+    back = (
+        spark.read.format("binaryFile").option("pathGlobFilter", "*.zip").load(str(out))
+    )
     assert back.count() == 3
     content = {r.content for r in back.select("content").collect()}
     assert content == set(payloads)
-
-
-def test_export_jsonl_shards_roundtrip(spark, tmp_path):
-    """Sharded JSONL export: stable shard assignment (same doc → same
-    shard on re-export), per-file record cap honored, and a full
-    read-back recovers every row byte-identically."""
-    import glob as _glob
-    import json as _json
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from bigdatatiler_spark.sources.io import export_jsonl_shards, read_json
-    from bigdatatiler_spark.tables import table
-
-    docs = table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "lang", "text"
-    )
-    out = str(tmp_path / "export")
-    export_jsonl_shards(
-        docs, out, shard_col="doc_id", n_shards=4, order_col="doc_id",
-        max_records_per_file=10,
-    )
-    # every shard dir exists and no file exceeds the record cap
-    files = _glob.glob(f"{out}/shard=*/part-*")
-    assert len(files) > 0
-    shards = {f.split("shard=")[1].split("/")[0] for f in files}
-    assert shards == {"0", "1", "2", "3"}
-    for f in files:
-        with open(f) as fh:
-            assert sum(1 for _ in fh) <= 10
-    # read-back recovers the corpus exactly
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("lang", StringType()),
-            StructField("text", StringType()),
-        ]
-    )
-    back = read_json(spark, f"{out}/shard=*", schema).select(
-        "doc_id", "lang", "text"
-    )
-    orig = {(r.doc_id, r.lang, r.text) for r in docs.collect()}
-    got = {(r.doc_id, r.lang, r.text) for r in back.collect()}
-    assert got == orig
-    # re-export is shard-stable: identical file->rowcount layout
-    out2 = str(tmp_path / "export2")
-    export_jsonl_shards(
-        docs, out2, shard_col="doc_id", n_shards=4, order_col="doc_id",
-        max_records_per_file=10,
-    )
-    def layout(root):
-        d = {}
-        for f in _glob.glob(f"{root}/shard=*/part-*"):
-            k = f.split("shard=")[1].split("/")[0]
-            with open(f) as fh:
-                d[k] = d.get(k, 0) + sum(1 for _ in fh)
-        return d
-    assert layout(out) == layout(out2)
-
-
-def test_orc_roundtrip_partitioned_and_pushdown(spark, tmp_path):
-    from bigdatatiler_spark.sources.io import read_orc, write_orc
-
-    path = str(tmp_path / "orc")
-    df = spark.createDataFrame(ROWS, SCHEMA)
-    write_orc(df, path, partition_by=("user_id",))
-    back = read_orc(spark, path)
-    assert {(r.user_id, r.n, r.note) for r in back.collect()} == {
-        (r.user_id, r.n, r.note) for r in ROWS
-    }
-    # same pushdown contract as parquet: the n>1 predicate reaches the
-    # ORC scan (search-argument pushdown), partition filter prunes dirs
-    plan = (
-        back.filter((F.col("n") > 1) & (F.col("user_id") == "u1"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [" in plan and "GreaterThan(n,1)" in plan
-    assert "PartitionFilters: [" in plan
 
 
 def test_schema_evolution_merge_read(spark, tmp_path):
