@@ -1,7 +1,21 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness: the one code path that opens a timing session and
+times queries, against the fixture at $SPARK_GRAFT_SF_DIR.
 
-Prints per-query detail as a JSON line first, then — as the FINAL stdout
-line — a compact JSON summary:
+Usage:
+    python bench.py                                 # every bench line
+    python bench.py NAME... [--reps R] [--prefix N]
+
+The bench lines are ``LINES``: the two one-time builds
+(``ann_ivf_index_build``, ``dedup_cc_label_store_build``), then HEADLINE.
+With no arguments every line is timed once, in order. With arguments the
+first N lines are timed once (replaying the session state a full run
+reaches), then each NAME — a bench line or any registered query — as the
+min of R runs (default 1). VARIANCE_PRONE lines always take the min of at
+least two. Cores and fixture come from the deployment settings
+SPARK_GRAFT_CPUS and SPARK_GRAFT_SF_DIR.
+
+Prints per-line detail as a JSON line first, then — as the FINAL stdout
+line — a compact JSON summary, both over the lines this run timed:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {<r1-subset name>: sec, ...}, "sf": <sf>, ...}
 
@@ -13,17 +27,21 @@ round 1); the full per-query detail rides the earlier line.
 
 Each query executes to completion via the noop sink (full computation, no
 driver-side materialization cost polluting the numbers). First a warmup
-query amortizes JVM/session startup out of the per-query timings.
+query and the Python worker pool amortize session startup out of the
+per-line timings.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from bigdatatiler_spark.registry import load_all
 from bigdatatiler_spark.session import get_spark
@@ -331,7 +349,106 @@ def _warm_python_workers(spark) -> None:
     )
 
 
-def main() -> None:
+def _build_ivf_index(spark) -> None:
+    """The IVF coarse quantizer is built once and queried many times (the
+    standard ANN-bench split: index build vs query latency), so its
+    one-time k-means training is its own line and the ann_ivf_* /
+    embedding_kmeans_cells lines report the query path against the built
+    index (process-wide memo in similarity.py). nz_base (zero-norm
+    exclusion) must match the ANN queries' training input exactly — the
+    centroid memo is shared via cache_key."""
+    from bigdatatiler_spark.operators.similarity import kmeans_centroids, nz_base
+    from bigdatatiler_spark.tables import table
+
+    kmeans_centroids(nz_base(table(spark, SF_DIR, "embeddings")), cache_key=("ivf", SF_DIR))
+
+
+def _build_label_store(spark) -> None:
+    """Same split for the incremental-clustering label store: the OLD
+    corpus's component labels are the artifact a previous run leaves
+    behind, so build cost is its own line and the
+    dedup_incremental_components line measures the per-ingest merge
+    against the built store (idempotent: a store left by an earlier run on
+    the same fixture makes this a no-op read)."""
+    from bigdatatiler_spark.operators.graph import old_labels_path
+
+    old_labels_path(spark, SF_DIR)
+
+
+BUILDS = {
+    "ann_ivf_index_build": _build_ivf_index,
+    "dedup_cc_label_store_build": _build_label_store,
+}
+
+#: every bench line, in the order a full run times them
+LINES = (*BUILDS, *HEADLINE)
+
+
+def time_line(spark, specs, name: str, reps: int = 1) -> float:
+    """Seconds for one bench line or registered query: the min over
+    ``reps`` runs, each under ``name`` as the job description and followed
+    by ``_clear``. A build line runs once: both builds are memoized, so a
+    second run would time the memo, not the build."""
+    if name in BUILDS:
+        run, reps = BUILDS[name], 1
+    else:
+        def run(session) -> None:
+            _run(specs[name].fn(session, SF_DIR))
+    if name in VARIANCE_PRONE:
+        reps = max(reps, 2)
+    best = float("inf")
+    for _ in range(reps):
+        spark.sparkContext.setJobDescription(name)
+        t0 = time.time()
+        run(spark)
+        best = min(best, round(time.time() - t0, 3))
+        _clear(spark)
+    return best
+
+
+def run_bench(names, reps: int = 1, **env: str) -> dict[str, float]:
+    """Time ``names`` (min of ``reps`` runs each) in a fresh ``python
+    bench.py`` process with ``env`` added to its environment (e.g.
+    SPARK_GRAFT_CPUS, SPARK_GRAFT_SF_DIR): one JVM per call, so each call
+    picks its own cores and fixture. Returns the detail line's seconds per
+    name; a failed run raises."""
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), *names, "--reps", str(reps)],
+        stdout=subprocess.PIPE, text=True, check=True, cwd=REPO,
+        env={**os.environ, **env},
+    ).stdout
+    detail = next(
+        json.loads(line) for line in out.splitlines()
+        if line.startswith('{"metric": "headline_queries_detail"')
+    )
+    return detail["queries"]
+
+
+def main(argv: list[str] | None = None) -> None:
+    parser = argparse.ArgumentParser(
+        description="Time bench lines (see the module docstring)."
+    )
+    parser.add_argument(
+        "names", nargs="*", metavar="NAME",
+        help="bench line or registered query, timed after the prefix",
+    )
+    parser.add_argument(
+        "--reps", type=int, default=1, help="runs per NAME; the min is kept"
+    )
+    parser.add_argument(
+        "--prefix", type=int, metavar="N",
+        help="time the first N bench lines first "
+        "(default: every line without a NAME, none with one)",
+    )
+    args = parser.parse_args(argv)
+    specs = load_all()
+    unknown = [n for n in args.names if n not in BUILDS and n not in specs]
+    if unknown:
+        parser.error(f"not a bench line or registered query: {unknown}")
+    if args.reps < 1 or (args.prefix or 0) < 0:
+        parser.error("--reps must be >= 1 and --prefix >= 0")
+    prefix = args.prefix if args.prefix is not None else (0 if args.names else len(LINES))
+
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     # The dedup/ANN pipelines persist() their shared intermediates; at the
     # local-mode default 1g driver heap, 47 queries of accumulated cache
@@ -340,61 +457,25 @@ def main() -> None:
     # timing a cold, independent measurement.
     spark = get_spark("bigdatatiler-bench", extra_conf={"spark.driver.memory": "8g"})
     spark.sparkContext.setLogLevel("ERROR")
-    specs = load_all()
 
-    # warmup: JVM codegen + parquet footer caches
-    _run(specs["events_filtered_topk"].fn(spark, SF_DIR))
-    _warm_python_workers(spark)
-
-    timings: dict[str, float] = {}
-
-    # The IVF coarse quantizer is built once and queried many times (the
-    # standard ANN-bench split: index build vs query latency), so its
-    # one-time k-means training is measured as its own line and the
-    # ann_ivf_* / embedding_kmeans_cells timings below report the query
-    # path against the built index (process-wide memo in similarity.py).
-    from bigdatatiler_spark.operators.similarity import kmeans_centroids, nz_base
-    from bigdatatiler_spark.tables import table as _table
-
-    t0 = time.time()
-    # nz_base (zero-norm exclusion) must match the ANN queries' training
-    # input exactly — the centroid memo is shared via cache_key.
-    _ivf_base = nz_base(_table(spark, SF_DIR, "embeddings"))
-    kmeans_centroids(_ivf_base, cache_key=("ivf", SF_DIR))
-    timings["ann_ivf_index_build"] = round(time.time() - t0, 3)
-    spark.catalog.clearCache()
-
-    # Same split for the incremental-clustering label store: the OLD
-    # corpus's component labels are the artifact a previous run leaves
-    # behind — build cost is its own line, and the
-    # dedup_incremental_components line below measures the per-ingest
-    # merge against the built store (idempotent: a store left by an
-    # earlier run on the same fixture makes this a no-op read).
-    from bigdatatiler_spark.operators.graph import labels_store_path, old_labels_path
+    from bigdatatiler_spark.operators.graph import labels_store_path
 
     # freshness transparency (r12 verdict item 6): a store left in /tmp by
-    # an earlier run on the same fixture makes this line a ~0 s no-op read
-    # — record which one this measurement was, so the artifact can't pass
-    # off a warm read as a build.
+    # an earlier run on the same fixture makes the label-store line a ~0 s
+    # no-op read — record whether this run found no store and so built it,
+    # so the artifact can't pass off a warm read as a build.
     label_store_built = not os.path.exists(
         os.path.join(labels_store_path(SF_DIR), "_SUCCESS")
     )
-    t0 = time.time()
-    old_labels_path(spark, SF_DIR)
-    timings["dedup_cc_label_store_build"] = round(time.time() - t0, 3)
+
+    # warmup: JVM codegen + parquet footer caches, then the worker pool
+    _run(specs["events_filtered_topk"].fn(spark, SF_DIR))
+    _warm_python_workers(spark)
     _clear(spark)
 
-    for name in HEADLINE:
-        fn = specs[name].fn
-        t0 = time.time()
-        _run(fn(spark, SF_DIR))
-        timings[name] = round(time.time() - t0, 3)
-        _clear(spark)
-        if name in VARIANCE_PRONE:
-            t0 = time.time()
-            _run(fn(spark, SF_DIR))
-            timings[name] = min(timings[name], round(time.time() - t0, 3))
-            _clear(spark)
+    timings = {name: time_line(spark, specs, name) for name in LINES[:prefix]}
+    for name in args.names:
+        timings[name] = time_line(spark, specs, name, args.reps)
 
     total = round(sum(timings.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -404,7 +485,7 @@ def main() -> None:
     # rounds. The round-1 query subset reads "within 2x of the recorded
     # baseline" against the same work.
     r1_queries: set[str] = set()
-    r1_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r01.json")
+    r1_path = os.path.join(REPO, "BENCH_r01.json")
     try:
         with open(r1_path) as f:
             r1_queries = set(json.load(f)["parsed"]["queries"])
@@ -419,8 +500,7 @@ def main() -> None:
     # under the generous threshold, a real plan regression does not.
     budget_violations: dict[str, list[float]] = {}
     budget_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "bigdatatiler_spark", "plans", "time_budget.json",
+        REPO, "bigdatatiler_spark", "plans", "time_budget.json"
     )
     # budget_status makes a DISABLED tripwire visible in bench artifacts
     # (ADVICE r7: a missing/malformed/sf-mismatched budget file must not
@@ -456,22 +536,6 @@ def main() -> None:
         "budget_status": budget_status,
         "label_store_built": label_store_built,
     }
-    # Solo-bench protocol (r8 verdict item 7): driver bench runs share the
-    # box and measure 10-15% noisier than solo runs — every "regression"
-    # scare since r5 came from that gap. `--solo-artifact PATH` writes the
-    # full detail map to a tracked BENCH_solo_r0N.json so round-over-round
-    # comparison is like-for-like.
-    if "--solo-artifact" in sys.argv:
-        idx = sys.argv.index("--solo-artifact")
-        # trailing flag with no PATH: skip the artifact, never lose the
-        # run's printed results to an IndexError (ADVICE r9)
-        if idx + 1 < len(sys.argv):
-            with open(sys.argv[idx + 1], "w") as f:
-                json.dump(detail, f, indent=1, sort_keys=True)
-                f.write("\n")
-        else:
-            print("bench: --solo-artifact needs a PATH; artifact skipped",
-                  file=sys.stderr)
     # Full per-query detail (for humans / PLANS.md diffing) — NOT last.
     print(json.dumps(detail))
     # Compact, bounded summary as the FINAL stdout line (driver-parseable).

@@ -2,17 +2,16 @@
 
 Why this exists: the multimodal operators treat images as opaque binary
 columns and decode them inside Arrow-batched ``mapInPandas`` stages
-(operators/multimodal.py). The container has no PIL/ffmpeg, so until
-round 4 the decode slot raised NotImplementedError and only fake-mode
-plumbing was tested. PNG, however, needs nothing beyond DEFLATE — which
-is ``zlib`` in the standard library — so the common subset (8-bit
-depth, grayscale / RGB / RGBA, non-interlaced) is implemented here for
-real, and PIL is used instead when importable (``probe_pil``).
+(operators/multimodal.py). PNG needs nothing beyond DEFLATE — which is
+``zlib`` in the standard library — so the common subset (8-bit depth,
+grayscale / RGB / RGBA, non-interlaced) is implemented here for real,
+with no imaging library. Every image the queries decode is this
+module's own ``encode_png`` output.
 
 Scope (raises ValueError outside it): bit depth 8, color types 0
 (gray), 2 (RGB), 6 (RGBA); interlace 0. Palette (3), 1/2/4/16-bit
-depths, and Adam7 interlacing fall back to PIL or raise — the honest
-boundary of a dependency-free decoder.
+depths, and Adam7 interlacing raise — the honest boundary of a
+dependency-free decoder.
 
 Format reference: the public PNG specification (RFC 2083 / ISO 15948):
 signature, length-type-data-CRC chunks, IHDR layout, per-row filter
@@ -28,18 +27,6 @@ _SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 #: color type -> samples per pixel (supported subset)
 _CHANNELS = {0: 1, 2: 3, 6: 4}
-
-
-def probe_pil():
-    """Return the PIL.Image module when Pillow is importable, else None.
-    The decode stages prefer PIL (full format coverage, C speed) and fall
-    back to this module's pure-Python path for PNG."""
-    try:
-        from PIL import Image  # type: ignore
-
-        return Image
-    except ImportError:
-        return None
 
 
 def _chunk(tag: bytes, data: bytes) -> bytes:
@@ -185,26 +172,6 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
         out[y * stride : (y + 1) * stride] = row
         prev = bytes(row)
     return width, height, channels, bytes(out)
-
-
-def decode_image(data: bytes) -> tuple[int, int, int, bytes]:
-    """Decode any image the environment can handle: PIL when importable
-    (all formats), else the pure-Python PNG path. Non-PNG bytes without
-    PIL raise NotImplementedError — the documented environment boundary."""
-    pil = probe_pil()
-    if pil is not None:
-        import io
-
-        img = pil.open(io.BytesIO(data))
-        img = img.convert(
-            {1: "L", 3: "RGB", 4: "RGBA"}.get(len(img.getbands()), "RGB")
-        )
-        return img.width, img.height, len(img.getbands()), img.tobytes()
-    if data[:8] == _SIGNATURE:
-        return decode_png(data)
-    raise NotImplementedError(
-        "only PNG is decodable without PIL; install Pillow for other formats"
-    )
 
 
 def resize_nearest(

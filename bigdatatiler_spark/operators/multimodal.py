@@ -4,8 +4,8 @@ Design (BASELINE.json north star): image/audio/video travel as
 ``binary`` columns with a metadata struct; decode / feature-extraction /
 resize / frame-sampling run as Arrow-batched Pandas UDFs over
 ``mapInPandas`` inside the registered queries. The decode and resize
-stages are REAL for images (PIL when importable, else the dependency-free
-PNG codec in ``media/png.py`` — decode, nearest-neighbor resize, pixel
+stages are REAL for images (the dependency-free PNG codec in
+``media/png.py`` — decode, nearest-neighbor resize, pixel
 aHash) and for audio (RIFF/PCM WAV via ``media/wav.py`` — struct-only
 parsing). Video frames travel in the dependency-free FPK1 container
 (``media/framepack.py``); compressed video codecs need ffmpeg and are
@@ -212,7 +212,7 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (pixel i of doc d = (d*31 + i*7) mod 256 — content the oracle can
 # recompute in pure SQL),
 # the Spark side ENCODES it to real PNG bytes and DECODES it back through
-# media/png.py (PIL when present, the stdlib codec otherwise) inside an
+# media/png.py (the stdlib codec) inside an
 # Arrow-batched mapInPandas stage, then reports pixel statistics from the
 # DECODED buffer. DuckDB computes the same statistics directly from the
 # generator formula — so a hash match proves the real codec round-trips
@@ -271,7 +271,7 @@ def multimodal_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from ..media.png import decode_image, encode_png
+        from ..media.png import decode_png, encode_png
 
         sev = (7 * np.arange(PNG_W * PNG_H, dtype=np.int64)) % 256
         for pdf in batches:
@@ -282,7 +282,7 @@ def multimodal_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (((d * 31) % 256 + sev) % 256).astype(np.uint8).tobytes()
                 )
                 blob = encode_png(PNG_W, PNG_H, 1, pixels)
-                w, h, ch, decoded = decode_image(blob)
+                w, h, ch, decoded = decode_png(blob)
                 a = np.frombuffer(decoded, dtype=np.uint8)
                 rows.append(
                     (
@@ -308,7 +308,7 @@ def multimodal_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in closed form: documents sharing a pattern group (doc_id mod 50) are
 # near-duplicates of each other (same base pattern, a few +noise pixels
 # differ), documents in different groups are far apart. The Spark side
-# goes formula → encode_png → decode_image → ahash64 → 8x8-bit bands
+# goes formula → encode_png → decode_png → ahash64 → 8x8-bit bands
 # inside ONE Arrow-batched mapInPandas stage (the real codec and the
 # real pixel hash in the scored loop); candidates then come from the
 # banded equi-join + exact Hamming verify — the standard pigeonhole
@@ -404,7 +404,7 @@ def multimodal_image_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFra
         import numpy as np
         import pandas as pd
 
-        from ..media.png import ahash64, decode_image, encode_png
+        from ..media.png import ahash64, decode_png, encode_png
 
         idx = np.arange(256, dtype=np.int64)
         for pdf in batches:
@@ -418,7 +418,7 @@ def multimodal_image_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFra
                     (idx * (3 + d % 50)) % 197
                     + np.where((idx + d % 29) % 29 == 0, (d * 13) % 7, 0)
                 ).astype(np.uint8).tobytes()
-                w, h, ch, decoded = decode_image(encode_png(16, 16, 1, pixels))
+                w, h, ch, decoded = decode_png(encode_png(16, 16, 1, pixels))
                 code = ahash64(w, h, ch, decoded)
                 rows.append((d, [(code >> (8 * k)) & 255 for k in range(8)]))
             yield pd.DataFrame(rows, columns=["doc_id", "bands"])
@@ -622,7 +622,7 @@ def multimodal_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame
         import pandas as pd
 
         from ..media.framepack import frame_count, iter_frames, pack_frames
-        from ..media.png import decode_image, encode_png
+        from ..media.png import decode_png, encode_png
 
         npx = PNG_W * PNG_H
         # numpy fixture synthesis + stats (r8 verdict item 4); base offset
@@ -647,7 +647,7 @@ def multimodal_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame
                 )
                 n = frame_count(blob)
                 for fi, frame in iter_frames(blob, VIDEO_STRIDE):
-                    w, h, _ch, decoded = decode_image(frame)
+                    w, h, _ch, decoded = decode_png(frame)
                     a = np.frombuffer(decoded, dtype=np.uint8)
                     rows.append(
                         (d, fi, n, w, h,
@@ -822,7 +822,7 @@ def multimodal_image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame
         import numpy as np
         import pandas as pd
 
-        from ..media.png import decode_image, encode_png, resize_nearest
+        from ..media.png import decode_png, encode_png, resize_nearest
 
         npx = PNG_W * PNG_H
         sev = (7 * np.arange(npx, dtype=np.int64)) % 256
@@ -833,7 +833,7 @@ def multimodal_image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame
                 pixels = (
                     (((d * 31) % 256 + sev) % 256).astype(np.uint8).tobytes()
                 )
-                w, h, ch, decoded = decode_image(encode_png(PNG_W, PNG_H, 1, pixels))
+                w, h, ch, decoded = decode_png(encode_png(PNG_W, PNG_H, 1, pixels))
                 small = np.frombuffer(
                     resize_nearest(w, h, ch, decoded, RESIZE_TW, RESIZE_TH),
                     dtype=np.uint8,
@@ -1030,7 +1030,7 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pandas as pd
 
         from ..media.framepack import iter_frames, pack_frames
-        from ..media.png import decode_image, encode_png
+        from ..media.png import decode_png, encode_png
 
         npx = PNG_W * PNG_H
         # numpy fixture synthesis + L1 (r8 verdict item 4): the quadratic
@@ -1057,7 +1057,7 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 prev = None
                 for fi, frame in iter_frames(blob, 1):
-                    _w, _h, _ch, decoded = decode_image(frame)
+                    _w, _h, _ch, decoded = decode_png(frame)
                     cur = np.frombuffer(decoded, dtype=np.uint8).astype(np.int16)
                     if prev is not None:
                         l1 = int(np.abs(cur - prev).sum(dtype=np.int64))

@@ -410,9 +410,8 @@ def merge_upsert(
     change pass through. Emits an ``action`` column ('keep' / 'update' /
     'insert') so callers can audit the merge, mirroring the row-activity
     metrics table formats report after a MERGE commit. This is the
-    ROW-LEVEL kernel (per-column update sets, action audit); the
-    storage-side counterpart that rewrites parquet partitions
-    copy-on-write is ``sources.rollup.merge_upsert``.
+    ROW-LEVEL kernel (per-column update sets, action audit); it rewrites
+    no storage.
 
     Plan shape: ONE full-outer shuffle join on the merge key — the
     standard copy-on-write MERGE kernel. At 100 TB the change batch is

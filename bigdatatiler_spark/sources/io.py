@@ -1,71 +1,20 @@
-"""Sources and sinks: the engine's format surface.
+"""The O7 byte sink.
 
 The reference's connector surface is Cosmos JSON in, a local zip file out,
-XML as the payload encoding (SURVEY.md §2.1 O1-O7). Spark-natively that
-becomes:
-
-- Parquet as the primary table format (schema-on-write, partitioned) —
-  `read_table` / `write_table`;
-- a per-row byte sink mirroring `writeDocumentTofile`
-  (BigDataLogControl.cs:354-361) — but distributed: each *executor*
-  writes its partition's payloads, no driver collect.
-
-All writers default to ZSTD + capped records-per-file: the reference's
-1.5 MB document cap (LogChange.cs:23-24) is a physical-chunk-size policy,
-and `maxRecordsPerFile` + parquet block size are the Spark-native knobs
-for the same concern (bounded, splittable physical units).
+XML as the payload encoding (SURVEY.md §2.1 O1-O7). The store side — the
+partitioned parquet tables, inserts and reads of O1-O4 — is
+``logstore.store.LogStore``. This module holds the per-row byte sink
+mirroring `writeDocumentTofile` (BigDataLogControl.cs:354-361) — but
+distributed: each *executor* writes its partition's payloads, no driver
+collect.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: physical-tiling defaults (the engine's analogue of the 1.5 MB doc cap)
-DEFAULT_MAX_RECORDS_PER_FILE = 1_000_000
-DEFAULT_COMPRESSION = "zstd"
-
-
-def read_table(
-    spark: SparkSession, path: str, merge_schema: bool = False
-) -> DataFrame:
-    """Primary table reader (parquet; partition columns auto-discovered).
-
-    ``merge_schema=True`` unions the schemas of every file (columns added
-    over a table's lifetime surface as NULL in pre-evolution files) — the
-    read-side half of additive schema evolution. Off by default: merging
-    reads every footer up front, which is exactly the 100k-round-trip
-    cost manifests exist to avoid — evolving tables should record their
-    current schema once (e.g. in the table's metadata dir) rather than
-    rediscover it per scan."""
-    r = spark.read
-    if merge_schema:
-        r = r.option("mergeSchema", "true")
-    return r.parquet(path)
-
-
-def write_table(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = (),
-    mode: str = "append",
-    max_records_per_file: int = DEFAULT_MAX_RECORDS_PER_FILE,
-) -> None:
-    """Partitioned parquet writer with bounded file sizes.
-
-    `partitionBy` = the Cosmos partition key analogue (O2); `append` mode
-    = O3/O4 (the reference's per-document insert fan-out is one job here).
-    """
-    w = (
-        df.write.mode(mode)
-        .option("compression", DEFAULT_COMPRESSION)
-        .option("maxRecordsPerFile", max_records_per_file)
-    )
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def write_payload_files(

@@ -1,4 +1,4 @@
-"""Hourly rollup state and partition-scoped MERGE/upsert.
+"""Hourly rollup state.
 
 The reference is an append-only log store (LogChange.cs:99-342 — documents
 are inserted, never aggregated in place). At 100 TB an events table is
@@ -12,20 +12,14 @@ dimension).
   ``re-aggregate(old ∪ delta)`` is associative and exact — no "average
   of averages" class of bug. The registered ``events_hourly_rollup``
   query is that state, oracle-checked against raw events.
-- **MERGE is partition-scoped.** Upserts join the update set against only
-  the target partitions it can touch; untouched partitions are never
-  read or rewritten.
 
-Spark has no built-in MERGE INTO for plain parquet (that's a table-format
-feature — Delta/Iceberg); ``merge_upsert`` is the same copy-on-write
-algorithm those formats run, expressed on partition directories.
+The row-level MERGE kernel is ``operators.sqlsurface.merge_upsert`` (the
+``orders_merge_upsert`` query).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from .io import DEFAULT_COMPRESSION
 
 
 def hourly_rollup(events: DataFrame) -> DataFrame:
@@ -43,47 +37,6 @@ def hourly_rollup(events: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("cents").alias("value_cents"),
     )
-
-
-def merge_upsert(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    keys: tuple[str, ...],
-    partition_col: str | None = None,
-) -> None:
-    """MERGE INTO target USING updates — update matched keys, insert new.
-
-    This is the STORAGE side of MERGE (partition-scoped copy-on-write
-    rewrite, whole-row replacement); the row-level kernel with
-    per-column update sets and an action audit is
-    ``operators.sqlsurface.merge_upsert`` / the orders_merge_upsert
-    query. Copy-on-write: rows whose key appears in ``updates`` are replaced
-    (left-anti join keeps the rest), then the union is written back. With
-    ``partition_col`` the whole operation is scoped to the partitions the
-    update set touches — the partition-pruned read plus dynamic overwrite
-    keep a 10-row upsert into a 100 TB table proportional to the touched
-    partitions, not the table.
-    """
-    if not keys:
-        raise ValueError("merge_upsert requires at least one key column")
-    target = spark.read.parquet(target_path)
-    if partition_col is not None:
-        parts = sorted(
-            str(r[0]) for r in updates.select(partition_col).distinct().collect()
-        )
-        target = target.filter(F.col(partition_col).isin(parts))
-    kept = target.join(F.broadcast(updates.select(*keys).distinct()), list(keys), "left_anti")
-    merged = kept.unionByName(updates.select(*target.columns))
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        w = merged.write.mode("overwrite").option("compression", DEFAULT_COMPRESSION)
-        if partition_col is not None:
-            w = w.partitionBy(partition_col)
-        w.parquet(target_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
 
 
 def _register_queries() -> None:

@@ -64,6 +64,9 @@ def test_logstore_write_read(spark, events_df, tmp_path):
     # partition pruning path: user dir exists
     assert (tmp_path / "logs" / "user_id=u1").exists()
     assert store.point_read("u1", 2, id_col="event_id").count() == 1
+    # a user-scoped read prunes directories on the partition column
+    scoped = store.scan(user_id="u1")._jdf.queryExecution().toString()
+    assert "PartitionFilters" in scoped
     # append (O3/O4) adds rows without clobbering
     store.append(events_df.where(F.col("event_id") == 5))
     assert store.df().count() == 6

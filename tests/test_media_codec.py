@@ -4,9 +4,7 @@ codec (media/wav.py), and the registered queries built on them.
 The codec is exercised both pure-Python (round trips across every
 channel count x every PNG filter type, so all five unfilter branches
 run on real filtered data) and end-to-end through the registered
-mapInPandas queries on real PNG bytes. When PIL happens to be installed the
-decode_image path prefers it — the cross-check test pins the two
-implementations equal on the same bytes.
+mapInPandas queries on real PNG bytes.
 """
 
 from __future__ import annotations
@@ -15,10 +13,8 @@ import pytest
 
 from bigdatatiler_spark.media.png import (
     ahash64,
-    decode_image,
     decode_png,
     encode_png,
-    probe_pil,
     resize_nearest,
 )
 
@@ -48,17 +44,6 @@ def test_png_decode_rejects_garbage_and_unsupported():
     blob[depth_off] = 16
     with pytest.raises(ValueError, match="depth|CRC|chunk"):
         decode_png(bytes(blob))
-
-
-def test_decode_image_matches_pil_when_available():
-    pil = probe_pil()
-    if pil is None:
-        pytest.skip("PIL not installed — pure-Python path is the only one")
-    w, h, ch = 9, 5, 3
-    px = _pattern(w, h, ch, seed=3)
-    blob = encode_png(w, h, ch, px)
-    assert decode_image(blob) == (w, h, ch, px)  # PIL path
-    assert decode_png(blob) == (w, h, ch, px)  # pure path, same answer
 
 
 def test_resize_nearest_identity_and_downscale():
@@ -269,7 +254,7 @@ def test_fpk1_mixed_channel_frames_error_loudly():
     rgb = encode_png(4, 4, 3, _pattern(4, 4, 3))
     blob = pack_frames([gray, rgb])
     decoded = [
-        np.frombuffer(decode_image(fr)[3], dtype=np.uint8).astype(np.int16)
+        np.frombuffer(decode_png(fr)[3], dtype=np.uint8).astype(np.int16)
         for _i, fr in iter_frames(blob, 1)
     ]
     with pytest.raises(ValueError):

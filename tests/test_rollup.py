@@ -1,58 +1,8 @@
-"""Partition-scoped MERGE upsert and the gap-filled rollup queries.
-
-``merge_upsert`` rewrites only the partitions it touches (untouched
-directories keep their files byte-for-byte).
-"""
+"""The gap-filled rollup queries on sparse hours."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import Row
-
-from bigdatatiler_spark.sources.rollup import merge_upsert
-
-
-def _part_files(path: str) -> dict[str, set[tuple[str, float]]]:
-    out: dict[str, set[tuple[str, float]]] = {}
-    for d in os.listdir(path):
-        full = os.path.join(path, d)
-        if not (os.path.isdir(full) and "=" in d):
-            continue
-        out[d] = {
-            (f, os.path.getmtime(os.path.join(full, f)))
-            for f in os.listdir(full)
-            if f.endswith(".parquet")
-        }
-    return out
-
-
-def test_merge_upsert_updates_and_inserts(spark, tmp_path):
-    path = str(tmp_path / "target")
-    base = spark.createDataFrame(
-        [Row(k=i, v=f"old{i}", p=("a" if i % 2 == 0 else "b")) for i in range(10)]
-    )
-    base.write.partitionBy("p").parquet(path)
-    before = _part_files(path)
-
-    updates = spark.createDataFrame(
-        [Row(k=3, v="new3", p="b"), Row(k=99, v="new99", p="b")]
-    )
-    merge_upsert(spark, path, updates, keys=("k",), partition_col="p")
-
-    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got[3] == "new3" and got[99] == "new99" and got[4] == "old4"
-    assert len(got) == 11
-
-    after = _part_files(path)
-    assert before["p=a"] == after["p=a"], "untouched partition was rewritten"
-    assert before["p=b"] != after["p=b"]
-
-
-def test_merge_upsert_requires_keys(spark, tmp_path):
-    with pytest.raises(ValueError):
-        merge_upsert(spark, str(tmp_path), spark.range(1), keys=())
 
 
 def test_gapfill_and_locf_on_sparse_hours(spark, tmp_path):

@@ -7,7 +7,7 @@ Writes plans/r13/<name>_<suffix>.txt for each requested query (default:
 every registered query). ``suffix`` is normally ``before`` or ``after`` —
 the optimization-round evidence files the judge diffs against the code.
 
-Plans are captured against $SPARK_GRAFT_SF_DIR (default sf0.1), the same
+Plans are captured against bench.SF_DIR ($SPARK_GRAFT_SF_DIR), the same
 fixture the bench times, so Exchange counts / join strategies / pushed
 filters in these files match the benched plans.
 """
@@ -19,10 +19,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import SF_DIR
 from bigdatatiler_spark.registry import load_all
 from bigdatatiler_spark.session import get_spark
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"
 )

@@ -5,8 +5,9 @@ measures whether the plans SCALE — the 100 TB question. It synthesizes a
 10× replica of the sf0.1 fixture (10 copies of each fact table with
 disjoint key ranges, so cardinalities, group counts, and join fan-outs
 scale honestly; dimensions stay fixed like a real star schema), then
-times a representative query slice at 1× and 10× on the same session
-and reports the scaling factor per query.
+times a representative query slice at 1× and at 10×, each in one
+``python bench.py NAMES`` process (bench's session and warmups), and
+reports the scaling factor per query.
 
 Reading the factors: a scan/map/agg plan should scale ≤ ~10× (sublinear
 when fixed overheads amortize); a factor ≫ 10× exposes a super-linear
@@ -34,7 +35,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -158,35 +158,20 @@ def main() -> int:
     ):
         build(dest=DEST, disjoint=disjoint)
 
-    from bench import _clear, _run
-    from bigdatatiler_spark.registry import load_all
-    from bigdatatiler_spark.session import get_spark
+    from bench import run_bench
 
-    spark = get_spark(
-        "scale-study", extra_conf={"spark.driver.memory": "16g"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    specs = load_all()
-
-    def run(name: str, sf_dir: str) -> float:
-        _clear(spark)
-        t0 = time.time()
-        _run(specs[name].fn(spark, sf_dir))
-        return round(time.time() - t0, 3)
-
-    # warmup (JVM + python workers)
-    run("events_filtered_topk", SRC)
-
-    report = {}
-    for name in QUERIES:
-        t1 = run(name, SRC)
-        t10 = run(name, DEST)
-        report[name] = {
-            "t_1x_sec": t1,
-            "t_10x_sec": t10,
-            "factor": round(t10 / t1, 2) if t1 > 0 else None,
+    t1 = run_bench(QUERIES, SPARK_GRAFT_SF_DIR=SRC)
+    t10 = run_bench(QUERIES, SPARK_GRAFT_SF_DIR=DEST)
+    report = {
+        name: {
+            "t_1x_sec": t1[name],
+            "t_10x_sec": t10[name],
+            "factor": round(t10[name] / t1[name], 2) if t1[name] > 0 else None,
         }
-        print(f"{name}: 1x={t1}s 10x={t10}s factor={report[name]['factor']}")
+        for name in QUERIES
+    }
+    for name, r in report.items():
+        print(f"{name}: 1x={r['t_1x_sec']}s 10x={r['t_10x_sec']}s factor={r['factor']}")
 
     with open(out_path, "w") as f:
         json.dump(

@@ -5,20 +5,20 @@ total), so per-query "parallelizes" claims rested on numbers dominated by
 planning/dispatch. This tool times a heavy-kernel slice against the
 DISJOINT 10× fixture (tools/scale_study.py --disjoint — the largest
 fixture that fits, ~10× sf0.1 with honest cardinalities and 1×-equivalent
-near-dup density) at two core counts, each in its OWN subprocess/JVM
-(master local[N] + shuffle partitions derive from SPARK_GRAFT_CPUS, the
-same env the driver varies), min-of-N per query, and reports the
-8→32-core speedup per query.
+near-dup density) at two core counts. Each count is one
+``python bench.py NAMES --reps 2`` process (master local[N] + shuffle
+partitions derive from SPARK_GRAFT_CPUS, the same env the driver varies),
+min-of-2 per query, and the tool reports the 8→32-core speedup per query.
+On a machine with fewer than 32 cores the 32-core side is oversubscribed,
+so the ratio measures oversubscription there, not scaling.
 
 Usage: python tools/scaling_cores.py [out.json]
-       python tools/scaling_cores.py --worker <cpus> <sf_dir> <reps> <names...>
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -49,64 +49,22 @@ CORES = (32, 8)
 REPS = 2
 
 
-def worker() -> int:
-    cpus, sf_dir, reps = sys.argv[2], sys.argv[3], int(sys.argv[4])
-    names = sys.argv[5:]
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
-
-    import time
-
-    from bigdatatiler_spark.registry import load_all
-    from bigdatatiler_spark.session import get_spark
-
-    spark = get_spark(
-        f"scaling-cores-{cpus}", extra_conf={"spark.driver.memory": "8g"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    specs = load_all()
-
-    import bench
-
-    bench._run(specs["events_filtered_topk"].fn(spark, sf_dir))
-    bench._warm_python_workers(spark)
-    bench._clear(spark)
-    out = {}
-    for name in names:
-        runs = []
-        for _ in range(reps):
-            t0 = time.time()
-            bench._run(specs[name].fn(spark, sf_dir))
-            runs.append(round(time.time() - t0, 3))
-            bench._clear(spark)
-        out[name] = min(runs)
-        print(f"# local[{cpus}] {name}: min={min(runs)} runs={runs}",
-              file=sys.stderr, flush=True)
-    print(json.dumps(out))
-    return 0
-
-
 def main() -> int:
-    if len(sys.argv) > 1 and sys.argv[1] == "--worker":
-        return worker()
     out_path = sys.argv[1] if len(sys.argv) > 1 else "SCALING_r13.json"
 
     import tools.scale_study as ss
+    from bench import run_bench
 
     dest = ss.DEST + "_disjoint"
     if not os.path.exists(os.path.join(dest, "events.parquet")):
         ss.build(dest=dest, disjoint=True)
 
-    results: dict[int, dict[str, float]] = {}
-    for cores in CORES:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--worker",
-             str(cores), dest, str(REPS), *QUERIES],
-            capture_output=True, text=True,
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    results = {
+        cores: run_bench(
+            QUERIES, REPS, SPARK_GRAFT_CPUS=str(cores), SPARK_GRAFT_SF_DIR=dest
         )
-        sys.stderr.write(proc.stderr[-4000:])
-        line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
-        results[cores] = json.loads(line)
+        for cores in CORES
+    }
 
     report = {
         name: {
