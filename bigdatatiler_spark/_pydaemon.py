@@ -1,0 +1,50 @@
+"""Spark's Python worker daemon, importing pyspark from site-packages.
+
+Spark puts ``pyspark.zip``, the py4j zip and the spark-core jar on the
+worker ``PYTHONPATH``. Each task's ``worker_util.setup_spark_files`` ends
+with ``importlib.invalidate_caches()``, which on CPython 3.11 makes every
+cached ``zipimporter`` re-read its archive's directory: about 6,700 entries,
+some 0.2 s per task. When the installed pyspark is the version inside
+``pyspark.zip``, this daemon drops every archive from ``sys.path`` before
+it starts the stock one, so forked workers import pyspark and py4j from
+site-packages and ``invalidate_caches()`` reads no archive. On a version
+mismatch it keeps the archives, which is Spark's stock behaviour.
+
+Selected by ``spark.python.daemon.module`` (``session.ENGINE_CONF``). It
+lives in the package because ``bigdatatiler_spark/__init__.py`` imports
+nothing, so no pyspark module is loaded from an archive before this runs.
+"""
+
+import importlib.machinery
+import os
+import sys
+import zipfile
+
+
+def drop_archives(path: list, importer_cache: dict) -> list:
+    """Remove every file entry of ``path`` (and its ``importer_cache`` keys)
+    if the pyspark the remaining entries import has the ``version.py`` of
+    the one in ``pyspark.zip``. Return the removed entries; ``[]`` leaves
+    both as they were."""
+    archives = [p for p in path if os.path.isfile(p)]
+    kept = [p for p in path if p not in archives]
+    zipped = [a for a in archives if os.path.basename(a) == "pyspark.zip"]
+    spec = importlib.machinery.PathFinder.find_spec("pyspark", kept)
+    if not zipped or spec is None or not spec.submodule_search_locations:
+        return []
+    version_py = os.path.join(spec.submodule_search_locations[0], "version.py")
+    with zipfile.ZipFile(zipped[0]) as z, open(version_py, "rb") as f:
+        if z.read("pyspark/version.py") != f.read():
+            return []
+    path[:] = kept
+    for key in list(importer_cache):
+        if any(key == a or key.startswith(a + os.sep) for a in archives):
+            del importer_cache[key]
+    return archives
+
+
+if __name__ == "__main__":
+    drop_archives(sys.path, sys.path_importer_cache)
+    from pyspark import daemon
+
+    daemon.manager()

@@ -18,9 +18,10 @@ Reference parity map (see SURVEY.md §2 for the full inventory):
 Scale design: every method returns a lazy DataFrame; filters land in the
 parquet scan (PushedFilters), the partition column prunes directories, and
 ORDER BY+LIMIT compiles to TakeOrderedAndProject (no global sort). A
-``LogStore`` lists the store and infers its schema once per write: every
-read between two writes starts from the same relation, so a point read,
-scan or page is one Spark job, like the reference's one round trip each.
+``LogStore`` lists the store once per write and infers its schema once:
+every read between two writes starts from the same relation, so a point
+read, scan or page is one Spark job, like the reference's one round trip
+each, and the first read after an append runs no schema-inference job.
 """
 
 from __future__ import annotations
@@ -125,7 +126,10 @@ class LogStore:
 
     Reads share one relation per write: :meth:`df` keeps the frame
     ``spark.read.parquet`` returns, and every write through this store drops
-    it, so the next read lists the directory and infers the schema again.
+    it, so the next read lists the directory again. The schema is inferred
+    on the first read only and reused after an append; :meth:`create`
+    forgets it. The inferred schema is kept, not the written frame's:
+    partition discovery types the user column differently from the frame.
     A write made through this store is visible to the next read. Files
     written by another writer become visible after this store's next write,
     or in a new ``LogStore`` — as for any Spark DataFrame over a path
@@ -136,6 +140,7 @@ class LogStore:
         self.path = path
         self.user_col = user_col
         self._df: DataFrame | None = None
+        self._schema = None
 
     # --- writes ---------------------------------------------------------
     def _write(self, df: DataFrame, mode: str) -> None:
@@ -152,6 +157,7 @@ class LogStore:
     def create(self, df: DataFrame) -> None:
         """DDL + initial load (reference: createAzureDocumentDatabase,
         BigDataLogControl.cs:38-66). Partitioned overwrite."""
+        self._schema = None
         self._write(df, "overwrite")
 
     def append(self, df: DataFrame) -> None:
@@ -162,9 +168,14 @@ class LogStore:
 
     # --- reads ----------------------------------------------------------
     def df(self) -> DataFrame:
-        """The whole store, listed and schema-inferred once per write."""
+        """The whole store, listed once per write; the schema is inferred
+        on the first read after :meth:`create`."""
         if self._df is None:
-            self._df = self.spark.read.parquet(self.path)
+            reader = self.spark.read
+            if self._schema is not None:
+                reader = reader.schema(self._schema)
+            self._df = reader.parquet(self.path)
+            self._schema = self._df.schema
         return self._df
 
     def point_read(self, user_id, doc_id, id_col: str = "id") -> DataFrame:

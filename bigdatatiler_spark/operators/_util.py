@@ -125,6 +125,12 @@ def nd_zero() -> Column:
     return F.rand(42) * F.lit(0.0)
 
 
+#: spark.sql.adaptive.coalescePartitions.minPartitionSize's default: with
+#: coalescePartitions.parallelismFirst (also the default), the smallest
+#: partition AQE coalesces a shuffle into.
+_AQE_MIN_PARTITION_BYTES = 1 << 20
+
+
 def ensure_parallelism(df):
     """Repartition ONLY when the input arrives with fewer splits than
     half the cluster's cores — the single-file local-fixture case where
@@ -133,11 +139,23 @@ def ensure_parallelism(df):
     multi-file corpus already has the splits, and there this is a no-op
     decision: no exchange is added, so no raw-payload shuffle cost at
     scale. Results are always partition-layout-independent (env sweep's
-    small_splits variant pins that)."""
+    small_splits variant pins that).
+
+    The decision reads the plan and runs nothing. An exchange-free frame
+    has its scan's splits, which its RDD plans from the file listing.
+    Under AQE a frame with an exchange gets its partition count at run
+    time (planning its RDD would run the shuffle map stages now, and the
+    action would run them again). AQE coalesces a shuffle to about one
+    partition per ``_AQE_MIN_PARTITION_BYTES``, so the optimizer's size
+    estimate stands in for the count."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(par // 2, 2):
-        return df.repartition(par)
-    return df
+    want = max(par // 2, 2)
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
+        few = int(qe.optimizedPlan().stats().sizeInBytes()) < want * _AQE_MIN_PARTITION_BYTES
+    else:
+        few = qe.toRdd().getNumPartitions() < want
+    return df.repartition(par) if few else df
 
 
 def stage(df: DataFrame, mode: str = "shared") -> DataFrame:

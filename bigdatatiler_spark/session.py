@@ -59,6 +59,12 @@ ENGINE_CONF: dict[str, str] = {
     # would lose its reason to exist. INT64 micros
     # has stats and is what every modern reader expects.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # Python workers import pyspark from site-packages, not from the
+    # archives Spark puts on their path, so a task's invalidate_caches()
+    # re-reads no archive (see _pydaemon). Static: the driver's own
+    # session cannot get it, since a live session rejects the key with
+    # [CANNOT_MODIFY_CONFIG]; tune_session leaves it out.
+    "spark.python.daemon.module": "bigdatatiler_spark._pydaemon",
 }
 
 #: Subset of ENGINE_CONF that can be set on a live session (runtime-mutable).

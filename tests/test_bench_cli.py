@@ -33,4 +33,5 @@ def test_bench_cli_times_prefix_then_named_lines():
         "ann_ivf_index_build", "dedup_cc_label_store_build", "events_filtered_topk",
     ]
     assert all(sec >= 0 for sec in detail["queries"].values())
+    assert detail["label_store_built"] is True  # timing the build line rebuilds the store
     assert detail["value"] == final["value"]

@@ -194,7 +194,8 @@ def test_logstore_combined_reassembly(spark, tmp_path):
 def test_logstore_reads_reuse_listing(spark, events_df, tmp_path):
     """Reads between two writes share one listed, schema-inferred relation:
     a read is one Spark job, not an inference job plus the read. A write
-    through the store drops the relation, so the next read sees its rows."""
+    through the store drops the relation, so the next read sees its rows;
+    an append keeps the inferred schema, so that read is one job too."""
     store = LogStore(spark, str(tmp_path / "listing"))
     store.create(events_df)
     assert store.point_read("u1", 2, id_col="event_id").count() == 1
@@ -206,7 +207,13 @@ def test_logstore_reads_reuse_listing(spark, events_df, tmp_path):
     store.append(spark.createDataFrame(
         [(6, _ts("2024-01-01 14:00:00"), "u1", "view")], events_df.schema
     ))
-    assert [r["event_type"] for r in store.point_read("u1", 6, id_col="event_id").collect()] == ["view"]
+    rows = []
+    jobs = _jobs_in_group(
+        spark, "logstore-read-after-append",
+        lambda: rows.extend(store.point_read("u1", 6, id_col="event_id").collect()),
+    )
+    assert [r["event_type"] for r in rows] == ["view"]
+    assert len(jobs) == 1
     assert store.df().count() == 6
     pages = []
     jobs = _jobs_in_group(

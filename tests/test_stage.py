@@ -1,12 +1,13 @@
 """``_util.stage`` — the package's one staging call — in each of its three
-modes: what runs at call time, and what a later action's plan reads."""
+modes: what runs at call time, and what a later action's plan reads; and
+``_util.ensure_parallelism``, which decides from the plan alone."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from bigdatatiler_spark.operators._util import stage
+from bigdatatiler_spark.operators._util import ensure_parallelism, stage
 
 
 def _jobs_in_group(spark, group: str, fn):
@@ -66,3 +67,24 @@ def test_stage_modes(spark, tmp_path):
 
     with pytest.raises(ValueError, match="stage mode"):
         stage(_frame(spark), "bogus")
+
+
+def test_ensure_parallelism_runs_no_job(spark):
+    """Under AQE a frame with an exchange gets its partition count at run
+    time; ensure_parallelism decides from the plan instead of running the
+    shuffle map stages, and still spreads a small shuffled frame over the
+    cluster's cores. An exchange-free frame keeps its splits when it has
+    enough of them."""
+    par = spark.sparkContext.defaultParallelism
+    shuffled = _frame(spark).groupBy("s").count()
+    out, jobs = _jobs_in_group(spark, "ensure-parallelism-exchange",
+                               lambda: ensure_parallelism(shuffled))
+    assert jobs == 0
+    assert out.rdd.getNumPartitions() == par
+    assert sorted(out.collect()) == sorted(shuffled.collect())
+
+    wide = spark.range(0, 200, 1, par)
+    out, jobs = _jobs_in_group(spark, "ensure-parallelism-scan",
+                               lambda: ensure_parallelism(wide))
+    assert jobs == 0
+    assert out is wide
