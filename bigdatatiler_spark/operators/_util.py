@@ -125,12 +125,6 @@ def nd_zero() -> Column:
     return F.rand(42) * F.lit(0.0)
 
 
-#: spark.sql.adaptive.coalescePartitions.minPartitionSize's default: with
-#: coalescePartitions.parallelismFirst (also the default), the smallest
-#: partition AQE coalesces a shuffle into.
-_AQE_MIN_PARTITION_BYTES = 1 << 20
-
-
 def ensure_parallelism(df):
     """Repartition ONLY when the input arrives with fewer splits than
     half the cluster's cores — the single-file local-fixture case where
@@ -143,18 +137,17 @@ def ensure_parallelism(df):
 
     The decision reads the plan and runs nothing. An exchange-free frame
     has its scan's splits, which its RDD plans from the file listing.
-    Under AQE a frame with an exchange gets its partition count at run
-    time (planning its RDD would run the shuffle map stages now, and the
-    action would run them again). AQE coalesces a shuffle to about one
-    partition per ``_AQE_MIN_PARTITION_BYTES``, so the optimizer's size
-    estimate stands in for the count."""
+    Under AQE a frame with an exchange gets its partition count only at
+    run time (planning its RDD would run the shuffle map stages now, and
+    the action would run them again), so it is always repartitioned. In
+    the package's queries such a frame is a small ``distinct`` or join
+    ahead of a codec stage, which AQE coalesces below ``want`` (checked
+    at sf0.001 and sf0.1)."""
     par = df.sparkSession.sparkContext.defaultParallelism
     want = max(par // 2, 2)
     qe = df._jdf.queryExecution()
-    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
-        few = int(qe.optimizedPlan().stats().sizeInBytes()) < want * _AQE_MIN_PARTITION_BYTES
-    else:
-        few = qe.toRdd().getNumPartitions() < want
+    few = (qe.executedPlan().nodeName() == "AdaptiveSparkPlan"
+           or qe.toRdd().getNumPartitions() < want)
     return df.repartition(par) if few else df
 
 

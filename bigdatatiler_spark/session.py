@@ -18,6 +18,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: The directory that holds the ``bigdatatiler_spark`` package.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: Configuration applied to every session we build, and (where runtime-settable)
 #: re-applied to sessions handed to us by the driver harness.
 ENGINE_CONF: dict[str, str] = {
@@ -65,6 +68,11 @@ ENGINE_CONF: dict[str, str] = {
     # session cannot get it, since a live session rejects the key with
     # [CANNOT_MODIFY_CONFIG]; tune_session leaves it out.
     "spark.python.daemon.module": "bigdatatiler_spark._pydaemon",
+    # Python workers import this package (the daemon above, and the
+    # package's own mapInArrow / pandas-UDF closures). Spark merges this
+    # entry into the workers' PYTHONPATH, so they find it whatever
+    # directory the session was started from.
+    "spark.executorEnv.PYTHONPATH": _PACKAGE_PARENT,
 }
 
 #: Subset of ENGINE_CONF that can be set on a live session (runtime-mutable).

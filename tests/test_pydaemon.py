@@ -1,9 +1,12 @@
 """The Python worker daemon: workers import pyspark from site-packages,
-with no archive on their import path, unless the versions differ."""
+with no archive on their import path, unless the versions differ; and
+they find the package wherever the session was started from."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import sysconfig
 import zipfile
 
@@ -66,3 +69,42 @@ def test_drop_archives_only_when_versions_match(tmp_path, zip_version, dropped):
     else:
         assert removed == []
         assert (path, cache) == (before_path, before_cache)
+
+
+_OTHER_CWD_SCRIPT = """
+import sys
+sys.path.insert(0, {root!r})
+from bigdatatiler_spark.session import get_spark
+
+spark = get_spark("pydaemon-cwd", master="local[1]")
+spark.sparkContext.setLogLevel("ERROR")
+
+def _task(_):
+    import os
+    import bigdatatiler_spark
+    import pyspark
+    yield (os.getcwd(), pyspark.__file__)
+
+[(cwd, pyspark_file)] = spark.sparkContext.parallelize([0], 1).mapPartitions(_task).collect()
+print("CWD", cwd)
+print("PYSPARK", pyspark_file)
+spark.stop()
+"""
+
+
+def test_python_task_runs_from_another_working_directory(tmp_path):
+    """A get_spark session started outside the repo, with no PYTHONPATH,
+    still starts its worker daemon and runs a task that imports the
+    package: the session puts the package's parent on the workers' path."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _OTHER_CWD_SCRIPT.format(root=root)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = dict(line.split(" ", 1) for line in proc.stdout.splitlines()
+                 if line.startswith(("CWD ", "PYSPARK ")))
+    assert os.path.realpath(lines["CWD"]) == os.path.realpath(tmp_path)
+    site = os.path.realpath(sysconfig.get_paths()["purelib"])
+    assert os.path.realpath(lines["PYSPARK"]).startswith(site + os.sep)
