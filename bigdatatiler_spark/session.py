@@ -64,7 +64,9 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     # Python workers import pyspark from site-packages, not from the
     # archives Spark puts on their path, so a task's invalidate_caches()
-    # re-reads no archive (see _pydaemon). Static: the driver's own
+    # re-reads no archive; and they fork from a daemon that has already
+    # imported pandas and pyarrow and frozen them, so they share one copy
+    # (see _pydaemon). Static: the driver's own
     # session cannot get it, since a live session rejects the key with
     # [CANNOT_MODIFY_CONFIG]; tune_session leaves it out.
     "spark.python.daemon.module": "bigdatatiler_spark._pydaemon",

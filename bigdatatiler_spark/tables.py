@@ -35,6 +35,7 @@ from pyspark.sql.types import (
     DateType,
     LongType,
     StringType,
+    StructType,
     TimestampNTZType,
     TimestampType,
 )
@@ -158,24 +159,30 @@ def _cache_put(cache: dict, key, value) -> None:
     cache[key] = value
 
 
+def _members(path: str) -> list[str]:
+    """The parquet files a read of ``path`` covers: a directory's
+    top-level ``.parquet`` members, sorted, or the file itself."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
+    )
+
+
+def _stat_key(f: str) -> tuple[str, int, int]:
+    st = os.stat(f)
+    return (os.path.abspath(f), st.st_mtime_ns, st.st_size)
+
+
 def _readable_path(path: str) -> str:
     import tempfile
 
     import pyarrow.parquet as pq
 
-    files = (
-        sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-        if os.path.isdir(path)
-        else [path]
-    )
+    files = _members(path)
     out = path
     for f in files:
-        st = os.stat(f)
-        key = (os.path.abspath(f), st.st_mtime_ns, st.st_size)
+        key = _stat_key(f)
         cached = _LAYOUT_CACHE.get(key)
         if cached is not None and cached != f and not os.path.exists(cached):
             # the transcoded copy was swept from /tmp mid-session
@@ -214,13 +221,7 @@ def _readable_path(path: str) -> str:
     if out is not None:
         return out
     if len(files) == 1 and not os.path.isdir(path):
-        return _LAYOUT_CACHE[
-            (
-                os.path.abspath(files[0]),
-                os.stat(files[0]).st_mtime_ns,
-                os.stat(files[0]).st_size,
-            )
-        ]
+        return _LAYOUT_CACHE[_stat_key(files[0])]
     # directory with ≥1 transcoded member: materialize a shadow dir of
     # per-file resolved paths (symlinks keep untouched members shared).
     # The shadow name is keyed on the RESOLVED MEMBER SET — (abspath,
@@ -235,9 +236,8 @@ def _readable_path(path: str) -> str:
 
     members = []
     for f in files:
-        st = os.stat(f)
-        src = _LAYOUT_CACHE[(os.path.abspath(f), st.st_mtime_ns, st.st_size)]
-        members.append((os.path.abspath(f), st.st_mtime_ns, st.st_size, src))
+        key = _stat_key(f)
+        members.append((*key, _LAYOUT_CACHE[key]))
     sig = hashlib.md5(repr(sorted(members)).encode()).hexdigest()[:16]
     shadow = os.path.join(tempfile.gettempdir(), f"bdt_shadow_{sig}")
     os.makedirs(shadow, exist_ok=True)
@@ -259,11 +259,7 @@ def _readable_path(path: str) -> str:
     return shadow
 
 
-#: member-set key → explicit union read schema (None = homogeneous dir)
-_SCHEMA_UNION_CACHE: dict[tuple, "StructType | None"] = {}
-
-
-def _union_read_schema(path: str) -> "StructType | None":
+def _union_read_schema(path: str) -> StructType | None:
     """Schema evolution inside ONE directory-table (fuzz 16 class 52;
     deepened r11): member files may disagree on column NAMES (added or
     dropped across regeneration batches), on NESTED fields inside a
@@ -282,39 +278,65 @@ def _union_read_schema(path: str) -> "StructType | None":
     Spark schema — the scan then fills absent cells (top-level AND
     nested) with NULL and upcasts narrow members, matching
     ``union_by_name`` exactly. Footer reads are driver-side metadata
-    only and happen ONLY when members actually disagree — the decision
-    is cached on the (path, mtime, size) member set, and homogeneous
-    directories (every driver fixture to date) stay on the
-    single-footer fast path. Same-name INCOMPATIBLE changes (string vs
-    int) fail loudly in unify_schemas; documented boundary."""
+    only, and ``read_schema`` caches the outcome on the member set;
+    homogeneous directories (every driver fixture to date) return None
+    and keep Spark's own inference. Same-name INCOMPATIBLE changes
+    (string vs int) fail loudly in unify_schemas; documented boundary."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     if not os.path.isdir(path):
         return None
-    files = sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
+    files = _members(path)
     if len(files) < 2:
         return None
-    key = tuple(
-        (f, os.stat(f).st_mtime_ns, os.stat(f).st_size) for f in files
-    )
-    if key in _SCHEMA_UNION_CACHE:
-        return _SCHEMA_UNION_CACHE[key]
     schemas = [pq.read_schema(f).remove_metadata() for f in files]
     if all(s.equals(schemas[0], check_metadata=False) for s in schemas[1:]):
-        out = None  # homogeneous: native inference, zero change to the hot path
-    else:
-        from pyspark.sql.pandas.types import from_arrow_schema
+        return None  # homogeneous: native inference
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-        out = from_arrow_schema(
-            pa.unify_schemas(schemas, promote_options="permissive")
+    return from_arrow_schema(pa.unify_schemas(schemas, promote_options="permissive"))
+
+
+#: Parquet-reading confs that change the schema Spark infers for a file.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: (resolved path, every member's (abspath, mtime_ns, size), the values of
+#: ``_SCHEMA_CONFS``) → the schema ``read_schema`` returned for it.
+_READ_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def read_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema to read ``path`` with: the union schema of its members
+    when they disagree (``_union_read_schema``), else the one Spark infers.
+    Inference runs a Spark job, so the result is cached per member set
+    and conf values: a later read of unchanged files runs none, and an
+    in-place regeneration, which changes a member's stats, infers again.
+    A path with no top-level ``.parquet`` member (a partitioned layout)
+    has no member set to key on and is inferred on every call."""
+    files = _members(path)
+    key = None
+    if files:
+        key = (
+            path,
+            tuple(_stat_key(f) for f in files),
+            tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
         )
-    _cache_put(_SCHEMA_UNION_CACHE, key, out)
-    return out
+        cached = _READ_SCHEMA_CACHE.get(key)
+        if cached is not None:
+            return cached
+    schema = _union_read_schema(path)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+    if key is not None:
+        _cache_put(_READ_SCHEMA_CACHE, key, schema)
+    return schema
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -326,27 +348,21 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     tune_session(spark)
     path = _readable_path(os.path.join(sf_dir, f"{name}.parquet"))
-    reader = spark.read
-    union_schema = _union_read_schema(path)
-    if union_schema is not None:
-        reader = reader.schema(union_schema)
-    df = reader.parquet(path)
+    df = spark.read.schema(read_schema(spark, path)).parquet(path)
     _canary(name, df)
     if name == "events":
         dt = df.schema["ts"].dataType
         if isinstance(dt, LongType):
             # physical int64 nanos: keep it as ts_ns (pushdown-capable),
             # derive the timestamp projection.
-            df = df.withColumn("ts_ns", F.col("ts")).withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
+            ts_ns = F.col("ts")
+            ts = F.timestamp_micros(F.expr("ts div 1000"))
         else:
             conv = _as_timestamp(name, "ts", dt)
-            if conv is not None:
-                df = df.withColumn("ts", conv)
             # NTZ→LTZ under the UTC session tz is value-preserving, and
             # Catalyst unwraps the cast inside comparisons so range filters
             # on ts still reach the parquet scan (tests/test_plans.py).
+            ts = (F.col("ts") if conv is None else conv).cast("timestamp")
             # ts_ns SATURATES at ±9e15 µs (years ~2255 / ~-283000 —
             # just inside the int64-nanos ceiling, leaving headroom for
             # window arithmetic like ts_ns + burst): a garbage far-
@@ -357,16 +373,10 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # (ts_ns, event_id) stays a usable total order; oracles
             # mirror with greatest(least(epoch_us(ts), 9e15), -9e15)
             # * 1000.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp")).withColumn(
-                "ts_ns",
-                F.greatest(
-                    F.least(
-                        F.unix_micros(F.col("ts")), F.lit(9000000000000000)
-                    ),
-                    F.lit(-9000000000000000),
-                )
-                * F.lit(1000),
-            )
+            ts_ns = F.greatest(
+                F.least(F.unix_micros(ts), F.lit(9000000000000000)),
+                F.lit(-9000000000000000),
+            ) * F.lit(1000)
         # Canonicalize unusable metrics to NULL at load: NaN/Inf occur in
         # real feeds, Spark's NaN→DECIMAL cast throws under ANSI mode, and
         # DuckDB cannot cast NaN to DECIMAL at all (hostile-fixture fuzz
@@ -375,15 +385,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # cast yields NULL while DuckDB's CAST is a hard error, and ANSI
         # Spark throws. One loader rule covers all of it; every oracle
         # mirrors with `isfinite(value) AND abs(value) < 1e16`.
-        df = df.withColumn(
-            "value",
-            F.when(
-                ~F.isnan("value")
-                & ~F.col("value").isin(float("inf"), float("-inf"))
-                & (F.abs(F.col("value")) < F.lit(1e16)),
-                F.col("value"),
-            ),
+        value = F.when(
+            ~F.isnan("value")
+            & ~F.col("value").isin(float("inf"), float("-inf"))
+            & (F.abs(F.col("value")) < F.lit(1e16)),
+            F.col("value"),
         )
+        # one projection: every expression reads the scan's columns
+        df = df.withColumns({"ts": ts, "ts_ns": ts_ns, "value": value})
     elif name in _TIME_COLS:
         for col in _TIME_COLS[name]:
             conv = _as_timestamp(name, col, df.schema[col].dataType)
