@@ -102,9 +102,9 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it in EVERY micro-batch. Same conditional repair as tables.table;
     # FileStreamSource then fills absent cells with NULL and upcasts
     # narrow members per the requested union schema.
-    from ..tables import read_schema
+    from ..tables import read_parquet
 
-    schema = read_schema(spark, path)
+    schema = read_parquet(spark, path).schema
     if os.path.isdir(path):
         # directory-shaped events table (multi-file): stream the directory
         # itself, ONE FILE PER MICRO-BATCH — this is the multi-batch parity
@@ -575,11 +575,11 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch (the multi-batch parity shape)."""
     import os
 
-    from ..tables import _readable_path, read_schema
+    from ..tables import _readable_path, read_parquet
 
     tune_session(spark)
     path = _readable_path(os.path.join(sf_dir, "documents.parquet"))
-    schema = read_schema(spark, path)
+    schema = read_parquet(spark, path).schema
     if os.path.isdir(path):
         return (
             spark.readStream.schema(schema)

@@ -278,7 +278,7 @@ def _union_read_schema(path: str) -> StructType | None:
     Spark schema — the scan then fills absent cells (top-level AND
     nested) with NULL and upcasts narrow members, matching
     ``union_by_name`` exactly. Footer reads are driver-side metadata
-    only, and ``read_schema`` caches the outcome on the member set;
+    only, and ``read_parquet`` caches the outcome on the member set;
     homogeneous directories (every driver fixture to date) return None
     and keep Spark's own inference. Same-name INCOMPATIBLE changes
     (string vs int) fail loudly in unify_schemas; documented boundary."""
@@ -308,18 +308,19 @@ _SCHEMA_CONFS = (
 )
 
 #: (resolved path, every member's (abspath, mtime_ns, size), the values of
-#: ``_SCHEMA_CONFS``) → the schema ``read_schema`` returned for it.
+#: ``_SCHEMA_CONFS``) → the schema ``read_parquet`` read it with.
 _READ_SCHEMA_CACHE: dict[tuple, StructType] = {}
 
 
-def read_schema(spark: SparkSession, path: str) -> StructType:
-    """The schema to read ``path`` with: the union schema of its members
-    when they disagree (``_union_read_schema``), else the one Spark infers.
-    Inference runs a Spark job, so the result is cached per member set
-    and conf values: a later read of unchanged files runs none, and an
-    in-place regeneration, which changes a member's stats, infers again.
-    A path with no top-level ``.parquet`` member (a partitioned layout)
-    has no member set to key on and is inferred on every call."""
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the union schema of its members
+    when they disagree (``_union_read_schema``). Inferring the schema runs
+    a Spark job, so the schema read is cached per member set and conf
+    values: a later read of unchanged files passes it to
+    ``spark.read.schema`` and runs none, and an in-place regeneration,
+    which changes a member's stats, infers again. A path with no
+    top-level ``.parquet`` member (a partitioned layout) has no member
+    set to key on and is inferred on every call."""
     files = _members(path)
     key = None
     if files:
@@ -330,13 +331,12 @@ def read_schema(spark: SparkSession, path: str) -> StructType:
         )
         cached = _READ_SCHEMA_CACHE.get(key)
         if cached is not None:
-            return cached
+            return spark.read.schema(cached).parquet(path)
     schema = _union_read_schema(path)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     if key is not None:
-        _cache_put(_READ_SCHEMA_CACHE, key, schema)
-    return schema
+        _cache_put(_READ_SCHEMA_CACHE, key, df.schema)
+    return df
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -348,7 +348,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     tune_session(spark)
     path = _readable_path(os.path.join(sf_dir, f"{name}.parquet"))
-    df = spark.read.schema(read_schema(spark, path)).parquet(path)
+    df = read_parquet(spark, path)
     _canary(name, df)
     if name == "events":
         dt = df.schema["ts"].dataType
