@@ -322,10 +322,11 @@ def _clear(spark) -> None:
 def _warm_python_workers(spark) -> None:
     """Spin up the Python worker pool before the timed loop.
 
-    The FIRST Arrow-batched UDF stage of a session pays for the pool: one
-    worker per core forked from the daemon, each importing pyspark, pandas
-    and pyarrow. On a 4-core box it takes 1.4-1.5 s, the next identical
-    stage 0.15-0.25 s; the pool start grows with the worker count.
+    The FIRST Arrow-batched UDF stage of a session pays for the pool:
+    Spark starts the worker daemon, which imports pyspark, pandas and
+    pyarrow once (bigdatatiler_spark._pydaemon), then forks one worker per
+    core. On a 4-core box that stage takes 1.5-2.1 s, the next identical
+    stage 0.17-0.22 s.
     Unwarmed, that cost lands on whichever query runs a pandas UDF first.
     It is session startup of the same class as the JVM/codegen warmup
     above (production executors keep reusable worker pools warm across

@@ -18,15 +18,16 @@ its own pandas and pyarrow, and its collections never walk, and so never
 write to, the inherited objects.
 
 Forking after ``import pyarrow`` is safe although that import starts a
-thread (jemalloc's ``jemalloc_bg_thd``, Arrow's allocator): jemalloc
-registers ``pthread_atfork`` handlers that take every arena and
-background-thread lock before ``fork()`` and re-initialise them in the
-child, where background purging is switched off and purging happens
-inline. Arrow's own thread pools are re-created after a fork the same
-way. numpy's OpenBLAS threads, which the stock daemon already starts via
-``pyspark.worker``, are shut down by OpenBLAS's own ``fork()`` handler
-and restarted on first use. ``tests/test_pydaemon.py`` runs Arrow tasks each on a
-newly forked worker.
+thread (``jemalloc_bg_thd``, the background purger of the jemalloc that
+is Arrow's allocator). jemalloc registers ``pthread_atfork`` handlers
+that take every arena and background-thread lock before ``fork()`` and
+re-initialise them in the child, where background purging is off and
+purging happens inline. Arrow re-creates its own thread pools after a
+fork through its ``RegisterAtFork`` handlers. numpy's OpenBLAS threads,
+which the stock daemon already starts through ``pyspark.worker``, are
+shut down by OpenBLAS's own ``fork()`` handler and restarted on first
+use. ``tests/test_pydaemon.py`` runs 20 Arrow tasks, each on a newly
+forked worker.
 
 Selected by ``spark.python.daemon.module`` (``session.ENGINE_CONF``). It
 lives in the package because ``bigdatatiler_spark/__init__.py`` imports
