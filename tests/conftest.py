@@ -34,6 +34,18 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def jobs_in_group(spark, group: str, fn):
+    """Run ``fn`` under job group ``group``; return (its result, the
+    number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("bigdatatiler-tests", master="local[4]", extra_conf={

@@ -3,6 +3,8 @@ and the parquet-reading confs are unchanged."""
 
 from __future__ import annotations
 
+from conftest import jobs_in_group
+
 
 def test_module_caches_bounded():
     """r11 verdict item 7: the (path, mtime, size)-keyed metadata caches
@@ -15,18 +17,6 @@ def test_module_caches_bounded():
     assert len(cache) <= tables._CACHE_CAP
     # newest entries survive
     assert ("k", tables._CACHE_CAP * 3 - 1) in cache
-
-
-def _jobs(spark, group: str, fn):
-    """Run ``fn`` under job group ``group``; return (its result, the
-    number of Spark jobs it started)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_table_reuses_the_inferred_schema(spark, tmp_path):
@@ -48,17 +38,17 @@ def test_table_reuses_the_inferred_schema(spark, tmp_path):
         pq.write_table(pa.table(cols), str(d / "part-0.parquet"))
 
     write({"r_regionkey": [0, 1], "r_name": pa.array([b"AFRICA", b"ASIA"])})
-    df, jobs = _jobs(spark, "table-first", lambda: table(spark, str(tmp_path), "region"))
+    df, jobs = jobs_in_group(spark, "table-first", lambda: table(spark, str(tmp_path), "region"))
     assert jobs == 1
     assert df.schema["r_name"].dataType.typeName() == "binary"
-    df, jobs = _jobs(spark, "table-second", lambda: table(spark, str(tmp_path), "region"))
+    df, jobs = jobs_in_group(spark, "table-second", lambda: table(spark, str(tmp_path), "region"))
     assert jobs == 0
     assert sorted(r.r_regionkey for r in df.collect()) == [0, 1]
 
     time.sleep(0.01)  # ensure mtime_ns moves even on coarse filesystems
     write({"r_regionkey": [0, 1, 2], "r_name": pa.array([b"A", b"B", b"C"]),
            "r_comment": ["x", "y", "z"]})
-    df, jobs = _jobs(spark, "table-regenerated", lambda: table(spark, str(tmp_path), "region"))
+    df, jobs = jobs_in_group(spark, "table-regenerated", lambda: table(spark, str(tmp_path), "region"))
     assert jobs == 1
     assert df.columns == ["r_regionkey", "r_name", "r_comment"]
     assert df.count() == 3
@@ -66,7 +56,7 @@ def test_table_reuses_the_inferred_schema(spark, tmp_path):
     key = "spark.sql.parquet.binaryAsString"
     spark.conf.set(key, "true")
     try:
-        df, jobs = _jobs(spark, "table-conf", lambda: table(spark, str(tmp_path), "region"))
+        df, jobs = jobs_in_group(spark, "table-conf", lambda: table(spark, str(tmp_path), "region"))
         assert jobs == 1
         assert df.schema["r_name"].dataType.typeName() == "string"
     finally:

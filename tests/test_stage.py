@@ -8,18 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdatatiler_spark.operators._util import ensure_parallelism, stage
-
-
-def _jobs_in_group(spark, group: str, fn):
-    """Run ``fn`` under job group ``group``; return (its result, the
-    number of Spark jobs it started)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from conftest import jobs_in_group
 
 
 def _frame(spark):
@@ -39,7 +28,7 @@ def test_stage_modes(spark, tmp_path):
 
     # shared: eager — the blocks materialize at call time, and a later
     # action reads the checkpointed RDD instead of replaying the lineage
-    shared, jobs = _jobs_in_group(spark, "stage-shared", lambda: stage(_frame(spark)))
+    shared, jobs = jobs_in_group(spark, "stage-shared", lambda: stage(_frame(spark)))
     assert jobs >= 1
     later = shared.where(F.col("s") > 0)
     assert "ExistingRDD" in _plan(later)
@@ -48,7 +37,7 @@ def test_stage_modes(spark, tmp_path):
 
     # round: lazy — the plan is cut at once, but no job runs until the
     # next action
-    rnd, jobs = _jobs_in_group(spark, "stage-round", lambda: stage(_frame(spark), "round"))
+    rnd, jobs = jobs_in_group(spark, "stage-round", lambda: stage(_frame(spark), "round"))
     assert jobs == 0
     assert "ExistingRDD" in _plan(rnd)
     assert sorted(rnd.collect()) == expected
@@ -77,14 +66,14 @@ def test_ensure_parallelism_runs_no_job(spark):
     enough of them."""
     par = spark.sparkContext.defaultParallelism
     shuffled = _frame(spark).groupBy("s").count()
-    out, jobs = _jobs_in_group(spark, "ensure-parallelism-exchange",
+    out, jobs = jobs_in_group(spark, "ensure-parallelism-exchange",
                                lambda: ensure_parallelism(shuffled))
     assert jobs == 0
     assert out.rdd.getNumPartitions() == par
     assert sorted(out.collect()) == sorted(shuffled.collect())
 
     wide = spark.range(0, 200, 1, par)
-    out, jobs = _jobs_in_group(spark, "ensure-parallelism-scan",
+    out, jobs = jobs_in_group(spark, "ensure-parallelism-scan",
                                lambda: ensure_parallelism(wide))
     assert jobs == 0
     assert out is wide
