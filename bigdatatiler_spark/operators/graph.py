@@ -5,17 +5,19 @@ into canonical groups ("keep one doc per cluster") is connected
 components over the dup graph — the step every large-scale dedup
 pipeline ends with, and the engine's one genuinely iterative algorithm.
 
-Spark-first shape: label propagation to a fixpoint —
-each node starts labeled with itself, every iteration each node takes the
-min label among itself and its neighbors, convergence when no label
-changes. Each iteration is two equi-joins + a groupBy (all built-in,
-shuffle on doc_id); the *driver* only coordinates the loop and reads a
-1-row convergence count — no data ever collects. ``localCheckpoint``
-truncates lineage each round, or iteration N replays rounds 1..N-1 and
-the plan grows exponentially (the classic iterative-Spark trap).
+Spark-first shape: one kernel, alternating large-star/small-star to a
+fixpoint (Kiveris et al., see ``connected_components``). Each round is
+groupBy-min + equi-join on the edge list (all built-in, shuffle on node
+id); the *driver* only coordinates the loop and reads a 1-row set
+signature per round — no data ever collects. A lineage cut each round
+keeps the plan O(1), or round N replays rounds 1..N-1 and the plan grows
+exponentially (the classic iterative-Spark trap).
 
-Iterations needed = graph diameter (near-dup clusters are shallow — a
-handful of rounds); MAX_ITERS bounds the worst case. The DuckDB oracle
+Rounds needed are O(log² n) whatever the cluster diameter. Plain label
+propagation needs one round per hop, so a MAX_ITERS cap splits a long
+chained near-dup cluster into several labels with no error; star
+contraction returns one label for it (tests/test_graph.py's shuffled-id
+chains). MAX_ITERS still bounds the loop. The DuckDB oracle
 computes the same fixpoint declaratively with a recursive CTE (min label
 over the reachable set), so the iterative implementation is verified
 against an independent formulation. Its oracle fragments live here once:
@@ -28,7 +30,7 @@ only UNION ALL recursion ([UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE]), and
 without set-dedup between rounds a reachability recursion on a CYCLIC
 dup graph never terminates — DuckDB's UNION-dedup semantics are exactly
 what makes the oracle's formulation legal there. The driver-coordinated
-loop (or the two-star variant below) stays the correct Spark shape.
+loop stays the correct Spark shape.
 """
 
 from __future__ import annotations
@@ -59,12 +61,14 @@ def _loop_mode(lineage_cut: str) -> str:
 
 def _band_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash band-mate candidate pairs as undirected (a, b) edges — the
-    shared input of both clustering algorithms (``band_pairs``, the
-    candidate rule of dedup_minhash_lsh, renamed)."""
+    shared input of the band-graph queries (``band_pairs``, the candidate
+    rule of dedup_minhash_lsh, renamed)."""
     from .dedup import _shingled
 
-    # lazy although band_pairs' self-join reads it twice, against stage's
-    # "round" rule; kept pending the ROADMAP item 3 eager-flip A/B
+    # lazy although band_pairs' self-join reads it twice: eager "shared"
+    # measured no faster on any band-graph bench line and slower on the
+    # label-store build (sf0.1, 4 cores, min of 3 over 3 alternating runs:
+    # 10.36 s against 9.52-10.22 s lazy)
     bands = stage(minhash_bands(_shingled(spark, sf_dir)), "round")
     return band_pairs(bands).select(
         F.col("doc_id_1").alias("a"), F.col("doc_id_2").alias("b")
@@ -76,16 +80,25 @@ def connected_components(
     node_col_a: str,
     node_col_b: str,
     lineage_cut: str = "local",
+    max_rounds: int = MAX_ITERS,
 ) -> DataFrame:
-    """(node, cluster_id): min node id reachable in the undirected graph.
+    """(node, cluster_id): min node id reachable in the undirected graph,
+    via alternating large-star/small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond").
 
     ``edges`` rows are undirected pairs; isolated nodes (absent from
     edges) are the caller's concern — a left join + coalesce(doc_id)
     afterwards keeps singletons as their own cluster.
 
-    ``lineage_cut`` picks how each round's result is materialized so the
-    plan stays O(1) per iteration (without a cut, iteration N replays
-    rounds 1..N-1 and the plan grows without bound):
+    A chained near-dup cluster (doc A ~ B ~ C ~ ... — common in scraped
+    corpora where each revision resembles the last) has an unbounded
+    diameter; the two-star iteration contracts paths aggressively and
+    converges in O(log² n) rounds regardless of diameter (groupBy-min +
+    equi-join on the edge list per round, everything keyed by node id —
+    no all-pairs, no driver data).
+
+    ``lineage_cut`` picks how each round's edge list is materialized so
+    the plan stays O(1) per round:
 
     - ``"local"`` — ``localCheckpoint``: executor-local blocks, no extra
       I/O. Right for local mode and short interactive runs, but an
@@ -94,73 +107,8 @@ def connected_components(
     - ``"reliable"`` — ``checkpoint``: rounds persist to the cluster's
       fault-tolerant checkpoint dir (``spark.sparkContext.
       setCheckpointDir`` — HDFS/object store on a real cluster), so the
-      loop survives executor loss. The per-round write is labels+edges
+      loop survives executor loss. The per-round write is the edge list
       only, not the upstream corpus. This is the 100 TB setting.
-    """
-    mode = _loop_mode(lineage_cut)
-
-    fwd = edges.select(
-        F.col(node_col_a).alias("src"), F.col(node_col_b).alias("dst")
-    )
-    # materialize the symmetrized edge set once — every iteration joins it,
-    # and without this the upstream edge computation (e.g. the MinHash band
-    # self-join) replays per round
-    both = stage(
-        fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct(),
-        mode,
-    )
-    labels = stage(
-        both.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label")),
-        mode,
-    )
-    for _ in range(MAX_ITERS):
-        neighbor_min = (
-            both.join(labels, both.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = stage(  # truncate lineage: O(1) plan per round
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-                (F.col("nbr_label") < F.col("label")).alias("_changed"),
-            ),
-            mode,
-        )
-        # full count, not limit(1): the scan doubles as the lazy
-        # checkpoint's materializing job over every partition
-        changed = new_labels.where(F.col("_changed")).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-    return labels.select("node", F.col("label").alias("cluster_id"))
-
-
-def connected_components_star(
-    edges: DataFrame,
-    node_col_a: str,
-    node_col_b: str,
-    lineage_cut: str = "local",
-    max_rounds: int = MAX_ITERS,
-) -> DataFrame:
-    """(node, cluster_id) via alternating large-star/small-star (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") — the
-    100 TB-hardened alternative to :func:`connected_components`.
-
-    Label propagation converges in O(graph diameter) rounds; a chained
-    near-dup cluster (doc A ~ B ~ C ~ ... — common in scraped corpora
-    where each revision resembles the last) makes the diameter, and thus
-    the round count, unbounded. The two-star iteration contracts paths
-    aggressively and converges in O(log² n) rounds regardless of
-    diameter, with the same per-round cost shape (groupBy-min + equi-join
-    on the edge list, everything keyed by node id — no all-pairs, no
-    driver data).
 
     Each round:
     - large-star: every node u connects its strictly-larger neighbors to
@@ -240,8 +188,8 @@ def connected_components_star(
         e_sig = new_sig
     # min-resolve before the mapping join: if max_rounds exhausted before
     # the fixpoint, a node can still carry two outgoing edges — the output
-    # must stay one row per node (partially-contracted labels degrade the
-    # same way label propagation's cutoff does, but never duplicate rows)
+    # must stay one row per node (labels degrade to partially-contracted
+    # clusters, but never to duplicate rows)
     labels = e.groupBy("src").agg(F.min("dst").alias("label"))
     return nodes.join(
         labels.select(F.col("src").alias("node"), "label"),
@@ -263,9 +211,11 @@ def edges_sql(pairs: str = "cand") -> str:
 
 def components_sql(pairs: str = "cand") -> str:
     """DuckDB CTEs ``edges``, ``reach`` and ``comp(doc_id, cluster_id)``:
-    the oracle twin of ``connected_components`` over the pair CTE named
-    ``pairs`` — the min label over each node's reachable set, by a
-    UNION-deduplicated recursion (the query needs ``WITH RECURSIVE``)."""
+    the oracle twin of ``connected_components``, the one Spark kernel,
+    over the pair CTE named ``pairs`` — the min label over each node's
+    reachable set, by a UNION-deduplicated recursion (the query needs
+    ``WITH RECURSIVE``), where the Spark side reaches the same labels by
+    star contraction."""
     return f"""{edges_sql(pairs)},
     reach(node, label) AS (
       SELECT a, a FROM edges
@@ -292,7 +242,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical dedup clusters: MinHash band-mate candidate pairs as
     edges → connected components → (doc_id, cluster_id = min doc in
     component). cluster_id is the canonical survivor; `WHERE doc_id !=
-    cluster_id` is the delete list. Iterative label propagation (see
+    cluster_id` is the delete list. The iterative two-star kernel (see
     module docstring) verified against DuckDB's recursive-CTE fixpoint."""
     return connected_components(_band_edges(spark, sf_dir), "a", "b").select(
         F.col("node").alias("doc_id"), "cluster_id"
@@ -301,14 +251,12 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_components_two_star", oracle=_cc_oracle())
 def dedup_components_two_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same dedup clustering as dedup_connected_components, computed by
-    the alternating large-star/small-star iteration instead of label
-    propagation — O(log² n) rounds independent of cluster diameter (the
-    100 TB-hardened path for chained near-dup clusters). Identical
-    fixpoint, so it shares the recursive-CTE oracle verbatim: the driver
-    cross-check proves both algorithms agree with the independent
-    declarative formulation."""
-    return connected_components_star(_band_edges(spark, sf_dir), "a", "b").select(
+    """Same dedup clustering as dedup_connected_components, and now the
+    same kernel: both run ``connected_components`` (large-star/small-star,
+    O(log² n) rounds independent of cluster diameter) over the same band
+    edges and share the recursive-CTE oracle verbatim. Kept registered
+    under its own name for the query contract's history."""
+    return connected_components(_band_edges(spark, sf_dir), "a", "b").select(
         F.col("node").alias("doc_id"), "cluster_id"
     )
 
@@ -322,25 +270,15 @@ def labels_store_path(sf_dir: str) -> str:
     import os
     import tempfile
 
+    from ..tables import _members, _stat_key
+
     doc_path = os.path.join(sf_dir, "documents.parquet")
     # key on the sorted per-member (path, mtime_ns, size) list, not the
     # top-level stat (r11 ADVICE): rewriting members of a DIRECTORY-shaped
     # fixture in place does not change the directory's own mtime/size, so
     # the old key silently served stale labels after a regeneration —
     # the exact class _readable_path's member signature already covers.
-    members = (
-        sorted(
-            os.path.join(doc_path, f)
-            for f in os.listdir(doc_path)
-            if f.endswith(".parquet")
-        )
-        if os.path.isdir(doc_path)
-        else [doc_path]
-    )
-    key = sorted(
-        (os.path.abspath(f), os.stat(f).st_mtime_ns, os.stat(f).st_size)
-        for f in members
-    )
+    key = sorted(_stat_key(f) for f in _members(doc_path))
     sig = hashlib.md5(repr(key).encode()).hexdigest()[:16]
     return os.path.join(tempfile.gettempdir(), f"bdt_cc_labels_{sig}")
 
@@ -373,7 +311,7 @@ def old_labels_path(
         # longer overwrite each other's half-read store; the loser's
         # rename fails on the existing dir and its copy is swept.
         tmp = f"{path}.build.{os.getpid()}"
-        connected_components_star(old_edges, "a", "b").select(
+        connected_components(old_edges, "a", "b").select(
             F.col("node"), F.col("cluster_id").alias("rep")
         ).write.mode("overwrite").parquet(tmp)
         try:
@@ -395,14 +333,14 @@ def dedup_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Algorithm (component contraction):
 
-    1. old labels = two-star CC over edges whose endpoints are BOTH
-       old — in production this is the STORED label table the previous
-       run left behind (its recomputation here exists only so the
-       oracle can replay the whole history);
+    1. old labels = connected components over edges whose endpoints
+       are BOTH old — in production this is the STORED label table the
+       previous run left behind (its recomputation here exists only so
+       the oracle can replay the whole history);
     2. every edge touching a new doc maps its old endpoints to their
        old label (an old component contracts to its min-doc label
        node), keeping new-doc endpoints as themselves;
-    3. two-star CC over the CONTRACTED graph — whose size is
+    3. connected components over the CONTRACTED graph — whose size is
        O(new batch + touched components), not O(corpus) — yields the
        merged label per contracted node; since each old label IS its
        component's min doc id, the contracted minimum equals the global
@@ -443,7 +381,7 @@ def dedup_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # both endpoints already in one old component: nothing to merge
         .where(F.col("ca") != F.col("cb"))
     )
-    merged = connected_components_star(contracted, "ca", "cb").select(
+    merged = connected_components(contracted, "ca", "cb").select(
         F.col("node").alias("rep"), F.col("cluster_id").alias("final")
     )
 
@@ -497,13 +435,13 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard bounds); n_docs summed over rows equals the shingled-universe
     cardinality, so the report doubles as a conservation check.
 
-    Plan: the two-star components' edges (bounded O(log² n) rounds +
+    Plan: the components' edges (bounded O(log² n) rounds +
     lineage cuts) → cluster-id sizes → a size histogram (three
     cluster/size-bounded aggregates); singletons via one anti-join of
     the shingled universe against the clustered nodes."""
     from .dedup import _shingled
 
-    comp = connected_components_star(
+    comp = connected_components(
         _band_edges(spark, sf_dir), "a", "b"
     ).select(F.col("node").alias("doc_id"), "cluster_id")
     sizes = comp.groupBy("cluster_id").agg(
@@ -727,7 +665,7 @@ def sample_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "how far (in dup-graph hops) is every document from a trusted seed
 # set?" — contamination spreads along near-dup edges, so hop distance
 # from known-contaminated (or known-good) seeds is the standard blast-
-# radius metric. New kernel class beside the two fixpoint algorithms
+# radius metric. New kernel class beside the components fixpoint
 # above: BOUNDED multi-source BFS (min-plus iteration to depth K), i.e.
 # shortest paths where every edge has weight 1.
 #

@@ -1,5 +1,7 @@
-"""Connected-components unit tests: chains, cycles, disjoint clusters —
-the label-propagation fixpoint must equal the true components."""
+"""Graph-loop unit tests. Connected components: chains (long ones with
+shuffled ids too), cycles, disjoint clusters and random graphs — the
+large-star/small-star fixpoint must equal the true components. Also the
+BFS and k-core loops and the dedup queries built on the components."""
 
 from __future__ import annotations
 
@@ -9,7 +11,6 @@ from pyspark.sql import functions as F
 from bigdatatiler_spark.operators.graph import (
     bfs_hops,
     connected_components,
-    connected_components_star,
     kcore_peel,
 )
 
@@ -60,11 +61,10 @@ def test_invalid_lineage_cut_rejected(spark):
     "loop",
     [
         lambda e, cut: connected_components(e, "a", "b", lineage_cut=cut),
-        lambda e, cut: connected_components_star(e, "a", "b", lineage_cut=cut),
         lambda e, cut: bfs_hops(e, e.select(F.col("a").alias("node")), lineage_cut=cut),
         lambda e, cut: kcore_peel(e, lineage_cut=cut),
     ],
-    ids=["cc", "cc_star", "bfs", "kcore"],
+    ids=["cc_star", "bfs", "kcore"],
 )
 def test_lineage_cut_takes_only_loop_values(spark, loop, cut):
     """Every loop accepts exactly 'local' and 'reliable': the staging
@@ -74,60 +74,55 @@ def test_lineage_cut_takes_only_loop_values(spark, loop, cut):
         loop(edges, cut)
 
 
-def _star_clusters(spark, edges, **kw):
-    from bigdatatiler_spark.operators.graph import connected_components_star
+def _shuffled_chain(seed, n, first):
+    """A path over ``n`` ids from ``first``, visited in shuffled order so
+    the chain order doesn't coincide with id order (the adversarial
+    layout: diameter n - 1, min id somewhere in the middle)."""
+    import random
 
-    df = spark.createDataFrame(edges, ["a", "b"])
-    rows = connected_components_star(df, "a", "b", **kw).collect()
-    return {r["node"]: r["cluster_id"] for r in rows}
-
-
-def test_two_star_matches_label_prop_on_small_graphs(spark):
-    for edges in (
-        [(1, 2), (2, 3), (3, 4), (4, 5)],
-        [(10, 20), (20, 30), (30, 10), (7, 8), (100, 50)],
-        [(2, 1), (1, 2), (2, 1), (3, 2)],
-    ):
-        assert _star_clusters(spark, edges) == _clusters(spark, edges)
+    ids = list(range(first, first + n))
+    random.Random(seed).shuffle(ids)
+    return ids, list(zip(ids, ids[1:]))
 
 
 def test_two_star_beats_diameter_bound_on_deep_chain(spark):
-    """The scale argument for the two-star variant: a 60-node chain has
-    diameter 59 — label propagation cannot finish inside MAX_ITERS (15)
-    rounds, while large-star/small-star contracts it in O(log² n) rounds
-    and returns the exact components. Node ids are shuffled so the chain
-    order doesn't coincide with id order (the adversarial layout)."""
-    import random
-
-    rng = random.Random(7)
-    ids = list(range(1000, 1060))
-    rng.shuffle(ids)
-    edges = list(zip(ids, ids[1:]))
-    got = _star_clusters(spark, edges, max_rounds=8)
+    """The scale argument for the two-star kernel: a 60-node chain has
+    diameter 59, which one-hop-per-round label propagation cannot cover
+    inside MAX_ITERS (15) rounds, while large-star/small-star contracts
+    it in O(log² n) rounds — here within 8 — and returns the exact
+    components."""
+    ids, edges = _shuffled_chain(7, 60, 1000)
+    got = _clusters(spark, edges, max_rounds=8)
     assert set(got.values()) == {min(ids)}
     assert set(got) == set(ids)
 
 
-def test_two_star_on_minhash_edges_matches_label_prop(spark):
-    """Equivalence on the real candidate-pair graph used by the
-    registered dedup queries (sf0.001 MinHash band mates)."""
-    from pyspark.sql import functions as F
+def test_long_chain_is_one_cluster_at_default_bound(spark):
+    """A 100-node chain with shuffled ids, at the kernel's default round
+    bound, is exactly one cluster: a round cap that cuts the loop off
+    before the fixpoint would split it into several labels silently."""
+    ids, edges = _shuffled_chain(100, 100, 2000)
+    got = _clusters(spark, edges)
+    assert set(got) == set(ids)
+    assert set(got.values()) == {min(ids)}
 
+
+def test_cc_on_minhash_edges_matches_union_find(spark):
+    """The kernel equals the union-find reference on the real
+    candidate-pair graph used by the registered dedup queries (sf0.001
+    MinHash band mates)."""
     from bigdatatiler_spark.operators.dedup import dedup_minhash_lsh
-    from bigdatatiler_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
 
     pairs = dedup_minhash_lsh(spark, "/root/testdata/sf0.001").select(
         F.col("doc_id_1").alias("a"), F.col("doc_id_2").alias("b")
     )
-    lp = {r["node"]: r["cluster_id"] for r in connected_components(pairs, "a", "b").collect()}
-    ts = {
+    edges = [(r["a"], r["b"]) for r in pairs.collect()]
+    assert edges, "fixture has no near-dup candidates"
+    got = {
         r["node"]: r["cluster_id"]
-        for r in connected_components_star(pairs, "a", "b").collect()
+        for r in connected_components(pairs, "a", "b").collect()
     }
-    assert lp == ts
+    assert got == _true_components(edges)
 
 
 def _true_components(edges):
@@ -149,7 +144,7 @@ def _true_components(edges):
 
 
 def test_cc_property_random_graphs(spark):
-    """Both distributed algorithms must equal a driver-side union-find on
+    """The distributed kernel must equal a driver-side union-find on
     randomized graphs (chains, cliques-ish, forests, self-loops,
     duplicates) — one batch per layout to keep Spark job count sane."""
     import random
@@ -160,11 +155,7 @@ def test_cc_property_random_graphs(spark):
         m = rng.randrange(5, 60)
         nodes = rng.sample(range(10_000), n)
         edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(m)]
-        want = _true_components(edges)
-        lp = _clusters(spark, edges)
-        ts = _star_clusters(spark, edges)
-        assert lp == want, f"label-prop trial {trial}"
-        assert ts == want, f"two-star trial {trial}"
+        assert _clusters(spark, edges) == _true_components(edges), f"trial {trial}"
 
 
 def test_keep_canonical_one_survivor_per_cluster(spark):
@@ -213,20 +204,14 @@ def test_two_star_round_exhaustion_stays_well_formed(spark):
     conflicting cluster_ids (review finding: pre-fix, an unconverged
     edge set could leave a node with two outgoing edges and the final
     mapping join emitted it twice)."""
-    import random
-
-    rng = random.Random(99)
-    ids = list(range(500, 560))
-    rng.shuffle(ids)
-    edges = list(zip(ids, ids[1:]))
+    ids, edges = _shuffled_chain(99, 60, 500)
     df = spark.createDataFrame(edges, ["a", "b"])
-    from bigdatatiler_spark.operators.graph import connected_components_star
 
-    rows = connected_components_star(df, "a", "b", max_rounds=1).collect()
+    rows = connected_components(df, "a", "b", max_rounds=1).collect()
     nodes = [r["node"] for r in rows]
     assert len(nodes) == len(set(nodes)) == len(ids), "duplicate node rows"
     # and with enough rounds the same graph fully converges
-    full = connected_components_star(df, "a", "b", max_rounds=8).collect()
+    full = connected_components(df, "a", "b", max_rounds=8).collect()
     assert {r["cluster_id"] for r in full} == {min(ids)}
 
 
@@ -237,7 +222,6 @@ def test_leakage_safe_split_keeps_neardup_pairs_together(spark):
     anything. Also pins the doc count identity vs the corpus."""
     from bigdatatiler_spark.operators.graph import (
         _band_edges,
-        connected_components,
         sample_leakage_safe_split,
     )
     from bigdatatiler_spark.operators.sampling import split_column
@@ -344,3 +328,19 @@ def test_incremental_components_equal_full_recompute(spark):
     }
     assert inc == full
     assert len(inc) > 0
+
+
+def test_labels_store_path_keys_on_directory_members(tmp_path):
+    """A directory-shaped documents fixture keys the label store on its
+    parquet members' (path, mtime_ns, size): rewriting a member moves
+    the store path, a non-parquet file beside them does not."""
+    from bigdatatiler_spark.operators.graph import labels_store_path
+
+    docs = tmp_path / "documents.parquet"
+    docs.mkdir()
+    (docs / "part-0.parquet").write_bytes(b"x")
+    before = labels_store_path(str(tmp_path))
+    (docs / "_SUCCESS").write_bytes(b"")
+    assert labels_store_path(str(tmp_path)) == before
+    (docs / "part-0.parquet").write_bytes(b"xy")
+    assert labels_store_path(str(tmp_path)) != before
